@@ -19,21 +19,21 @@ Scale design:
 from __future__ import annotations
 
 import logging
-from functools import lru_cache
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import app_cache
 from .materialize import materialize as _materialize
 from .text import ngrams_from_words
 
 _LOG = logging.getLogger(__name__)
 
 
-@lru_cache(maxsize=None)
+@app_cache()
 def _ngrams_ws_expr(n: int):
     """``ngrams_from_words`` over the fixed ``_ws`` projection name,
-    built once per process. Column objects are immutable unresolved
+    built once per SparkContext. Column objects are immutable unresolved
     expression trees keyed by column NAME, so the same tree resolves
     against every ``_shingled`` projection — and building the n=8 tree
     costs ~56 ms of py4j round trips (measured r17), paid per BUILD by

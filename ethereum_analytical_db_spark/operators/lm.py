@@ -25,18 +25,18 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import app_cache
 from .text import words
 
 
-@lru_cache(maxsize=64)
+@app_cache(maxsize=64)
 def _nulled_tokens_expr(text_col: str) -> Column:
     """The unigram scorer's token stream (words with empties NULLed, in
-    the array) over a NAMED column, built once per (process, name):
+    the array) over a NAMED column, built once per (SparkContext, name):
     Columns are immutable unresolved trees, and the HOF construction is
     tens of ms of py4j round trips per build (r17, guide §7.3)."""
     return F.explode_outer(
@@ -44,7 +44,7 @@ def _nulled_tokens_expr(text_col: str) -> Column:
     )
 
 
-@lru_cache(maxsize=1)
+@app_cache(maxsize=1)
 def _pair_structs_expr() -> Column:
     """The bigram scorer's (word, prev) struct stream over the scorer's
     fixed ``ws`` array projection — same memo rationale as

@@ -18,19 +18,23 @@ for every element (O(words²) work; measured 20-40× slowdown at sf0.1).
 from __future__ import annotations
 
 import re
-from functools import lru_cache
+from collections.abc import Mapping
+from types import MappingProxyType
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# deterministic marker vocabularies for the language-ID heuristic
-LANG_MARKERS: dict[str, list[str]] = {
-    "en": ["the", "a", "value", "row"],
-    "de": ["der", "und", "nicht", "table"],
-    "fr": ["le", "et", "pas", "join"],
-    "es": ["el", "que", "los", "query"],
-    "zh": ["de5", "shi4", "bu4", "merge"],
-}
+from ..session import app_cache
+
+# deterministic marker vocabularies for the language-ID heuristic; a
+# read-only constant, since the memoised lang-ID tree is built from it
+LANG_MARKERS: Mapping[str, tuple[str, ...]] = MappingProxyType({
+    "en": ("the", "a", "value", "row"),
+    "de": ("der", "und", "nicht", "table"),
+    "fr": ("le", "et", "pas", "join"),
+    "es": ("el", "que", "los", "query"),
+    "zh": ("de5", "shi4", "bu4", "merge"),
+})
 
 
 def words(text: Column | str) -> Column:
@@ -82,10 +86,10 @@ def lang_scores_from_words(ws: Column) -> dict[str, Column]:
     """Marker-word hit count per language over a pre-split words array
     (n-gram heuristic simplified to unigram markers — the structure
     generalizes to char n-grams)."""
-    def marker_count(markers: list[str]) -> Column:
+    def marker_count(markers: tuple[str, ...]) -> Column:
         # NB: the lambda must be unary — F.filter inspects arity and
         # would pass the element index into a second parameter
-        return F.size(F.filter(ws, lambda w: w.isin(markers))).cast("long")
+        return F.size(F.filter(ws, lambda w: w.isin(*markers))).cast("long")
 
     return {lang: marker_count(ms) for lang, ms in LANG_MARKERS.items()}
 
@@ -94,7 +98,7 @@ def lang_scores(text: Column | str) -> dict[str, Column]:
     return lang_scores_from_words(words(text))
 
 
-def _marker_regex(markers: list[str]) -> str:
+def _marker_regex(markers: tuple[str, ...]) -> str:
     """Regex counting space-delimited tokens equal to any marker —
     identical counts to filtering ``split(text, ' ')`` by membership
     (the trailing delimiter is a lookahead, so consecutive marker
@@ -151,10 +155,10 @@ def predicted_lang_from_text(text: Column | str) -> Column:
     return _argmax_lang(lang_scores_from_text(text))
 
 
-@lru_cache(maxsize=64)
+@app_cache(maxsize=64)
 def _predicted_lang_named(col_name: str) -> Column:
     """The lang-ID argmax tree over a NAMED column, built once per
-    (process, name): the 5-language regexp_count + struct-argmax tree
+    (SparkContext, name): the 5-language regexp_count + struct-argmax tree
     costs ~51 ms of py4j construction (measured r17) and is a pure
     function of the column name — Columns are immutable unresolved
     trees, so one instance resolves against every plan. Guide §7.3."""

@@ -418,7 +418,7 @@ def simhash_near_dups_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lang_score_sql(markers: list[str]) -> str:
+def _lang_score_sql(markers: tuple[str, ...]) -> str:
     ms = ", ".join(f"'{w}'" for w in markers)
     return f"len(list_filter(string_split(text, ' '), w -> w IN ({ms})))"
 

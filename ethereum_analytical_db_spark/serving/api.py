@@ -8,84 +8,61 @@ fee + fee_reward, floored at 0
 (examples/balances_api/actions/balances.py:68-83,
 token_balances.py:26-35).
 
-Here the combine is a chain of full-outer joins + coalesce arithmetic
-executed by Spark SQL over the warehouse's registered views (the
-analytics read path, SURVEY §3.3) — the engine does the distributed
-work; Flask only shapes JSON. Balance semantics follow
+Here the combine is a single-pass signed ledger executed by Spark SQL
+over the warehouse's registered views (the analytics read path,
+SURVEY §3.3): one scan of each fact table emits every row's
+``(address, signed amount)`` entries with ``inline``, and one
+``GROUP BY address`` sums them, so a FINAL view's dedup window runs
+once per read and a token filter reaches the Parquet scan. Flask only
+shapes JSON. Balance semantics follow
 examples/sql_balances/balances.sql:1-63: fees count only top-level
 calls (id LIKE '%.0'), rewards only type='reward', and a miner earns
-each block's total fees (fee_reward).
+each block's total fees (fee_reward) once per ``rewardType = 'block'``
+row.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+# Per row: `to` gets the value of a successful non-reward call; `from`
+# pays the value of a successful call and the fee of a top-level call;
+# `author` gets the reward plus, on block rewards, the block's fees.
 BALANCES_SQL = """
-WITH universe AS (
-  SELECT DISTINCT address FROM (
-    SELECT `to` AS address FROM internal_transaction
-    UNION ALL SELECT `from` AS address FROM internal_transaction
-    UNION ALL SELECT author AS address FROM internal_transaction
-  ) WHERE address IS NOT NULL
-),
-income AS (
-  SELECT `to` AS address, SUM(value) AS v FROM internal_transaction
-  WHERE type != 'reward' AND error IS NULL
-    AND (parent_error IS NULL OR CAST(parent_error AS INT) = 0)
-  GROUP BY `to`
-),
-outcome AS (
-  SELECT `from` AS address, SUM(value) AS v FROM internal_transaction
-  WHERE error IS NULL
-    AND (parent_error IS NULL OR CAST(parent_error AS INT) = 0)
-  GROUP BY `from`
-),
-reward AS (
-  SELECT author AS address, SUM(value) AS v FROM internal_transaction
-  WHERE type = 'reward' GROUP BY author
-),
-fee AS (
-  SELECT `from` AS address, SUM(gasUsed * gasPrice) AS v
-  FROM internal_transaction WHERE id LIKE '%.0' GROUP BY `from`
-),
-block_fee AS (
-  SELECT blockNumber, SUM(gasUsed * gasPrice) AS v
-  FROM internal_transaction WHERE id LIKE '%.0' GROUP BY blockNumber
-),
-fee_reward AS (
-  SELECT m.author AS address, SUM(bf.v) AS v
-  FROM (SELECT author, blockNumber FROM internal_transaction
-        WHERE type = 'reward' AND rewardType = 'block') m
-  JOIN block_fee bf USING (blockNumber)
-  GROUP BY m.author
+SELECT address, GREATEST(COALESCE(SUM(v), 0), 0) AS balance
+FROM (
+  SELECT inline(array(
+    named_struct('address', `to`, 'v', IF(type != 'reward' AND ok, value, NULL)),
+    named_struct('address', `from`, 'v',
+      -(IF(ok, COALESCE(value, 0), 0) + IF(id LIKE '%.0', COALESCE(gasUsed * gasPrice, 0), 0))),
+    named_struct('address', author, 'v',
+      IF(type = 'reward',
+         COALESCE(value, 0) + IF(rewardType = 'block', COALESCE(block_fee, 0), 0), NULL))
+  ))
+  FROM (
+    SELECT *,
+           error IS NULL AND (parent_error IS NULL OR CAST(parent_error AS INT) = 0) AS ok,
+           SUM(IF(id LIKE '%.0', gasUsed * gasPrice, NULL))
+             OVER (PARTITION BY blockNumber) AS block_fee
+    FROM internal_transaction
+  )
 )
-SELECT u.address,
-       GREATEST(
-         COALESCE(i.v, 0) - COALESCE(o.v, 0) + COALESCE(r.v, 0)
-         - COALESCE(f.v, 0) + COALESCE(fr.v, 0),
-         0
-       ) AS balance
-FROM universe u
-LEFT JOIN income i ON u.address = i.address
-LEFT JOIN outcome o ON u.address = o.address
-LEFT JOIN reward r ON u.address = r.address
-LEFT JOIN fee f ON u.address = f.address
-LEFT JOIN fee_reward fr ON u.address = fr.address
+WHERE address IS NOT NULL
+GROUP BY address
 """
 
+# Per-side sums meet on (token, address) with SQL NULL semantics: a
+# NULL token or address matches nothing, so it keeps one row per side.
 TOKEN_BALANCES_SQL = """
-SELECT COALESCE(o.token, i.token) AS token,
-       COALESCE(o.address, i.address) AS address,
-       COALESCE(i.v, 0) - COALESCE(o.v, 0) AS balance
+SELECT token, address, COALESCE(SUM(v), 0) AS balance
 FROM (
-  SELECT token, `from` AS address, SUM(value) AS v
-  FROM token_transaction GROUP BY token, `from`
-) o
-FULL OUTER JOIN (
-  SELECT token, `to` AS address, SUM(value) AS v
-  FROM token_transaction GROUP BY token, `to`
-) i ON o.token = i.token AND o.address = i.address
+  SELECT token, inline(array(
+    named_struct('side', 'from', 'address', `from`, 'v', -value),
+    named_struct('side', 'to', 'address', `to`, 'v', value)
+  ))
+  FROM token_transaction
+)
+GROUP BY token, address, CASE WHEN token IS NULL OR address IS NULL THEN side END
 """
 
 
@@ -119,10 +96,12 @@ def create_app(spark: SparkSession):
         # accept both body shapes: {"addresses": [...]} and a bare JSON
         # list (the reference clients post the latter) — .get on a list
         # was a 500
-        if isinstance(payload, list):
-            addrs = payload
-        else:
-            addrs = (payload or {}).get("addresses")
+        addrs = payload.get("addresses") if isinstance(payload, dict) else payload
+        # a bare string would iterate into single characters
+        if addrs is not None and not (
+            isinstance(addrs, list) and all(isinstance(a, str) for a in addrs)
+        ):
+            return jsonify({"error": "addresses must be a list of strings"}), 400
         rows = compute_balances(spark, addrs).collect()
         return jsonify({r["address"]: r["balance"] for r in rows})
 

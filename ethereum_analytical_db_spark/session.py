@@ -11,7 +11,9 @@ against any oracle.
 from __future__ import annotations
 
 import os
+from functools import lru_cache, wraps
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "spark-chain-analytics"
@@ -80,3 +82,25 @@ def tune_session(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # some conf keys may be fixed; best-effort
     return spark
+
+
+def app_cache(maxsize: int = 64):
+    """``lru_cache`` whose key also carries the active SparkContext's
+    ``applicationId``, for memoised Column trees. A Column holds a py4j
+    handle into the JVM that built it: served to a later SparkContext on
+    a fresh gateway it fails with an NPE far from the cause. A new
+    context has a new id, so it builds its own trees."""
+
+    def wrap(fn):
+        @lru_cache(maxsize)
+        def cached(app_id, *args):
+            return fn(*args)
+
+        @wraps(fn)
+        def memo(*args):
+            sc = SparkContext._active_spark_context
+            return cached(sc.applicationId if sc is not None else None, *args)
+
+        return memo
+
+    return wrap

@@ -1,0 +1,74 @@
+"""Memoised Column trees across a SparkContext restart.
+
+``session.app_cache`` keys each memo on the active SparkContext's
+``applicationId``. A Column holds a py4j handle into the JVM that built
+it, so a tree memoised for one context and served to a context on a
+fresh gateway fails with an NPE inside ``select``. The restart runs in a
+child process: it stops its session and shuts the gateway down, which
+the shared test session must not do.
+"""
+
+import os
+import subprocess
+import sys
+import textwrap
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+DRIVER = textwrap.dedent(
+    """
+    from pyspark import SparkContext
+    from pyspark.sql import functions as F
+    from ethereum_analytical_db_spark.session import get_spark
+    from ethereum_analytical_db_spark.operators import dedup, lm, text
+
+    seen = []
+    for _ in range(2):
+        spark = get_spark(app_name="app-cache-restart", cpus=1, shuffle_partitions=1)
+        docs = spark.createDataFrame(
+            [(1, "the value of der und")], "doc_id long, text string"
+        )
+        trees = [
+            dedup._ngrams_ws_expr(2),
+            text._predicted_lang_named("text"),
+            lm._nulled_tokens_expr("text"),
+            lm._pair_structs_expr(),
+        ]
+        # memoised within one context
+        assert dedup._ngrams_ws_expr(2) is trees[0]
+        assert text._predicted_lang_named("text") is trees[1]
+        assert lm._nulled_tokens_expr("text") is trees[2]
+        assert lm._pair_structs_expr() is trees[3]
+        assert not any(t is s for t in trees for s in seen)
+        seen += trees
+        shingles = dedup._shingled(docs, "text", "doc_id", 2).collect()
+        assert sorted(shingles[0]["ngrams"]) == [
+            "der und", "of der", "the value", "value of"
+        ]
+        assert docs.select(text.predicted_lang("text")).first()[0] == "en"
+        assert docs.select(trees[2]).count() == 5
+        pairs = docs.select(F.split("text", " ").alias("ws")).select(trees[3]).collect()
+        assert [p[0]["prev"] for p in pairs][:2] == [None, "the"]
+        spark.stop()
+        # a fresh gateway and JVM for the next session
+        SparkContext._gateway.shutdown()
+        SparkContext._gateway = None
+        SparkContext._jvm = None
+    print("OK")
+    """
+)
+
+
+def test_memoised_trees_survive_session_restart():
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g", PYTHONPATH=REPO)
+    proc = subprocess.run(
+        [sys.executable, "-c", DRIVER],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0 and proc.stdout.strip().endswith("OK"), (
+        proc.stdout[-2000:] + proc.stderr[-4000:]
+    )

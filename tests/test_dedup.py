@@ -1226,10 +1226,11 @@ def test_self_join_branches_reuse_one_exchange(spark):
 
 
 def test_memoized_ngram_expr_matches_fresh_tree(spark):
-    """r17: _shingled builds its n-gram HOF tree once per (process, n)
-    (lru_cache) — the memoized tree must produce the same shingles as a
-    freshly constructed ngrams_from_words on every frame it resolves
-    against, including the short-doc empty-array guard."""
+    """r17: _shingled builds its n-gram HOF tree once per
+    (SparkContext, n) (app_cache) — the memoized tree must produce the
+    same shingles as a freshly constructed ngrams_from_words on every
+    frame it resolves against, including the short-doc empty-array
+    guard."""
     from pyspark.sql import functions as F
 
     from ethereum_analytical_db_spark.operators.dedup import (
