@@ -171,40 +171,18 @@ class Warehouse:
         seq = self._read_sidecar(table, "_SEQ")
         return seq is not None and seq == compacted_at
 
-    def _recover_precompact(self, table: str) -> None:
-        """Crash recovery for compact()'s two-rename swap: if a crash hit
-        the instant between the renames, the only full copy of the table
-        lives at ``<table>.precompact`` while the canonical path is gone.
-        Roll it back before anyone observes the table as missing —
-        otherwise exists() returns False, the next write() recreates an
-        empty table, and a later compact() would rmtree the .precompact
-        survivor, destroying the data permanently."""
-        p = self._path(table)
-        old = p + ".precompact"
-        if not fsutil.is_dir(self.spark, p) and fsutil.is_dir(self.spark, old):
-            if not fsutil.rename(self.spark, old, p):
-                raise IOError(
-                    f"precompact recovery rename {old} -> {p} failed"
-                )
-
     def exists(self, table: str) -> bool:
-        self._recover_precompact(table)
+        fsutil.recover_swap(self.spark, self._path(table))
         return fsutil.has_file_with_suffix(
             self.spark, self._path(table), ".parquet"
         )
 
     def drop(self, table: str) -> None:
         """Remove a table directory entirely (the reference's DROP TABLE,
-        tests/test_utils.py prepare_indices drop/recreate cycle).
-        Also removes compaction leftovers so a dropped table can't be
-        resurrected by _recover_precompact. Leftovers go FIRST: if the
-        canonical dir were removed first and the process crashed before
-        the '.precompact' rmtree, _recover_precompact would see
-        (no canonical, .precompact alive) and revive the dropped table
-        on the next exists()/read()."""
-        fsutil.delete(self.spark, self._path(table) + ".precompact")
-        fsutil.delete(self.spark, self._path(table) + ".compact")
-        fsutil.delete(self.spark, self._path(table))
+        tests/test_utils.py prepare_indices drop/recreate cycle),
+        compaction leftovers first so a crash mid-drop cannot resurrect
+        the table (:func:`fsutil.delete_swapped`)."""
+        fsutil.delete_swapped(self.spark, self._path(table))
 
     def create(self, table: str, schema: StructType | None = None) -> None:
         """Create an empty table (the reference's prepare_indices,
@@ -315,7 +293,7 @@ class Warehouse:
         keeps raw-scan semantics across later writes — it would then
         show duplicate rows, not just miss new ones. Re-create FINAL
         handles after any write(), same as the file-listing caveat."""
-        self._recover_precompact(table)
+        fsutil.recover_swap(self.spark, self._path(table))
         reader = self.spark.read
         expected = self._read_schema(table)
         if expected is not None:
@@ -418,25 +396,19 @@ class Warehouse:
         bucketing shuffle once, and every subsequent fact-to-fact join
         or groupBy on the bucket key reads it exchange-free. Returns
         the bucketed catalog name (``None`` for the flat layout).
+
+        The rewrite lands in a scratch directory and is published with
+        :func:`fsutil.swap_dir`, so the table exists in full at all
+        times, a failed publish restores the old copy at once, and a
+        crash mid-swap is rolled back by the next ``exists()``/``read()``.
         """
         if layout not in ("flat", "bucketed"):
             raise ValueError(
                 f"compact layout {layout!r}: expected 'flat' or 'bucketed'"
             )
-        # roll back a crashed previous compaction BEFORE reading: if the
-        # canonical path is missing, .precompact is the only live copy
-        # and must become canonical again, never be cleaned up
-        self._recover_precompact(table)
         deduped = self.read(table, final=True)
         final_path = self._path(table)
-        tmp = final_path + ".compact"
-        old = final_path + ".precompact"
-        fsutil.delete(self.spark, tmp)
-        if fsutil.is_dir(self.spark, final_path):
-            # only now is a leftover .precompact provably stale (the
-            # canonical copy exists); with the canonical path absent the
-            # delete would destroy the sole surviving copy of the data
-            fsutil.delete(self.spark, old)
+        tmp = fsutil.swap_tmp(self.spark, final_path)
         partition_by = ["_block_range"] if "_block_range" in deduped.columns else []
         w = deduped.write.mode("overwrite")
         if partition_by:
@@ -455,26 +427,16 @@ class Warehouse:
             self.spark.createDataFrame([], deduped.schema).write.mode(
                 "overwrite"
             ).parquet(tmp)
-        # two metadata renames instead of a delete-then-rewrite of the
-        # live directory: a crash mid-compaction previously lost the
-        # table at its canonical path for the whole duration of the
-        # second write; now the exposure is the instant between the two
-        # renames, and the data always exists in full at one of the
-        # three paths. A crash before the sidecar write just makes the
-        # next write() reseed _seq via the documented full-scan
-        # fallback.
-        if not fsutil.rename(self.spark, final_path, old):
-            raise IOError(f"compact swap rename {final_path} -> {old} failed")
-        if not fsutil.rename(self.spark, tmp, final_path):
-            raise IOError(f"compact swap rename {tmp} -> {final_path} failed")
+        # a crash before the sidecar writes just makes the next write()
+        # reseed _seq via the documented full-scan fallback
+        fsutil.swap_dir(self.spark, tmp, final_path)
         self._write_seq_sidecar(table, int(max_seq))
-        # _COMPACTED_AT last: the renames wiped the old sidecars with the
+        # _COMPACTED_AT last: the swap replaced the old sidecars with the
         # old directory, so a crash anywhere before this line leaves no
         # _COMPACTED_AT at all and read(final=True) degrades to the
         # window — the safe direction. Only the complete pair
         # (_SEQ == _COMPACTED_AT) unlocks the dedup-free fast path.
         self._write_seq_sidecar(table, int(max_seq), name="_COMPACTED_AT")
-        fsutil.delete(self.spark, old)
         if layout == "bucketed":
             # final=False: the rewrite above just materialized FINAL, so
             # the raw scan IS the deduped table — no second window pass

@@ -10,11 +10,26 @@ JVM-side Hadoop FileSystem resolved from the path itself, so
 ``file:/``, ``hdfs:/`` and ``s3a:/`` index paths all behave
 identically. Driver-side only (sidecars are bounded metadata, never
 data).
+
+It also holds the package's one directory swap (:func:`swap_dir`,
+:func:`recover_swap`): every rewrite that replaces a directory in
+place — warehouse compaction, index compaction and folds — publishes
+through it, so the scratch and backup names below are spelled nowhere
+else.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger(__name__)
+
+# sibling names of a swapped directory: the replacement is written to
+# <dst>.compact, the replaced copy is parked at <dst>.precompact
+_TMP = ".compact"
+_BACKUP = ".precompact"
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -74,14 +89,86 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
     return fs.rename(jsrc, _fs_and_path(spark, dst)[1])
 
 
+def swap_tmp(spark: SparkSession, dst: str) -> str:
+    """The scratch directory to write ``dst``'s replacement into before
+    :func:`swap_dir` publishes it, emptied of a crashed earlier
+    attempt's leftover."""
+    tmp = dst + _TMP
+    delete(spark, tmp)
+    return tmp
+
+
+def swap_dir(spark: SparkSession, tmp: str, dst: str) -> None:
+    """Publish the directory ``tmp`` at ``dst`` — the hand-built
+    analogue of ReplacingMergeTree swapping merged parts in atomically.
+
+    An existing ``dst`` is first parked at its backup path, then ``tmp``
+    is renamed to ``dst``, and the backup is deleted last, so the data
+    exists in full at one of the paths at every instant. A crash after
+    parking leaves only the backup, which :func:`recover_swap` renames
+    back; a crash after publishing leaves a stale backup beside the new
+    ``dst``, which the next swap deletes. Hadoop ``rename`` reports most
+    failures by returning false rather than raising, so both renames are
+    checked: a failed park raises with nothing moved, and a failed
+    publish restores the backup before raising, so ``dst`` is never left
+    absent. Object stores make ``rename`` a copy, the standard caveat."""
+    backup = dst + _BACKUP
+    parked = exists(spark, dst)
+    if parked:
+        delete(spark, backup)  # dst is present, so any backup is stale
+        if not rename(spark, dst, backup):
+            raise IOError(
+                f"swap: rename {dst} -> {backup} failed (Hadoop rename "
+                f"returned false); {dst} left untouched"
+            )
+    if not rename(spark, tmp, dst):
+        if not parked:
+            raise IOError(f"swap: rename {tmp} -> {dst} failed")
+        restored = rename(spark, backup, dst)
+        raise IOError(
+            f"swap: rename {tmp} -> {dst} failed; original "
+            + ("restored" if restored else f"left at {backup}")
+        )
+    delete(spark, backup)
+
+
+def recover_swap(spark: SparkSession, dst: str) -> bool:
+    """Finish a :func:`swap_dir` that crashed between parking and
+    publishing: with ``dst`` absent, its backup IS the directory and is
+    renamed back, logged as one WARNING. A backup beside a present
+    ``dst`` is stale and is left for the next swap to delete. Every
+    reader of a swapped directory runs this first — otherwise a write
+    recreates ``dst`` empty and the next swap deletes the only full copy
+    as stale. The backup is probed first, so the steady state costs one
+    ``exists`` call. Returns True iff it restored."""
+    backup = dst + _BACKUP
+    if not exists(spark, backup) or exists(spark, dst):
+        return False
+    if not rename(spark, backup, dst):
+        raise IOError(
+            f"swap recovery: rename {backup} -> {dst} failed (Hadoop "
+            "rename returned false); data left at the backup path"
+        )
+    _LOG.warning(
+        "recovered %s from its swap backup %s: a rewrite crashed between "
+        "parking the old copy and publishing the new one", dst, backup,
+    )
+    return True
+
+
+def delete_swapped(spark: SparkSession, dst: str) -> None:
+    """Recursive delete of ``dst`` with its swap leftovers. The
+    leftovers go first: deleting ``dst`` first and crashing before the
+    backup delete would leave exactly the state :func:`recover_swap`
+    restores, reviving the deleted directory."""
+    delete(spark, dst + _BACKUP)
+    delete(spark, dst + _TMP)
+    delete(spark, dst)
+
+
 def mkdirs(spark: SparkSession, path: str) -> None:
     fs, jpath = _fs_and_path(spark, path)
     fs.mkdirs(jpath)
-
-
-def is_dir(spark: SparkSession, path: str) -> bool:
-    fs, jpath = _fs_and_path(spark, path)
-    return fs.exists(jpath) and fs.getFileStatus(jpath).isDirectory()
 
 
 def list_names(spark: SparkSession, path: str) -> list[str]:

@@ -504,31 +504,6 @@ def minhash_lsh_candidates_md5(
 _BAND_INDEX_META = "_band_index_meta.json"
 
 
-def _recover_precompact(spark, path: str) -> bool:
-    """Finish a :func:`compact_index` that crashed between its two
-    renames: canonical path absent, the only full copy parked at
-    ``<path>.precompact``. Every index entry point (ensure/check meta)
-    runs this FIRST — without it, a stream restart's sidecar write
-    recreates the canonical dir with only the sidecar, the probe
-    bootstraps as an empty corpus (silently missing all cross-corpus
-    dups), and the next compact sees canonical-present and deletes the
-    backup as 'provably stale', destroying the only full copy (review
-    find). When canonical exists the backup is left alone —
-    ``compact_index`` itself adjudicates staleness. Returns True iff a
-    recovery rename happened."""
-    from .. import fsutil
-
-    old = path + ".precompact"
-    if fsutil.exists(spark, old) and not fsutil.exists(spark, path):
-        if not fsutil.rename(spark, old, path):
-            raise IOError(
-                f"recovery rename {old} -> {path} failed (Hadoop rename "
-                "returned false); index left at the backup path"
-            )
-        return True
-    return False
-
-
 def _write_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int) -> None:
     """Parameter sidecar (leading-underscore name — Parquet readers skip
     it). Written through the Hadoop FS API (`fsutil`) so HDFS/S3 index
@@ -554,7 +529,7 @@ def _check_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int
 
     from .. import fsutil
 
-    _recover_precompact(spark, path)
+    fsutil.recover_swap(spark, path)
     try:
         meta = _json.loads(fsutil.read_text(spark, f"{path}/{_BAND_INDEX_META}"))
     except FileNotFoundError:
@@ -586,7 +561,7 @@ def _ensure_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: in
     joins incompatible bucket spaces silently (review find)."""
     from .. import fsutil
 
-    _recover_precompact(spark, path)
+    fsutil.recover_swap(spark, path)
     if fsutil.exists(spark, f"{path}/{_BAND_INDEX_META}"):
         _check_band_index_meta(spark, path, n, num_hashes, bands)
     else:
@@ -653,14 +628,12 @@ def compact_index(spark, path: str, partition_cols: list[str]) -> None:
     dirs survive, as the earlier-only probe requires; IVF/LSH via their
     partition column).
 
-    Crash-safe the same way ``Warehouse.compact`` is: write to
-    ``<path>.compact``, copy every ``_*.json`` sidecar, then two
-    metadata renames — the data always exists in full at one of the
-    paths, and a leftover ``.precompact`` from a crash is recovered
-    (canonical missing → the backup IS the index) or cleaned (canonical
-    present → provably stale) on the next compact. All FS ops go
-    through the Hadoop API (fsutil), so HDFS/S3 index paths work;
-    note object stores make `rename` a copy, the standard caveat."""
+    Crash-safe the same way ``Warehouse.compact`` is: the rewrite and
+    every ``_*.json`` sidecar land in a scratch directory published by
+    :func:`fsutil.swap_dir`, and every index entry point (ensure/check
+    meta) runs :func:`fsutil.recover_swap` first, so a crash mid-swap
+    never loses the index. All FS ops go through the Hadoop API
+    (fsutil), so HDFS/S3 index paths work."""
     _rewrite_index(spark, path, partition_cols)
 
 
@@ -809,160 +782,6 @@ def fold_pairs_gens(spark, path: str, current_batch: int) -> list[int]:
     return sorted(live)
 
 
-def migrate_pairs_layout(spark, path: str) -> list[int]:
-    """One-time upgrade of a pre-r12 pairs log (``batch=<k>`` partition
-    dirs, batch encoded ONLY in the dir name) to the generational
-    layout (``gen=b<k>`` dirs with ``batch`` as a data column). Without
-    this, a mixed root fails Spark partition discovery outright
-    ('Conflicting partition column names': batch vs gen) and the
-    replay-hygiene sweep (:func:`drop_stale_pair_gens`) would never
-    match the old names.
-
-    Called from the stream's per-batch preamble (a no-op listing in
-    steady state). Each legacy dir is rewritten with its ``batch``
-    value materialized as a column into a dot-prefixed tmp (invisible
-    to discovery), renamed to ``gen=b<k>``, then the legacy dir is
-    deleted — the same crash protocol as :func:`fold_pairs_gens`. A
-    crash between rename and source-delete leaves both dirs; this runs
-    BEFORE any new-era write, so a coexisting ``gen=b<k>`` proves the
-    migration of ``batch=<k>`` already completed and the legacy dir is
-    simply deleted on resume. Returns the migrated batch ids."""
-    from .. import fsutil
-
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    legacy: list[int] = []
-    names = {st.getPath().getName() for st in fs.listStatus(jpath)}
-    for name in names:
-        if name.startswith("batch="):
-            try:
-                legacy.append(int(name[len("batch="):]))
-            except ValueError:
-                continue
-    if not legacy:
-        return []
-    _LOG.warning(
-        "migrate_pairs_layout(%s): upgrading legacy batch= dirs %s to "
-        "the generational gen=b<k> layout",
-        path, sorted(legacy),
-    )
-    for k in sorted(legacy):
-        src = f"{path}/batch={k}"
-        dst = f"{path}/gen=b{k}"
-        if f"gen=b{k}" in names:
-            # rename completed in a previous (crashed) migration; only
-            # the source-delete is outstanding
-            fsutil.delete(spark, src)
-            continue
-        tmp = f"{path}/.compact.gen=b{k}"
-        fsutil.delete(spark, tmp)
-        from pyspark.sql import functions as F  # local: keep module top light
-
-        # batch must be written with the SAME physical type the stream's
-        # new-era gens use (F.lit(batch_id) -> INT32): a root mixing
-        # INT32 and INT64 footers for one column fails reads with
-        # PARQUET_COLUMN_DATA_TYPE_MISMATCH whenever the int-typed
-        # footer wins schema inference — recreating the mixed-root
-        # failure this migration exists to prevent (r12 advisor find,
-        # pinned by test_migrated_and_native_gens_fold_and_read).
-        spark.read.parquet(src).withColumn(
-            "batch", F.lit(k).cast("int")
-        ).coalesce(1).write.parquet(tmp)
-        if not fsutil.rename(spark, tmp, dst):
-            raise IOError(
-                f"pairs migration: rename {tmp} -> {dst} failed; legacy "
-                "dir left untouched"
-            )
-        fsutil.delete(spark, src)
-    return sorted(legacy)
-
-
-def _recover_pair_repairs(spark, path: str) -> None:
-    """Finish :func:`repair_pairs_batch_types` swaps that crashed
-    mid-rename: a ``.prerepair.gen=<x>`` backup without its canonical
-    dir IS that generation — rename it back; with the canonical present
-    it is provably stale — delete it. Leftover ``.repair.gen=<x>`` tmp
-    dirs are always incomplete writes and are removed. Same protocol as
-    :func:`_recover_pair_dir_swaps`."""
-    from .. import fsutil
-
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if name.startswith(".repair.gen="):
-            fs.delete(status.getPath(), True)
-        elif name.startswith(".prerepair.gen="):
-            canon = f"{path}/{name[len('.prerepair.'):]}"
-            if fsutil.exists(spark, canon):
-                fs.delete(status.getPath(), True)
-            elif not fsutil.rename(spark, f"{path}/{name}", canon):
-                raise IOError(
-                    f"pairs repair recovery rename {name} failed; "
-                    "generation left at the backup path"
-                )
-
-
-def repair_pairs_batch_types(spark, path: str) -> list[str]:
-    """One-time repair of generational pairs dirs whose FILES carry the
-    ``batch`` column as INT64 — the r12 migration wrote migrated gens
-    with ``.cast('long')`` while the stream's native gens write INT32,
-    so a root migrated by that code mixes parquet physical types for
-    one column and fails reads with PARQUET_COLUMN_DATA_TYPE_MISMATCH
-    whenever an int footer wins schema inference (r13 review find: the
-    r13 int-cast fix only covered FUTURE migrations). Each long-typed
-    gen dir is rewritten with batch cast to int via a tmp + two-rename
-    swap (crash windows closed by :func:`_recover_pair_repairs`, wired
-    into the stream's per-batch preamble).
-
-    Cost: one footer-only schema read per gen dir — bounded by the fold
-    cadence — so it is called from ``near_dedup_stream``'s WIRING, once
-    per stream start, not per batch. Returns the repaired dir names."""
-    from pyspark.sql import functions as F  # local: keep module top light
-
-    from .. import fsutil
-
-    _recover_pair_repairs(spark, path)
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    repaired: list[str] = []
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if _gen_dir_id(name) is None:
-            continue
-        sub = f"{path}/{name}"
-        types = {
-            f.name: f.dataType.simpleString()
-            for f in spark.read.parquet(sub).schema.fields
-        }
-        if types.get("batch") != "bigint":
-            continue
-        tmp = f"{path}/.repair.{name}"
-        bak = f"{path}/.prerepair.{name}"
-        fsutil.delete(spark, tmp)
-        fsutil.delete(spark, bak)
-        spark.read.parquet(sub).withColumn(
-            "batch", F.col("batch").cast("int")
-        ).coalesce(1).write.parquet(tmp)
-        if not fsutil.rename(spark, sub, bak):
-            raise IOError(f"pairs repair: rename {sub} -> {bak} failed")
-        if not fsutil.rename(spark, tmp, sub):
-            raise IOError(
-                f"pairs repair: rename {tmp} -> {sub} failed; original "
-                f"parked at {bak} (recovered by _recover_pair_repairs)"
-            )
-        fsutil.delete(spark, bak)
-        _LOG.warning(
-            "repair_pairs_batch_types(%s): rewrote %s batch INT64 -> "
-            "INT32 (r12-migration artifact)", path, name,
-        )
-        repaired.append(name)
-    return repaired
-
-
 def drop_stale_batch_dirs(spark, path: str, batch_id: int) -> list[int]:
     """Delete ``batch=<id>`` directories with ``id >= batch_id`` from a
     stream-owned layout. Normal serial streaming never has one (batches
@@ -1014,117 +833,6 @@ def drop_stale_batch_dirs(spark, path: str, batch_id: int) -> list[int]:
     return sorted(dropped)
 
 
-def _recover_pair_dir_swaps(spark, path: str) -> None:
-    """Finish :func:`compact_pairs_dirs` swaps that crashed mid-rename:
-    a ``.precompact.batch=<k>`` backup without its canonical
-    ``batch=<k>`` dir IS that batch's pairs — rename it back; with the
-    canonical present it is provably stale — delete it. Leftover
-    ``.compact.batch=<k>`` tmp dirs are always incomplete writes and
-    are removed. Dot-prefixed names keep both invisible to Parquet
-    partition discovery throughout."""
-    from .. import fsutil
-
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if name.startswith(".compact.batch="):
-            fs.delete(status.getPath(), True)
-        elif name.startswith(".precompact.batch="):
-            canon = f"{path}/{name[len('.precompact.'):]}"
-            if fsutil.exists(spark, canon):
-                fs.delete(status.getPath(), True)
-            elif not fsutil.rename(spark, f"{path}/{name}", canon):
-                raise IOError(
-                    f"pairs recovery rename {name} failed (Hadoop rename "
-                    "returned false); batch left at the backup path"
-                )
-
-
-def compact_pairs_dirs(spark, path: str) -> list[int]:
-    """Compact a pairs output (``batch=<id>`` dirs, never relabeled —
-    the batch column is user-facing provenance) INCREMENTALLY: rewrite
-    only batch dirs holding more than one data file, to exactly one
-    file each. The whole-path :func:`compact_index` re-read and
-    re-wrote the ENTIRE pairs history every cadence — linear cost per
-    fold, quadratic total work over the stream's life (r10 advice);
-    here an already-compacted dir (1 file) is skipped by inspection, so
-    each batch dir is rewritten at most once ever and the per-cadence
-    cost is O(new batches). No high-water-mark sidecar needed: the
-    1-file state is self-describing and survives replays that overwrite
-    a dir.
-
-    Residual small-files dimension, deliberately unbounded: the
-    DIRECTORY count still grows one per micro-batch forever, because
-    batch dirs must survive un-merged to keep their provenance. At a
-    batch per minute that is ~0.5 M directories/year — acceptable for a
-    pairs LOG on HDFS, but a deployment that reads the full history per
-    query should periodically export it to a date-partitioned table.
-
-    Per-dir crash-safe swap (tmp ``.compact.batch=<k>`` → backup
-    ``.precompact.batch=<k>``, both dot-prefixed so partition discovery
-    never sees them); :func:`_recover_pair_dir_swaps` finishes crashed
-    swaps and runs first here and at every stream batch start. Returns
-    the batch ids rewritten.
-
-    CONCURRENT-READER CAVEAT: each swap has a transient window (between
-    rename dir→backup and rename tmp→dir) in which a full-history scan
-    by an out-of-band reader sees that one batch missing entirely. The
-    serial stream itself never reads pairs, so it is safe — but the
-    pairs log is a user-facing output: do not run this compaction
-    concurrently with external full-history reads, or accept that a
-    scan racing a swap can transiently miss one batch (it reappears,
-    complete and identical, on the next listing)."""
-    from .. import fsutil
-
-    _recover_pair_dir_swaps(spark, path)
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    rewritten: list[int] = []
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if not name.startswith("batch="):
-            continue
-        try:
-            bid = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        n_files = sum(
-            1
-            for s in fs.listStatus(status.getPath())
-            if s.getPath().getName().endswith(".parquet")
-        )
-        if n_files <= 1:
-            continue
-        dir_path = f"{path}/{name}"
-        tmp = f"{path}/.compact.batch={bid}"
-        backup = f"{path}/.precompact.batch={bid}"
-        fsutil.delete(spark, tmp)
-        # reading the bare partition dir yields exactly the file content
-        # (the batch column lives in the dir name, as in the original
-        # write); coalesce(1), not repartition: no shuffle, one file
-        spark.read.parquet(dir_path).coalesce(1).write.parquet(tmp)
-        if not fsutil.rename(spark, dir_path, backup):
-            raise IOError(
-                f"pairs compact: rename {dir_path} -> {backup} failed; "
-                "batch left untouched"
-            )
-        if not fsutil.rename(spark, tmp, dir_path):
-            if not fsutil.rename(spark, backup, dir_path):
-                raise IOError(
-                    f"pairs compact: swap AND rollback failed for "
-                    f"{dir_path}; data intact at {backup}"
-                )
-            raise IOError(
-                f"pairs compact: swap failed for {dir_path}; rolled back"
-            )
-        fsutil.delete(spark, backup)
-        rewritten.append(bid)
-    return sorted(rewritten)
-
-
 def fold_stream_index(
     spark, path: str, index_partition: str, current_batch: int
 ) -> None:
@@ -1154,8 +862,8 @@ def fold_stream_index(
     (:func:`drop_stale_batch_dirs`): replay batch 0 clears the
     surviving dirs and the replay rebuilds the index from scratch,
     deterministically. Crash-safety is the same swap as
-    :func:`compact_index` (``.precompact`` recovery wired into every
-    index entry point)."""
+    :func:`compact_index` (:func:`fsutil.swap_dir`, recovery wired into
+    every index entry point)."""
     fold_to = current_batch - 1
     _rewrite_index(
         spark,
@@ -1171,21 +879,19 @@ def fold_stream_index(
 
 
 def _rewrite_index(spark, path: str, partition_cols: list[str], transform=None) -> None:
-    """The crash-safe full-rewrite body shared by :func:`compact_index`
-    and :func:`fold_stream_index` (see compact_index for the swap
-    protocol). ``transform`` optionally rewrites the DataFrame between
-    read and write (the fold's batch relabeling)."""
+    """The full-rewrite body shared by :func:`compact_index` and
+    :func:`fold_stream_index`: write the index to a scratch directory
+    with its ``_*.json`` sidecars, then publish it with
+    :func:`fsutil.swap_dir`. ``transform`` optionally rewrites the
+    DataFrame between read and write (the fold's batch relabeling)."""
     import posixpath
 
     from .. import fsutil
 
-    tmp, old = path + ".compact", path + ".precompact"
-    _recover_precompact(spark, path)  # finish a crashed prior compact
+    fsutil.recover_swap(spark, path)  # finish a crashed prior rewrite
     if not fsutil.exists(spark, path):
         raise ValueError(f"no index directory at {path}")
-    if fsutil.exists(spark, old):
-        fsutil.delete(spark, old)  # canonical present → backup is stale
-    fsutil.delete(spark, tmp)
+    tmp = fsutil.swap_tmp(spark, path)
     df = spark.read.parquet(path)
     if transform is not None:
         df = transform(df)
@@ -1203,23 +909,7 @@ def _rewrite_index(spark, path: str, partition_cols: list[str], transform=None) 
                 posixpath.join(tmp, name),
                 fsutil.read_text(spark, posixpath.join(path, name)),
             )
-    # Hadoop FileSystem.rename reports most failures by returning false,
-    # not raising — unchecked, a failed second rename followed by
-    # delete(old) would destroy the only full copy (review find). Check
-    # both; on a failed swap put the backup back so the canonical path
-    # never stops existing.
-    if not fsutil.rename(spark, path, old):
-        raise IOError(
-            f"index rewrite: rename {path} -> {old} failed (Hadoop "
-            "rename returned false); index left untouched"
-        )
-    if not fsutil.rename(spark, tmp, path):
-        restored = fsutil.rename(spark, old, path)
-        raise IOError(
-            f"index rewrite: rename {tmp} -> {path} failed; original "
-            + ("restored" if restored else f"left at {old} (restore rename ALSO failed)")
-        )
-    fsutil.delete(spark, old)
+    fsutil.swap_dir(spark, tmp, path)
 
 
 def minhash_probe_candidates(
@@ -1414,7 +1104,7 @@ def _check_simhash_index_meta(spark, path: str, blocks: int) -> None:
 
     from .. import fsutil
 
-    _recover_precompact(spark, path)
+    fsutil.recover_swap(spark, path)
     try:
         meta = _json.loads(fsutil.read_text(spark, f"{path}/{_SIMHASH_INDEX_META}"))
     except FileNotFoundError:
@@ -1441,7 +1131,7 @@ def _ensure_simhash_index_meta(spark, path: str, blocks: int) -> None:
     as :func:`_ensure_band_index_meta` (review find)."""
     from .. import fsutil
 
-    _recover_precompact(spark, path)
+    fsutil.recover_swap(spark, path)
     if fsutil.exists(spark, f"{path}/{_SIMHASH_INDEX_META}"):
         _check_simhash_index_meta(spark, path, blocks)
     else:
@@ -2046,7 +1736,7 @@ def _check_exact_index_meta(spark, path: str) -> None:
 
     from .. import fsutil
 
-    _recover_precompact(spark, path)
+    fsutil.recover_swap(spark, path)
     try:
         meta = _json.loads(fsutil.read_text(spark, f"{path}/{_EXACT_INDEX_META}"))
     except FileNotFoundError:
@@ -2069,7 +1759,7 @@ def _check_exact_index_meta(spark, path: str) -> None:
 def _ensure_exact_index_meta(spark, path: str) -> None:
     from .. import fsutil
 
-    _recover_precompact(spark, path)
+    fsutil.recover_swap(spark, path)
     if fsutil.exists(spark, f"{path}/{_EXACT_INDEX_META}"):
         _check_exact_index_meta(spark, path)
     else:

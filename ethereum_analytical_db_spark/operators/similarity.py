@@ -949,9 +949,8 @@ def _read_index_meta(spark: SparkSession, path: str) -> dict:
     import json as _json
 
     from .. import fsutil
-    from .dedup import _recover_precompact
 
-    _recover_precompact(spark, path)
+    fsutil.recover_swap(spark, path)
     try:
         return _json.loads(fsutil.read_text(spark, f"{path}/{_INDEX_META}"))
     except FileNotFoundError:

@@ -147,8 +147,8 @@ def near_dedup_stream(
     file-set forever — the small-files death at a batch per minute).
     Keyed on ``batch_id % N`` so the cadence is restart-stable; the fold
     runs AFTER the batch's own index write and is crash-safe (the
-    ``.precompact`` swap, with recovery wired into every index entry
-    point), and probe results are byte-identical before and after
+    ``fsutil.swap_dir`` swap, with recovery wired into every index
+    entry point), and probe results are byte-identical before and after
     (pinned in tests). The pairs output folds on the same cadence into
     GENERATIONS (``operators/dedup.fold_pairs_gens``): pairs land under
     engine-owned ``gen=b<id>`` partition dirs with ``batch`` preserved
@@ -159,11 +159,9 @@ def near_dedup_stream(
     micro-batch forever (~0.5 M dirs/year at a batch a minute), while
     each pairs row is rewritten at most once ever. Default None never
     compacts (run ``compact_index``/``fold_pairs_gens`` out-of-band
-    instead — NOT the warehouse-era ``compact_pairs_dirs``, which scans
-    ``batch=`` dirs and is a silent no-op on the generational layout).
-    A pre-r12 pairs log (``batch=<k>`` partition dirs) is upgraded in
-    place by ``migrate_pairs_layout``, called from the per-batch
-    preamble — without it a mixed root fails Spark partition discovery.
+    instead). A pairs root holding ``batch=<k>`` partition dirs from
+    an older layout is not converted: Spark's partition discovery
+    rejects it loudly ("Conflicting partition column names").
 
     State design: unlike ``dedup_exact_stream``, the dedup state lives
     in the INDEX (Parquet on the warehouse filesystem), not in Spark
@@ -322,14 +320,6 @@ def near_dedup_stream(
             "or 'semantic'"
         )
 
-    # one-time layout repair at WIRING time: gens migrated by the r12
-    # code carry batch as INT64 while native gens are INT32 — a mixed
-    # root fails reads once an int footer wins inference; the sweep
-    # costs one footer read per gen dir, so it runs per stream start,
-    # not per batch (crash windows closed by _recover_pair_repairs in
-    # the per-batch preamble)
-    d.repair_pairs_batch_types(stream_docs.sparkSession, pairs_path)
-
     # parameter sidecar written at WIRING time, before any batch runs:
     # writing it inside the batch (after the index parquet) left a crash
     # window — index present, sidecar absent — in which every future
@@ -347,22 +337,15 @@ def near_dedup_stream(
         try:
             from .. import fsutil
 
-            # finish any crashed compaction FIRST: a pairs (or index)
-            # dir parked at .precompact would otherwise be shadowed by
-            # this batch's write recreating the canonical path, and the
-            # next compaction would delete the backup as stale —
-            # destroying the only full copy (same window the index meta
-            # entry points guard; the pairs path has no meta check, so
-            # the recovery lives here)
-            d._recover_precompact(spark, pairs_path)
-            d._recover_precompact(spark, index_path)
-            d._recover_pair_dir_swaps(spark, pairs_path)
+            # finish any crashed swap or fold FIRST: a pairs (or index)
+            # dir parked by a crashed swap would otherwise be shadowed
+            # by this batch's write recreating the canonical path, and
+            # the next swap would delete the only full copy as stale
+            # (the index meta entry points guard the same window; the
+            # pairs path has no meta check, so its recovery lives here)
+            fsutil.recover_swap(spark, pairs_path)
+            fsutil.recover_swap(spark, index_path)
             d._recover_pair_fold(spark, pairs_path)
-            d._recover_pair_repairs(spark, pairs_path)
-            # pre-r12 pairs logs (batch=<k> partition dirs) upgrade in
-            # place to the generational layout — a mixed root would
-            # fail partition discovery and evade the stale-gen sweep
-            d.migrate_pairs_layout(spark, pairs_path)
 
             # replay/retry hygiene: drop batch dirs / pair generations
             # at/after this batch's id. A from-scratch replay (checkpoint

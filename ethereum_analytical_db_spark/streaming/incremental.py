@@ -187,7 +187,7 @@ class SyncPipeline:
     key there is no durable pass id here); a restart merely delays the
     next compaction by at most N passes — compaction is a pure
     optimization, never a correctness event, and the swap itself is
-    crash-safe (two-rename + ``.precompact`` recovery).
+    crash-safe (``fsutil.swap_dir``, rolled back on the next read).
     """
 
     def __init__(

@@ -69,8 +69,9 @@ def ingest_to_warehouse(
     one per re-written key per batch). It also re-arms the warehouse's
     dedup-free FINAL fast path each cycle: a read landing between a
     compaction and the next batch's write skips the window entirely.
-    compact() uses the crash-safe two-rename swap, and foreachBatch
-    commits serially, so a replayed batch re-compacts idempotently.
+    compact() publishes through the crash-safe ``fsutil.swap_dir``, and
+    foreachBatch commits serially, so a replayed batch re-compacts
+    idempotently.
     """
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:

@@ -276,6 +276,42 @@ def test_drop_removes_leftovers_before_canonical(spark, tmp_path, monkeypatch):
     assert not wh.exists("block")  # no resurrection path remains
 
 
+def test_compact_restores_table_when_publish_rename_fails(
+    spark, tmp_path, monkeypatch
+):
+    """Hadoop rename reports failure by returning false. When compact()'s
+    publish rename (scratch -> canonical) fails, the old copy must be
+    back at the canonical path before compact() raises — not left parked
+    until some later read() recovers it."""
+    import os
+
+    from ethereum_analytical_db_spark import fsutil
+    from ethereum_analytical_db_spark.catalog import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path))
+    wh.create("block")
+    for i in range(2):
+        wh.write("block", spark.createDataFrame([Row(id="1", number=i)]))
+    p = str(tmp_path / "block")
+    rows = lambda: sorted(  # noqa: E731
+        (r["id"], r["number"], r["_seq"])
+        for r in spark.read.parquet(p).collect()
+    )
+    want = rows()
+    real = fsutil.rename
+    monkeypatch.setattr(
+        fsutil,
+        "rename",
+        lambda s, src, dst: False if src.endswith(".compact") else real(s, src, dst),
+    )
+    with pytest.raises(IOError):
+        wh.compact("block")
+    assert os.path.isdir(p)  # before any read() could recover it
+    assert rows() == want
+    monkeypatch.setattr(fsutil, "rename", real)
+    assert wh.read("block").first()["number"] == 1
+
+
 def test_concurrent_writer_detected_not_silent(spark, tmp_path):
     """Two Warehouse instances racing writes to one table: the writer
     whose claim lands first proceeds; the other gets a loud

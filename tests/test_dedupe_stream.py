@@ -513,6 +513,10 @@ def test_near_dedup_stream_compaction_cadence_bounds_files(spark, tmp_path):
     for g in pair_gens:
         if g.startswith("gen=f"):
             assert len(glob.glob(f"{comp_pairs}/{g}/*.parquet")) == 1
+    # folded and live gens carry batch with one physical type: the
+    # mixed root reads back whole with batch as int
+    batch_type = spark.read.parquet(comp_pairs).schema["batch"].dataType
+    assert batch_type.simpleString() == "int"
     # the plain (never-folded) run grows one live gen dir per batch
     assert all(
         g.rsplit("/", 1)[1].startswith("gen=b")
@@ -942,217 +946,3 @@ def test_fold_pairs_gens_bounds_dirs_and_recovers(spark, tmp_path):
         "gen=b8", "gen=f2", "gen=f4", "gen=f6",
     ]
     assert not glob.glob(f"{pairs}/gen=*")
-
-
-def test_compact_pairs_dirs_incremental_and_crash_safe(spark, tmp_path):
-    """r10 ADVICE (A3): pairs compaction rewrites only batch dirs with
-    more than one data file — each dir at most once ever (the 1-file
-    state is self-describing), so per-cadence cost is O(new batches),
-    not O(stream age). Crash states (.precompact backup with/without
-    canonical, leftover .compact tmp) recover at every entry point."""
-    import glob
-    import os
-    import shutil
-
-    from ethereum_analytical_db_spark.operators import dedup
-
-    pairs = str(tmp_path / "pairs")
-    rows = spark.createDataFrame(
-        [(1, 2, "x"), (3, 4, "y")], "doc_a long, doc_b long, digest string"
-    )
-    # batch dirs 0..2, each written with 2 files (repartition(2))
-    for b in range(3):
-        rows.repartition(2).write.parquet(f"{pairs}/batch={b}")
-    before = {
-        b: len(glob.glob(f"{pairs}/batch={b}/*.parquet")) for b in range(3)
-    }
-    assert all(n > 1 for n in before.values())
-
-    assert dedup.compact_pairs_dirs(spark, pairs) == [0, 1, 2]
-    assert all(
-        len(glob.glob(f"{pairs}/batch={b}/*.parquet")) == 1 for b in range(3)
-    )
-    # second call: nothing left to do — incremental, not whole-history
-    assert dedup.compact_pairs_dirs(spark, pairs) == []
-
-    # a NEW multi-file dir arrives: only IT is rewritten
-    rows.repartition(2).write.parquet(f"{pairs}/batch=3")
-    assert dedup.compact_pairs_dirs(spark, pairs) == [3]
-
-    # content identical to 4x the base rows
-    got = spark.read.parquet(pairs).groupBy().count().first()[0]
-    assert got == rows.count() * 4
-
-    # crash recovery: backup without canonical → restored
-    os.rename(f"{pairs}/batch=2", f"{pairs}/.precompact.batch=2")
-    dedup._recover_pair_dir_swaps(spark, pairs)
-    assert os.path.isdir(f"{pairs}/batch=2")
-    assert not os.path.isdir(f"{pairs}/.precompact.batch=2")
-
-    # crash recovery: stale backup WITH canonical → deleted; tmp → deleted
-    shutil.copytree(f"{pairs}/batch=2", f"{pairs}/.precompact.batch=2")
-    shutil.copytree(f"{pairs}/batch=2", f"{pairs}/.compact.batch=9")
-    assert dedup.compact_pairs_dirs(spark, pairs) == []
-    assert not os.path.isdir(f"{pairs}/.precompact.batch=2")
-    assert not os.path.isdir(f"{pairs}/.compact.batch=9")
-    assert spark.read.parquet(pairs).count() == rows.count() * 4
-
-
-def test_migrate_pairs_layout_upgrades_legacy_batch_dirs(spark, tmp_path):
-    """A pre-r12 pairs log (batch=<k> PARTITION dirs — batch encoded
-    only in the dir name, absent from the files) upgrades in place to
-    the generational layout: batch materialized as a data column,
-    gen=b<k> dirs, legacy dirs gone, the mixed-root partition-discovery
-    failure impossible. The crash window (rename done, source delete
-    pending) resolves by deleting the legacy dir without a rewrite."""
-    import glob
-    import os
-
-    from ethereum_analytical_db_spark.operators import dedup
-
-    pairs = str(tmp_path / "pairs")
-    for b in range(2):
-        # legacy layout: files DO NOT carry the batch column
-        spark.createDataFrame(
-            [(1, 100 + b, "x"), (2, 200 + b, "y")],
-            "doc_a long, doc_b long, digest string",
-        ).write.parquet(f"{pairs}/batch={b}")
-
-    assert dedup.migrate_pairs_layout(spark, pairs) == [0, 1]
-    assert not glob.glob(f"{pairs}/batch=*")
-    gens = sorted(os.path.basename(g) for g in glob.glob(f"{pairs}/gen=*"))
-    assert gens == ["gen=b0", "gen=b1"]
-    got = spark.read.parquet(pairs)
-    assert sorted((r["batch"], r["doc_b"]) for r in got.collect()) == [
-        (0, 100), (0, 200), (1, 101), (1, 201),
-    ]
-
-    # steady state: nothing legacy → no-op listing
-    assert dedup.migrate_pairs_layout(spark, pairs) == []
-
-    # crash window: rename completed, source delete crashed — both
-    # dirs coexist; resume deletes the legacy dir, no duplicate rows
-    spark.createDataFrame(
-        [(9, 9, "z")], "doc_a long, doc_b long, digest string"
-    ).write.parquet(f"{pairs}/batch=1")
-    assert dedup.migrate_pairs_layout(spark, pairs) == [1]
-    assert not glob.glob(f"{pairs}/batch=*")
-    assert spark.read.parquet(pairs).count() == 4
-
-    # the migrated layout folds and sweeps like a native one
-    assert dedup.fold_pairs_gens(spark, pairs, 2) == [0, 1]
-    assert sorted(
-        os.path.basename(g) for g in glob.glob(f"{pairs}/gen=*")
-    ) == ["gen=f1"]
-    assert spark.read.parquet(pairs).count() == 4
-
-
-def test_repair_pairs_batch_types_heals_r12_migrated_roots(spark, tmp_path):
-    """r13 review find: the int-cast migration fix only covered FUTURE
-    migrations — a root migrated by the r12 code already holds a gen
-    with batch as INT64 next to the stream's native INT32 gens.
-    repair_pairs_batch_types must rewrite the long-typed gen in place
-    (crash windows recovered), after which the root reads whole and
-    folds cleanly."""
-    import glob
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ethereum_analytical_db_spark.operators import dedup
-
-    pairs = str(tmp_path / "pairs")
-    # gen=b0 as the r12 migration wrote it: batch cast to LONG
-    spark.createDataFrame(
-        [(1, 100, "x")], "doc_a long, doc_b long, digest string"
-    ).withColumn("batch", F.lit(0).cast("long")).coalesce(1).write.parquet(
-        f"{pairs}/gen=b0"
-    )
-    # gen=b1 native: INT32
-    spark.createDataFrame(
-        [(2, 200, "y")], "doc_a long, doc_b long, digest string"
-    ).withColumn("batch", F.lit(1)).coalesce(1).write.parquet(
-        f"{pairs}/gen=b1"
-    )
-
-    assert dedup.repair_pairs_batch_types(spark, pairs) == ["gen=b0"]
-    got = spark.read.parquet(pairs)
-    assert got.schema["batch"].dataType.simpleString() == "int"
-    assert sorted((r["batch"], r["doc_b"]) for r in got.collect()) == [
-        (0, 100), (1, 200),
-    ]
-    # idempotent: second sweep finds nothing long-typed
-    assert dedup.repair_pairs_batch_types(spark, pairs) == []
-    # and the healed root folds
-    assert dedup.fold_pairs_gens(spark, pairs, 2) == [0, 1]
-    assert spark.read.parquet(pairs).count() == 2
-
-    # crash windows: a stale tmp is deleted; a backup without its
-    # canonical dir is renamed back; a backup WITH it is stale
-    shutil.copytree(f"{pairs}/gen=f1", f"{pairs}/.repair.gen=f1")
-    shutil.copytree(f"{pairs}/gen=f1", f"{pairs}/.prerepair.gen=f1")
-    dedup._recover_pair_repairs(spark, pairs)
-    assert not os.path.isdir(f"{pairs}/.repair.gen=f1")
-    assert not os.path.isdir(f"{pairs}/.prerepair.gen=f1")
-    shutil.move(f"{pairs}/gen=f1", f"{pairs}/.prerepair.gen=f1")
-    dedup._recover_pair_repairs(spark, pairs)
-    assert os.path.isdir(f"{pairs}/gen=f1")
-    assert spark.read.parquet(pairs).count() == 2
-    assert sorted(
-        os.path.basename(g) for g in glob.glob(f"{pairs}/gen=*")
-    ) == ["gen=f1"]
-
-
-def test_migrated_and_native_gens_fold_and_read(spark, tmp_path):
-    """A root mixing MIGRATED gens (written by migrate_pairs_layout)
-    with NATIVE new-era gens (written by the stream, batch =
-    F.lit(batch_id) -> INT32) must read and fold cleanly. r12 advisor
-    find: the migration wrote batch as INT64 while the stream writes
-    INT32 — one column with two parquet physical types across footers
-    fails reads with PARQUET_COLUMN_DATA_TYPE_MISMATCH whenever an
-    int-typed footer wins schema inference. Pinned here by folding a
-    root holding one of each and reading it back both ways."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ethereum_analytical_db_spark.operators import dedup
-
-    pairs = str(tmp_path / "pairs")
-    # gen=b0 arrives via migration of a legacy batch=0 dir
-    spark.createDataFrame(
-        [(1, 100, "x")], "doc_a long, doc_b long, digest string"
-    ).write.parquet(f"{pairs}/batch=0")
-    assert dedup.migrate_pairs_layout(spark, pairs) == [0]
-    # gen=b1 arrives natively, the stream's exact write shape
-    (
-        spark.createDataFrame(
-            [(2, 200, "y")], "doc_a long, doc_b long, digest string"
-        )
-        .withColumn("batch", F.lit(1))
-        .withColumn("gen", F.lit("b1"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gen")
-        .parquet(pairs)
-    )
-
-    # mixed root reads whole (both footer orders are exercised by the
-    # fold below, which unions the raw partition dirs directly)
-    got = spark.read.parquet(pairs)
-    assert got.schema["batch"].dataType.simpleString() == "int"
-    assert got.count() == 2
-
-    # the fold reads BOTH gens' files in one plan — the exact spot the
-    # INT32/INT64 mix blew up — and the folded root reads back whole
-    assert dedup.fold_pairs_gens(spark, pairs, 2) == [0, 1]
-    assert sorted(
-        os.path.basename(g) for g in glob.glob(f"{pairs}/gen=*")
-    ) == ["gen=f1"]
-    folded = spark.read.parquet(pairs)
-    assert folded.schema["batch"].dataType.simpleString() == "int"
-    assert sorted((r["batch"], r["doc_b"]) for r in folded.collect()) == [
-        (0, 100), (1, 200),
-    ]
