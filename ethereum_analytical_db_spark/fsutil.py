@@ -84,6 +84,31 @@ def write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
         raise IOError(f"write_text_atomic: rename {tmp} -> {path} failed")
 
 
+def read_sidecar(spark: SparkSession, path: str, name: str, writer: str) -> dict:
+    """Read the JSON sidecar ``name`` of the index directory ``path``
+    (the reader half of :func:`write_text_atomic`). Runs
+    :func:`recover_swap` first, so a rewrite that crashed mid-swap is
+    rolled back before the read. An absent or unparseable sidecar
+    raises a ``ValueError`` naming ``writer``, the operator that
+    builds the index, so the caller knows what to rerun."""
+    import json
+
+    recover_swap(spark, path)
+    try:
+        return json.loads(read_text(spark, f"{path}/{name}"))
+    except FileNotFoundError:
+        raise ValueError(
+            f"no {name} sidecar at {path}: index was not written by "
+            f"{writer}, cannot validate probe parameters"
+        ) from None
+    except ValueError as e:  # json.JSONDecodeError ⊂ ValueError
+        raise ValueError(
+            f"{name} sidecar at {path} is corrupt ({e}): likely a crash "
+            f"mid-write by an older writer — rebuild the index ({writer}) "
+            "or restore the sidecar by hand"
+        ) from None
+
+
 def rename(spark: SparkSession, src: str, dst: str) -> bool:
     fs, jsrc = _fs_and_path(spark, src)
     return fs.rename(jsrc, _fs_and_path(spark, dst)[1])

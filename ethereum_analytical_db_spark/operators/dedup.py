@@ -14,15 +14,21 @@ Scale design:
   a (band, bucket-hash) key → shuffle is O(docs×B), never O(n²);
 - SimHash: 64-bit signature via per-bit majority of token hashes,
   computed with explode + bit-arithmetic aggregation (no UDF).
+
+MinHash and SimHash take ``hash_family="md5"``, which swaps only their
+lane and bucket/bit expressions for md5, a hash DuckDB ships: the
+registry's md5 faces run the production pipelines under an oracle.
 """
 
 from __future__ import annotations
 
+import json
 import logging
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import fsutil
 from ..session import app_cache
 from .materialize import materialize as _materialize
 from .text import ngrams_from_words
@@ -310,20 +316,52 @@ def ngram_jaccard_pairs(
     )
 
 
+# MinHash per hash family: the aggregate lane for seed k over the
+# doc's shingles ``s``, and the bucket of the band holding lanes
+# [lo, lo + r). xxhash64 lanes are longs, md5 lanes are hex strings,
+# which compare bytewise the same in every SQL engine (the md5 family is
+# the one a DuckDB oracle replays). The xxhash64 bucket text is frozen:
+# band indexes on disk were written with it.
+_MINHASH_FAMILY = {
+    "xxhash64": (
+        "min(xxhash64(s, {k}))",
+        lambda lo, r: f"xxhash64(array_join(transform(slice(signature, {lo + 1}, "
+        f"{r}), x -> CAST(x AS STRING)), ','))",
+    ),
+    "md5": (
+        "min(md5('{k}:' || s))",
+        lambda lo, r: "md5(concat_ws('|', "
+        + ", ".join(f"signature[{k}]" for k in range(lo, lo + r)) + "))",
+    ),
+}
+
+
+def _family(families, hash_family: str):
+    if hash_family not in families:
+        raise ValueError(
+            f"hash_family={hash_family!r}: expected one of {sorted(families)}"
+        )
+    return families[hash_family]
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
     num_hashes: int = 32,
+    *,
+    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """K-minima MinHash signature over word n-grams: for each seed k,
-    sig[k] = min over shingles of xxhash64(shingle, k).
+    sig[k] = min over shingles of ``xxhash64(s, k)`` (or, for
+    ``hash_family="md5"``, of ``md5('k:' || s)``).
 
-    Shape: explode shingles, then K ``min(xxhash64(s, k))`` aggregation
-    lanes — whole-stage-codegen hash functions with map-side partial
-    combine (each partition collapses to one row per doc before the
-    shuffle), instead of K interpreted array-transform lambdas per row."""
+    Shape: explode shingles, then K min-aggregation lanes —
+    whole-stage-codegen hash functions with map-side partial combine
+    (each partition collapses to one row per doc before the shuffle),
+    instead of K interpreted array-transform lambdas per row."""
+    lane = _family(_MINHASH_FAMILY, hash_family)[0]
     shingled = _shingled(df, text_col, id_col, n)
     ex = shingled.select("doc", F.explode("ngrams").alias("s"))
     # ALL lanes in one SQL string parsed JVM-side in a single expr call:
@@ -331,7 +369,7 @@ def minhash_signatures(
     # 2·num_hashes py4j round trips per build (r16 driver-gap find —
     # one-shot construction halves warm build time on lane-heavy aggs);
     # the aggregate functions and the array reassembly are unchanged
-    lanes = ", ".join(f"min(xxhash64(s, {k}))" for k in range(num_hashes))
+    lanes = ", ".join(lane.format(k=k) for k in range(num_hashes))
     return ex.groupBy("doc").agg(F.expr(f"array({lanes})").alias("signature"))
 
 
@@ -342,14 +380,16 @@ def minhash_band_rows(
     n: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
+    *,
+    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """``(doc, band, bucket)`` LSH band rows: split each doc's MinHash
     signature into ``bands`` groups of ``num_hashes/bands`` lanes and
-    hash each group into a 64-bit bucket. One row per (doc, band);
-    purely per-doc, so a doc's rows are identical whether it is hashed
-    alone or with the whole corpus — which is what makes the frozen
-    corpus index (:func:`minhash_index_write`) exact w.r.t. a full
-    recompute. This is also the candidate-join key layout
+    hash each group into a bucket (``_MINHASH_FAMILY``). One row per
+    (doc, band); purely per-doc, so a doc's rows are identical whether
+    it is hashed alone or with the whole corpus — which is what makes
+    the frozen corpus index (:func:`minhash_index_write`) exact w.r.t.
+    a full recompute. This is also the candidate-join key layout
     :func:`minhash_lsh_candidates` self-joins on."""
     if num_hashes % bands:
         raise ValueError(
@@ -358,35 +398,37 @@ def minhash_band_rows(
             "but never influence any bucket, silently changing the LSH "
             "S-curve"
         )
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, text_col, id_col, n, num_hashes)
+    r = num_hashes // bands
+    sigs = minhash_signatures(
+        df, text_col, id_col, n, num_hashes, hash_family=hash_family
+    )
+    bucket = _MINHASH_FAMILY[hash_family][1]
     band_structs = ", ".join(
-        f"struct({b} AS band, xxhash64(array_join(transform("
-        f"slice(signature, {b * rows_per_band + 1}, {rows_per_band}), "
-        "x -> CAST(x AS STRING)), ',')) AS bucket)"
-        for b in range(bands)
+        f"struct({b} AS band, {bucket(b * r, r)} AS bucket)" for b in range(bands)
     )
     return sigs.selectExpr(
         "doc", f"explode(array({band_structs})) AS bb"
     ).select("doc", "bb.band", "bb.bucket")
 
 
-def _drop_hot_buckets(band_rows: DataFrame, max_bucket_df: int) -> DataFrame:
-    """Remove band rows whose (band, bucket) is shared by more than
-    ``max_bucket_df`` docs — the MinHash analogue of SimHash's
-    ``max_chunk_df`` and the Jaccard ``max_shingle_df``: a degenerate
-    bucket (boilerplate-dominated corpus, near-constant field) makes
-    the candidate join O(bucket²), and at 100 TB that single bucket is
-    the job. A pair is lost only if EVERY band it agrees on is hot —
-    both docs sitting entirely inside degenerate clusters (subset
-    property, pinned in tests)."""
-    hot = (
-        band_rows.groupBy("band", "bucket")
+def _hot_keys(frames: list[DataFrame], keys: list[str], max_df: int) -> DataFrame:
+    """The hot-key cap of every bucketed candidate join: the ``keys``
+    values held by more than ``max_df`` rows of the union of ``frames``
+    (probes pass ``[index, new_rows]``). A degenerate bucket
+    (boilerplate-dominated corpus, near-constant field) makes the join
+    O(bucket²), and at 100 TB that single bucket is the job. A MinHash
+    or SimHash pair is lost only if EVERY band or chunk it agrees on is
+    hot — both docs inside degenerate clusters (subset property, pinned
+    in tests)."""
+    rows = frames[0].select(*keys)
+    for more in frames[1:]:
+        rows = rows.unionByName(more.select(*keys))
+    return (
+        rows.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_bucket_df)
+        .filter(F.col("df") > max_df)
         .drop("df")
     )
-    return band_rows.join(hot, ["band", "bucket"], "left_anti")
 
 
 def minhash_lsh_candidates(
@@ -399,20 +441,28 @@ def minhash_lsh_candidates(
     materialize: str = "local",
     *,
     max_bucket_df: int | None = None,
+    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """LSH banding: split the signature into ``bands`` rows-per-band
     groups, bucket by the band's hash, emit candidate pairs sharing any
     bucket. Output: (doc_a, doc_b, bands_in_common).
 
-    ``max_bucket_df``: optional hot-bucket cap (see
-    :func:`_drop_hot_buckets`); the default (None) keeps exact LSH
-    candidate semantics."""
-    band_rows = minhash_band_rows(df, text_col, id_col, n, num_hashes, bands)
+    ``max_bucket_df``: optional hot-bucket cap (see :func:`_hot_keys`);
+    the default (None) keeps exact LSH candidate semantics.
+    ``hash_family``: ``"xxhash64"`` (production: integer lanes beat hex
+    strings across the shuffle) or ``"md5"`` (the oracle face)."""
+    band_rows = minhash_band_rows(
+        df, text_col, id_col, n, num_hashes, bands, hash_family=hash_family
+    )
     # materialize before the self-join so the shingle+minhash pipeline
     # runs once, not once per join branch
     band_rows = _materialize(band_rows, materialize)
     if max_bucket_df is not None:
-        band_rows = _drop_hot_buckets(band_rows, max_bucket_df)
+        band_rows = band_rows.join(
+            _hot_keys([band_rows], ["band", "bucket"], max_bucket_df),
+            ["band", "bucket"],
+            "left_anti",
+        )
     # merge not shuffle-hash: same OOM hazard as the n-gram index join
     # (the band table is O(docs x bands)); SMJ spills, SHJ's build side
     # must fit in task memory. Branches renamed AFTER the join so they
@@ -435,73 +485,11 @@ def minhash_lsh_candidates(
     )
 
 
-def minhash_lsh_candidates_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    materialize: str = "local",
-) -> DataFrame:
-    """Portable-hash twin of :func:`minhash_lsh_candidates`: the SAME
-    shingle → K-min signature → band → bucket self-join pipeline, keyed
-    by md5 (a hash family every SQL engine ships) instead of xxhash64.
-    Lane k's minimum is ``min(md5('k:' || shingle))`` over the doc's
-    distinct shingles (hex strings compare bytewise identically across
-    engines), band b's bucket is ``md5(lane_{b·r} || '|' || …)``.
-
-    Exists so the LSH family has an exactly-replayable SQL oracle face
-    (r12 VERDICT task 7 — the first hash-checked evidence on the
-    approximate-dedup tier); PRODUCTION keeps the xxhash64 pipeline,
-    whose 64-bit integer lanes beat 32-char hex strings across the
-    shuffle. Same banded scale shape: no all-pairs, cost is
-    Σ bucket_df² over bucket groups, map-side-combined min lanes."""
-    if num_hashes % bands:
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes}"
-        )
-    r = num_hashes // bands
-    sh = _shingled(df, text_col, id_col, n).select(
-        "doc", F.explode("ngrams").alias("s")
-    )
-    # one-shot lane construction (same py4j-round-trip cut as
-    # minhash_signatures); sig[k] is the 0-based lane the m{k} columns
-    # used to carry — identical min-md5 values, identical buckets
-    lanes = ", ".join(
-        f"min(md5('{k}:' || s))" for k in range(num_hashes)
-    )
-    mins = sh.groupBy("doc").agg(F.expr(f"array({lanes})").alias("sig"))
-    band_structs = ", ".join(
-        "struct({b} AS band, md5(concat_ws('|', {lanes})) AS bucket)".format(
-            b=b, lanes=", ".join(f"sig[{k}]" for k in range(b * r, (b + 1) * r))
-        )
-        for b in range(bands)
-    )
-    band_rows = mins.selectExpr(
-        "doc", f"explode(array({band_structs})) AS bb"
-    ).select("doc", "bb.band", "bb.bucket")
-    band_rows = _materialize(band_rows, materialize)
-    # rename after the join for AQE exchange reuse (r16, see
-    # minhash_lsh_candidates)
-    a = band_rows.alias("A")
-    b = band_rows.alias("B")
-    return (
-        a.hint("merge")
-        .join(
-            b,
-            (F.col("A.band") == F.col("B.band"))
-            & (F.col("A.bucket") == F.col("B.bucket"))
-            & (F.col("A.doc") < F.col("B.doc")),
-        )
-        .groupBy(
-            F.col("A.doc").alias("doc_a"), F.col("B.doc").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("bands_in_common"))
-    )
-
-
 _BAND_INDEX_META = "_band_index_meta.json"
+
+
+def _band_meta(n: int, num_hashes: int, bands: int) -> dict:
+    return {"kind": "minhash_bands", "n": n, "num_hashes": num_hashes, "bands": bands}
 
 
 def _write_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int) -> None:
@@ -509,14 +497,8 @@ def _write_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int
     it). Written through the Hadoop FS API (`fsutil`) so HDFS/S3 index
     paths work identically to local ones; temp+rename so a crash can't
     leave truncated JSON blocking every future reader."""
-    import json as _json
-
-    from .. import fsutil
-
     fsutil.write_text_atomic(
-        spark,
-        f"{path}/{_BAND_INDEX_META}",
-        _json.dumps({"kind": "minhash_bands", "n": n, "num_hashes": num_hashes, "bands": bands}),
+        spark, f"{path}/{_BAND_INDEX_META}", json.dumps(_band_meta(n, num_hashes, bands))
     )
 
 
@@ -525,26 +507,10 @@ def _check_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int
     index was built with — a mismatched shingle width, hash count, or
     band count silently yields wrong buckets (the same footgun
     ivf_index_append's centroid digest guards against)."""
-    import json as _json
-
-    from .. import fsutil
-
-    fsutil.recover_swap(spark, path)
-    try:
-        meta = _json.loads(fsutil.read_text(spark, f"{path}/{_BAND_INDEX_META}"))
-    except FileNotFoundError:
-        raise ValueError(
-            f"no {_BAND_INDEX_META} sidecar at {path}: index was not "
-            "written by minhash_index_write/near_dedup_stream, cannot "
-            "validate probe parameters"
-        ) from None
-    except ValueError as e:  # json.JSONDecodeError ⊂ ValueError
-        raise ValueError(
-            f"{_BAND_INDEX_META} sidecar at {path} is corrupt ({e}): "
-            "likely a crash mid-write by an older writer — rebuild the "
-            "index (minhash_index_write) or restore the sidecar by hand"
-        ) from None
-    want = {"kind": "minhash_bands", "n": n, "num_hashes": num_hashes, "bands": bands}
+    meta = fsutil.read_sidecar(
+        spark, path, _BAND_INDEX_META, "minhash_index_write/near_dedup_stream"
+    )
+    want = _band_meta(n, num_hashes, bands)
     if meta != want:
         raise ValueError(
             f"band index at {path} was built with {meta}, used with "
@@ -552,20 +518,24 @@ def _check_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int
         )
 
 
-def _ensure_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int) -> None:
-    """Write the sidecar iff absent; otherwise VALIDATE against it.
-    The wiring-time call in ``near_dedup_stream`` must not blindly
-    rewrite: a stream restarted with drifted parameters (bands=4 over a
-    bands=8 index) would stamp the new parameters over the old sidecar
-    and turn the mismatch guard into a rubber stamp — every probe then
-    joins incompatible bucket spaces silently (review find)."""
-    from .. import fsutil
-
+def _ensure_meta(spark, path: str, name: str, check, write, *params) -> None:
+    """Write the sidecar ``name`` iff absent; otherwise VALIDATE against
+    it (``check(spark, path, *params)``). The wiring-time call in
+    ``near_dedup_stream`` must not blindly rewrite: a stream restarted
+    with drifted parameters (bands=4 over a bands=8 index) would stamp
+    the new parameters over the old sidecar and turn the mismatch guard
+    into a rubber stamp — every probe then joins incompatible bucket
+    spaces silently (review find)."""
     fsutil.recover_swap(spark, path)
-    if fsutil.exists(spark, f"{path}/{_BAND_INDEX_META}"):
-        _check_band_index_meta(spark, path, n, num_hashes, bands)
-    else:
-        _write_band_index_meta(spark, path, n, num_hashes, bands)
+    step = check if fsutil.exists(spark, f"{path}/{name}") else write
+    step(spark, path, *params)
+
+
+def _ensure_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int) -> None:
+    _ensure_meta(
+        spark, path, _BAND_INDEX_META, _check_band_index_meta,
+        _write_band_index_meta, n, num_hashes, bands,
+    )
 
 
 def minhash_index_write(
@@ -662,8 +632,6 @@ def drop_stale_pair_gens(spark, path: str, batch_id: int) -> list[str]:
     batch b drops only its own crashed ``gen=b<b>`` (a fold created
     during the crashed attempt is ``f<b-1>``, strictly earlier, and
     survives correctly). Non-empty drops are exceptional and logged."""
-    from .. import fsutil
-
     fs, jpath = fsutil._fs_and_path(spark, path)
     if not fs.exists(jpath):
         return []
@@ -691,8 +659,6 @@ def _recover_pair_fold(spark, path: str) -> None:
     fold reads ALL live gens strictly earlier than its batch), so any
     such survivor is a crashed source-delete — remove it, or its rows
     would be permanently duplicated beside their folded copy."""
-    from .. import fsutil
-
     fs, jpath = fsutil._fs_and_path(spark, path)
     if not fs.exists(jpath):
         return
@@ -749,8 +715,6 @@ def fold_pairs_gens(spark, path: str, current_batch: int) -> list[int]:
     log compaction, resolved by the next listing. Returns the live
     batch ids merged ([] when none, e.g. a retry after the fold
     completed)."""
-    from .. import fsutil
-
     _recover_pair_fold(spark, path)
     fs, jpath = fsutil._fs_and_path(spark, path)
     if not fs.exists(jpath):
@@ -805,8 +769,6 @@ def drop_stale_batch_dirs(spark, path: str, batch_id: int) -> list[int]:
     a different or partial source permanently loses the difference.
     Non-empty drops are always exceptional and are logged with the ids
     so an unintended wipe is visible, not silent."""
-    from .. import fsutil
-
     fs, jpath = fsutil._fs_and_path(spark, path)
     if not fs.exists(jpath):
         return []
@@ -885,8 +847,6 @@ def _rewrite_index(spark, path: str, partition_cols: list[str], transform=None) 
     :func:`fsutil.swap_dir`. ``transform`` optionally rewrites the
     DataFrame between read and write (the fold's batch relabeling)."""
     import posixpath
-
-    from .. import fsutil
 
     fsutil.recover_swap(spark, path)  # finish a crashed prior rewrite
     if not fsutil.exists(spark, path):
@@ -969,14 +929,7 @@ def minhash_probe_candidates(
         # directories, see streaming/dedupe_stream.near_dedup_stream)
         idx = idx.filter(index_filter)
     if max_bucket_df is not None:
-        hot = F.broadcast(
-            idx.select("band", "bucket")
-            .unionByName(new_rows.select("band", "bucket"))
-            .groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_bucket_df)
-            .drop("df")
-        )
+        hot = F.broadcast(_hot_keys([idx, new_rows], ["band", "bucket"], max_bucket_df))
         idx = idx.join(hot, ["band", "bucket"], "left_anti")
         new_rows = new_rows.join(hot, ["band", "bucket"], "left_anti")
     probe = F.broadcast(new_rows) if broadcast_new else new_rows.hint("merge")
@@ -1004,21 +957,51 @@ def minhash_probe_candidates(
     )
 
 
+# SimHash per hash family: the signature width, the per-token
+# projections over ``(doc, w)`` (each list one selectExpr stage) and
+# bit b of a token. xxhash64 gives 64 bits from one hash. md5 gives 32:
+# bit b is the top bit of hex char b+1 of md5(w) (32 fair, independent
+# coins from ONE md5 per token, a measured 32x hash-cost cut over one
+# md5 per (token, lane)); each 8-char block is parsed ONCE with conv()
+# into an integer that every lane reads with shiftright/& (r16: 32
+# interpreted substring+string-compare evaluations per token became 4
+# convs + 32 codegen'd shift-ands, identical bits by construction).
+_SIMHASH_FAMILY = {
+    "xxhash64": (64, [["xxhash64(w) AS h"]], lambda b: f"shiftright(h, {b}) & 1"),
+    "md5": (
+        32,
+        [
+            ["md5(w) AS h"],
+            [
+                f"cast(conv(substring(h, {s * 8 + 1}, 8), 16, 10) as bigint) AS m{s}"
+                for s in range(4)
+            ],
+        ],
+        lambda b: f"shiftright(m{b // 8}, {31 - 4 * (b % 8)}) & 1",
+    ),
+}
+
+
 def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bits: int = 64,
+    *,
+    hash_family: str = "xxhash64",
 ) -> DataFrame:
-    """SimHash: per-bit majority vote over token xxhash64 values.
-    explode(words) → for each bit, sum ±1 → reassemble the signature.
-    One shuffle (groupBy id), bit lanes are column expressions."""
+    """SimHash: per-bit majority vote over token hashes (64 bits of
+    xxhash64, or 32 of md5 — see ``_SIMHASH_FAMILY``). explode(words) →
+    for each bit, count set tokens → reassemble the signature. One
+    shuffle (groupBy id), bit lanes are column expressions."""
+    bits, stages, bit = _family(_SIMHASH_FAMILY, hash_family)
     tokens = df.select(
         F.col(id_col).alias("doc"),
         F.explode(F.split(F.col(text_col), " ")).alias("w"),
-    ).withColumn("h", F.xxhash64("w"))
-    # per-bit set count n_b = sum((h >> b) & 1) — branch-free lanes;
-    # majority vote is 2·n_b > n_tokens (≡ the classic ±1 sum > 0).
+    )
+    for cols in stages:
+        tokens = tokens.selectExpr("doc", *cols)
+    # per-bit set count n_b = sum(bit_b) — branch-free lanes; majority
+    # vote is 2·n_b > n_tokens (≡ the classic ±1 sum > 0).
     # The WHOLE signature — all `bits` sum-lanes and the reassembly —
     # is ONE SQL string parsed JVM-side in a single expr call: the
     # Column-API form was ~600 py4j round trips (~1 s of driver time)
@@ -1027,43 +1010,31 @@ def simhash_signatures(
     # repeated count(1) aggregate; the per-lane sums and the final
     # integer arithmetic are unchanged, so signatures are identical.
     sig_sql = " | ".join(
-        f"shiftleft(CASE WHEN 2 * sum(shiftright(h, {b}) & 1) > count(1) "
+        f"shiftleft(CASE WHEN 2 * sum({bit(b)}) > count(1) "
         f"THEN 1L ELSE 0L END, {b})"
         for b in range(bits)
     )
     return tokens.groupBy("doc").agg(F.expr(sig_sql).alias("simhash"))
 
 
-def _hamming_pairs(chunked: DataFrame, max_hamming: int) -> DataFrame:
-    """The block-permutation candidate join + full-signature Hamming
-    verify shared by the xxhash64 and md5 SimHash faces: self-join the
-    ``(doc, simhash, blk, chunk)`` rows per (blk, chunk), verify on
-    bit_count(xor), dedupe pairs that share several chunks."""
-    # rename after the join for AQE exchange reuse (r16, see
-    # ngram_jaccard_pairs); merge not shuffle-hash: spills under a hot
-    # chunk instead of OOMing the build-side hash map (sf10 lesson from
-    # the n-gram join)
-    a = chunked.alias("A")
-    b = chunked.alias("B")
-    hamming = F.bit_count(
-        F.col("A.simhash").bitwiseXOR(F.col("B.simhash"))
-    )
-    return (
-        a.hint("merge")
-        .join(
-            b,
-            (F.col("A.blk") == F.col("B.blk"))
-            & (F.col("A.chunk") == F.col("B.chunk"))
-            & (F.col("A.doc") < F.col("B.doc")),
+def _check_simhash_params(
+    bits: int, blocks: int, max_hamming: int, partial_recall: bool
+) -> None:
+    """The two SimHash configuration guards: ``blocks`` must divide the
+    signature width, and ``max_hamming < blocks`` for the pigeonhole
+    recall guarantee unless the caller opts out."""
+    if bits % blocks:
+        raise ValueError(
+            f"blocks={blocks} must divide bits={bits}: the trailing "
+            f"{bits % blocks} bits would never enter any chunk"
         )
-        .select(
-            F.col("A.doc").alias("doc_a"),
-            F.col("B.doc").alias("doc_b"),
-            hamming.cast("int").alias("hamming"),
+    if max_hamming >= blocks and not partial_recall:
+        raise ValueError(
+            f"max_hamming={max_hamming} >= blocks={blocks} voids the "
+            "block-permutation recall guarantee (a pair can differ in "
+            "every chunk); raise blocks past max_hamming or pass "
+            "partial_recall=True to accept the heuristic"
         )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
 
 
 def _chunked_signatures(sigs: DataFrame, blocks: int, bits: int = 64) -> DataFrame:
@@ -1087,38 +1058,21 @@ def _chunked_signatures(sigs: DataFrame, blocks: int, bits: int = 64) -> DataFra
 _SIMHASH_INDEX_META = "_simhash_index_meta.json"
 
 
+def _simhash_meta(blocks: int) -> dict:
+    return {"kind": "simhash_blocks", "bits": 64, "blocks": blocks}
+
+
 def _write_simhash_index_meta(spark, path: str, blocks: int) -> None:
-    import json as _json
-
-    from .. import fsutil
-
     fsutil.write_text_atomic(
-        spark,
-        f"{path}/{_SIMHASH_INDEX_META}",
-        _json.dumps({"kind": "simhash_blocks", "bits": 64, "blocks": blocks}),
+        spark, f"{path}/{_SIMHASH_INDEX_META}", json.dumps(_simhash_meta(blocks))
     )
 
 
 def _check_simhash_index_meta(spark, path: str, blocks: int) -> None:
-    import json as _json
-
-    from .. import fsutil
-
-    fsutil.recover_swap(spark, path)
-    try:
-        meta = _json.loads(fsutil.read_text(spark, f"{path}/{_SIMHASH_INDEX_META}"))
-    except FileNotFoundError:
-        raise ValueError(
-            f"no {_SIMHASH_INDEX_META} sidecar at {path}: index was not "
-            "written by simhash_index_write, cannot validate parameters"
-        ) from None
-    except ValueError as e:  # json.JSONDecodeError ⊂ ValueError
-        raise ValueError(
-            f"{_SIMHASH_INDEX_META} sidecar at {path} is corrupt ({e}): "
-            "likely a crash mid-write by an older writer — rebuild the "
-            "index (simhash_index_write) or restore the sidecar by hand"
-        ) from None
-    want = {"kind": "simhash_blocks", "bits": 64, "blocks": blocks}
+    meta = fsutil.read_sidecar(
+        spark, path, _SIMHASH_INDEX_META, "simhash_index_write"
+    )
+    want = _simhash_meta(blocks)
     if meta != want:
         raise ValueError(
             f"simhash index at {path} was built with {meta}, used with "
@@ -1127,15 +1081,10 @@ def _check_simhash_index_meta(spark, path: str, blocks: int) -> None:
 
 
 def _ensure_simhash_index_meta(spark, path: str, blocks: int) -> None:
-    """Write-iff-absent / validate-if-present — same restart-drift guard
-    as :func:`_ensure_band_index_meta` (review find)."""
-    from .. import fsutil
-
-    fsutil.recover_swap(spark, path)
-    if fsutil.exists(spark, f"{path}/{_SIMHASH_INDEX_META}"):
-        _check_simhash_index_meta(spark, path, blocks)
-    else:
-        _write_simhash_index_meta(spark, path, blocks)
+    _ensure_meta(
+        spark, path, _SIMHASH_INDEX_META, _check_simhash_index_meta,
+        _write_simhash_index_meta, blocks,
+    )
 
 
 def simhash_index_write(
@@ -1199,13 +1148,7 @@ def simhash_probe_candidates(
     over (index ∪ batch), exactly the batch op's semantics — one extra
     aggregation pass over the index per probe when set. Doc ids must be
     disjoint from the index."""
-    if max_hamming >= blocks and not partial_recall:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= blocks={blocks} voids the "
-            "block-permutation recall guarantee (a pair can differ in "
-            "every chunk); raise blocks past max_hamming or pass "
-            "partial_recall=True to accept the heuristic"
-        )
+    _check_simhash_params(64, blocks, max_hamming, partial_recall)
     _check_simhash_index_meta(spark, index_path, blocks)
     new_rows = _materialize(
         _chunked_signatures(simhash_signatures(new_df, text_col, id_col), blocks),
@@ -1218,14 +1161,7 @@ def simhash_probe_candidates(
         # streaming/dedupe_stream.near_dedup_stream
         idx = idx.filter(index_filter)
     if max_chunk_df is not None:
-        hot = F.broadcast(
-            idx.select("blk", "chunk")
-            .unionByName(new_rows.select("blk", "chunk"))
-            .groupBy("blk", "chunk")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_chunk_df)
-            .drop("df")
-        )
+        hot = F.broadcast(_hot_keys([idx, new_rows], ["blk", "chunk"], max_chunk_df))
         idx = idx.join(hot, ["blk", "chunk"], "left_anti")
         new_rows = new_rows.join(hot, ["blk", "chunk"], "left_anti")
     probe = F.broadcast(new_rows) if broadcast_new else new_rows.hint("merge")
@@ -1275,11 +1211,18 @@ def simhash_near_duplicates(
     max_chunk_df: int | None = None,
     partial_recall: bool = False,
     materialize: str = "local",
+    *,
+    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming, using
-    the standard block-permutation trick: split 64 bits into ``blocks``
-    chunks; any pair within distance d < blocks must share at least one
-    exact chunk → join per chunk, verify Hamming on the full signature.
+    the standard block-permutation trick: split the signature into
+    ``blocks`` chunks; any pair within distance d < blocks must share at
+    least one exact chunk → join per chunk, verify Hamming on the full
+    signature. Output: (doc_a, doc_b, hamming), distinct.
+
+    ``hash_family``: ``"xxhash64"`` (production: 64-bit signatures
+    discriminate better) or ``"md5"`` (32 bits, the oracle face).
+    ``blocks`` must divide the width.
 
     The pigeonhole guarantee needs ``max_hamming < blocks``; configs
     outside it silently MISS pairs whose differing bits spread across
@@ -1290,129 +1233,53 @@ def simhash_near_duplicates(
     Signatures are materialized before the self-join (``materialize=``:
     ``local`` | ``reliable`` — see operators/materialize.py for the
     executor-loss trade-off): otherwise both join branches recompute
-    the explode + 64-lane aggregation. At warehouse scale this step is
-    "write the signature table, then join it to itself".
+    the explode + per-bit vote aggregation. At warehouse scale this step
+    is "write the signature table, then join it to itself".
 
-    ``max_chunk_df``: optional hot-bucket cap, the SimHash analogue of
-    the shingle-df cap (``ngram_jaccard_pairs``): chunk values shared by
-    more than this many docs are dropped from the candidate join. On a
-    skewed corpus (boilerplate-dominated, a stopword that swamps the
-    per-bit vote) one chunk value can collect a large fraction of all
-    docs and the self-join on it is O(bucket²) — at 100 TB that single
-    bucket is the job. A pair is lost only if ALL its shared chunks are
-    hot, i.e. both docs sit entirely inside degenerate clusters; the
+    ``max_chunk_df``: optional hot-bucket cap (see :func:`_hot_keys`),
+    the SimHash analogue of the shingle-df cap
+    (``ngram_jaccard_pairs``): chunk values shared by more than this
+    many docs are dropped from the candidate join. On a skewed corpus
+    (boilerplate-dominated, a stopword that swamps the per-bit vote)
+    one chunk value can collect a large fraction of all docs; the
     default (None) keeps exact candidate semantics."""
-    if max_hamming >= blocks and not partial_recall:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= blocks={blocks} voids the "
-            "block-permutation recall guarantee (a pair can differ in "
-            "every chunk); raise blocks past max_hamming or pass "
-            "partial_recall=True to accept the heuristic"
-        )
-    sigs = _materialize(simhash_signatures(df, text_col, id_col), materialize)
-    chunked = _chunked_signatures(sigs, blocks)
+    bits = _family(_SIMHASH_FAMILY, hash_family)[0]
+    _check_simhash_params(bits, blocks, max_hamming, partial_recall)
+    sigs = _materialize(
+        simhash_signatures(df, text_col, id_col, hash_family=hash_family),
+        materialize,
+    )
+    chunked = _chunked_signatures(sigs, blocks, bits)
     if max_chunk_df is not None:
-        hot = (
-            chunked.groupBy("blk", "chunk")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_chunk_df)
-            .drop("df")
+        chunked = chunked.join(
+            _hot_keys([chunked], ["blk", "chunk"], max_chunk_df),
+            ["blk", "chunk"],
+            "left_anti",
         )
-        chunked = chunked.join(hot, ["blk", "chunk"], "left_anti")
-    return _hamming_pairs(chunked, max_hamming)
-
-
-def simhash_near_duplicates_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 32,
-    max_hamming: int = 3,
-    blocks: int = 4,
-    partial_recall: bool = False,
-    materialize: str = "local",
-) -> DataFrame:
-    """Portable-hash twin of :func:`simhash_near_duplicates` — the
-    SimHash analogue of :func:`minhash_lsh_candidates_md5` (r13 VERDICT
-    task 4): the SAME tokenize → per-bit majority vote → block-
-    permutation candidate join → Hamming verify pipeline, with token
-    bits drawn from md5 (a hash family every SQL engine ships) instead
-    of xxhash64: ONE md5 per token, bit ``b`` = 1 iff hex char ``b+1``
-    of ``md5(token)`` is >= '8' (the top bit of each nibble — 32 fair,
-    independent coins from one hash; computing md5 once per token in a
-    projection instead of per (token, lane) was a measured 32x hash-
-    cost cut). Majority is the same strict ``2·n_set > n`` vote;
-    signatures are ``bits``-wide integers split into ``blocks`` chunks
-    for the pigeonhole join; pairs verify on full-signature Hamming
-    distance.
-
-    Exists so the SimHash family has an exactly-replayable SQL oracle
-    face; PRODUCTION keeps the xxhash64 pipeline
-    (:func:`simhash_near_duplicates` — one 64-bit hash per token beats
-    ``bits`` md5 calls per token, and 64-bit signatures discriminate
-    better). Same scale shape: one groupBy(doc) shuffle for the vote,
-    candidate cost Σ chunk_df² over chunk groups — which is why the
-    default is 32 bits / 8-bit chunks, NOT 16/4: 4-bit chunks have
-    only 16 distinct values per block, so every block's join collapses
-    into 16 O(n²/16) buckets (measured: 22.7k mostly-noise pairs at
-    sf0.01; random 16-bit signatures land within Hamming 3 of each
-    other ~1% of the time).
-
-    Output: (doc_a, doc_b, hamming), distinct."""
-    if bits % blocks:
-        raise ValueError(f"blocks={blocks} must divide bits={bits}")
-    if max_hamming >= blocks and not partial_recall:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= blocks={blocks} voids the "
-            "block-permutation recall guarantee; raise blocks or pass "
-            "partial_recall=True"
-        )
-    if bits > 32:
-        raise ValueError(
-            f"bits={bits} > 32: one md5 yields 32 hex chars, one "
-            "independent bit each — the portable face stops there "
-            "(production simhash_near_duplicates has the 64-bit lanes)"
-        )
-    # the wide lane/signature expressions are built as SQL strings —
-    # one JVM parse per expression instead of hundreds of py4j Column
-    # round trips, which measured ~1.3 s of pure driver time per build
-    # at bits=32 (the disjoint power-of-two terms make + equal to OR).
-    # r16: the per-token bit test is integer arithmetic, not string
-    # comparison — hex char b+1 of md5(w) is ≥ '8' exactly when the top
-    # bit of its nibble is set, so each 8-hex-char block is parsed ONCE
-    # with conv() into a 32-bit integer and every lane reads its bit
-    # with shiftright/& (guide §1.2 per-task work: 32 interpreted
-    # substring+string-compare evaluations per token became
-    # ceil(bits/8) convs + 32 codegen'd shift-ands; identical bits by
-    # construction)
-    n_segs = (bits + 7) // 8
-    tokens = df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.col(text_col), " ")).alias("w"),
-    ).withColumn("h", F.md5("w"))
-    tokens = tokens.selectExpr(
-        "doc",
-        *[
-            f"cast(conv(substring(h, {s * 8 + 1}, 8), 16, 10) as bigint)"
-            f" AS m{s}"
-            for s in range(n_segs)
-        ],
+    # rename after the join for AQE exchange reuse (r16, see
+    # ngram_jaccard_pairs); merge not shuffle-hash: spills under a hot
+    # chunk instead of OOMing the build-side hash map (sf10 lesson from
+    # the n-gram join). Pairs sharing several chunks dedupe in distinct.
+    a = chunked.alias("A")
+    b = chunked.alias("B")
+    hamming = F.bit_count(
+        F.col("A.simhash").bitwiseXOR(F.col("B.simhash"))
     )
-    # one expr call for all lanes + reassembly (same r16 py4j cut as
-    # simhash_signatures); count(1) dedupes in the aggregate, the lane
-    # sums and the disjoint power-of-two terms are unchanged
-    sig_sql = " + ".join(
-        f"(CASE WHEN 2 * sum(shiftright(m{b // 8}, {31 - 4 * (b % 8)}) & 1) "
-        f"> count(1) THEN {1 << b}L ELSE 0L END)"
-        for b in range(bits)
-    )
-    sigs = tokens.groupBy("doc").agg(F.expr(sig_sql).alias("simhash"))
-    # materialize before the self-join (same reason as the xxhash64
-    # twin): both join branches would otherwise re-run the tokenize +
-    # md5 + {bits}-lane vote pipeline (r14 review find)
-    sigs = _materialize(sigs, materialize)
-    return _hamming_pairs(
-        _chunked_signatures(sigs, blocks, bits), max_hamming
+    return (
+        a.hint("merge")
+        .join(
+            b,
+            (F.col("A.blk") == F.col("B.blk"))
+            & (F.col("A.chunk") == F.col("B.chunk"))
+            & (F.col("A.doc") < F.col("B.doc")),
+        )
+        .select(
+            F.col("A.doc").alias("doc_a"),
+            F.col("B.doc").alias("doc_b"),
+            hamming.cast("int").alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
     )
 
 
@@ -1718,12 +1585,8 @@ def exact_digest_rows(
 
 
 def _write_exact_index_meta(spark, path: str) -> None:
-    import json as _json
-
-    from .. import fsutil
-
     fsutil.write_text_atomic(
-        spark, f"{path}/{_EXACT_INDEX_META}", _json.dumps({"kind": "exact_md5"})
+        spark, f"{path}/{_EXACT_INDEX_META}", json.dumps({"kind": "exact_md5"})
     )
 
 
@@ -1732,24 +1595,7 @@ def _check_exact_index_meta(spark, path: str) -> None:
     guards against pointing an exact probe at a BAND or chunk index —
     the join key would silently be garbage — and hosts the crashed-
     compact recovery hook like every other index entry point."""
-    import json as _json
-
-    from .. import fsutil
-
-    fsutil.recover_swap(spark, path)
-    try:
-        meta = _json.loads(fsutil.read_text(spark, f"{path}/{_EXACT_INDEX_META}"))
-    except FileNotFoundError:
-        raise ValueError(
-            f"no {_EXACT_INDEX_META} sidecar at {path}: index was not "
-            "written by exact_index_write, cannot validate"
-        ) from None
-    except ValueError as e:  # json.JSONDecodeError ⊂ ValueError
-        raise ValueError(
-            f"{_EXACT_INDEX_META} sidecar at {path} is corrupt ({e}): "
-            "likely a crash mid-write by an older writer — rebuild the "
-            "index (exact_index_write) or restore the sidecar by hand"
-        ) from None
+    meta = fsutil.read_sidecar(spark, path, _EXACT_INDEX_META, "exact_index_write")
     if meta != {"kind": "exact_md5"}:
         raise ValueError(
             f"index at {path} is {meta}, not an exact_md5 digest index"
@@ -1757,13 +1603,9 @@ def _check_exact_index_meta(spark, path: str) -> None:
 
 
 def _ensure_exact_index_meta(spark, path: str) -> None:
-    from .. import fsutil
-
-    fsutil.recover_swap(spark, path)
-    if fsutil.exists(spark, f"{path}/{_EXACT_INDEX_META}"):
-        _check_exact_index_meta(spark, path)
-    else:
-        _write_exact_index_meta(spark, path)
+    _ensure_meta(
+        spark, path, _EXACT_INDEX_META, _check_exact_index_meta, _write_exact_index_meta
+    )
 
 
 def exact_index_write(

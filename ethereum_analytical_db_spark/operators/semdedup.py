@@ -268,19 +268,12 @@ def semdedup_index_write(
 
 
 def _validate_semdedup_meta(spark, path: str, centroids, threshold):
-    from .similarity import _centroid_digest, _read_index_meta
+    from .similarity import _index_meta
 
-    meta = _read_index_meta(spark, path)
-    if meta.get("kind") != "semdedup":
-        raise ValueError(
-            f"index at {path} is {meta.get('kind')!r}, not semdedup"
-        )
-    if meta.get("centroid_digest") != _centroid_digest(centroids):
-        raise ValueError(
-            f"centroids do not match the ones the index at {path} was "
-            "built with — a probe would assign new vectors to the wrong "
-            "clusters"
-        )
+    meta = _index_meta(
+        spark, path, "semdedup", centroids,
+        "a probe would assign new vectors to the wrong clusters",
+    )
     if threshold is not None and float(threshold) != float(meta["threshold"]):
         raise ValueError(
             f"index at {path} holds verdicts at threshold "

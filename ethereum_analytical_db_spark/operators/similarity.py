@@ -15,12 +15,15 @@ sums are DECIMAL (order-independent, bit-identical in any engine).
 
 from __future__ import annotations
 
+import json
 import math
 
 from pyspark import AccumulatorParam
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsutil
+from .dedup import _hot_keys
 from .materialize import materialize as _materialize
 
 DEC = "decimal(12,6)"
@@ -245,19 +248,51 @@ def _as_dec_vec(vec_col) -> Column:
     return F.transform(vec_col, lambda x: x.cast("double").cast(DEC))
 
 
-def _unordered_pair_keys(blk_col: str, n_blocks: int):
-    """Array of (i, j) structs: the unordered block pairs a row in block
-    ``blk_col`` participates in — (min(b,o), max(b,o)) for o in
-    0..n_blocks-1. Each unordered pair lands in exactly one group, so
-    candidates never duplicate across tasks."""
-    return F.array(
+def _decimal_cosine_pairs(
+    cands: DataFrame, vecs: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact verify shared by the exact and md5-LSH near-dup operators:
+    join candidate ``(id_a, id_b)`` pairs to ``(vid, dv, n2)`` rows
+    (DECIMAL vector, its squared norm as double) and keep pairs whose
+    fixed-point cosine reaches ``threshold``. The dot is an exact
+    decimal fold, so the reported cosine is bit-identical in a SQL
+    oracle."""
+    a = vecs.select(F.col("vid").alias("id_a"), F.col("dv").alias("dva"), F.col("n2").alias("n2_a"))
+    b = vecs.select(F.col("vid").alias("id_b"), F.col("dv").alias("dvb"), F.col("n2").alias("n2_b"))
+    dot = _dec_dot(F.col("dva"), F.col("dvb")).cast("double")
+    cos = dot / F.sqrt(F.col("n2_a") * F.col("n2_b"))
+    return (
+        cands.join(a, "id_a")
+        .join(b, "id_b")
+        .select("id_a", "id_b", cos.alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
+    )
+
+
+def _block_pairs(df: DataFrame, n_blocks: int) -> DataFrame:
+    """The block decomposition shared by the exact and LSH near-dup
+    operators: ``df`` plus ``blk``, the row's block (a hash of ``vid``
+    mod ``n_blocks``), replicated once per unordered block pair
+    ``(i, j)`` the row participates in — (min(blk,o), max(blk,o)) for o
+    in 0..n_blocks-1. Each unordered pair lands in exactly one (i, j)
+    group, so candidates never duplicate across tasks."""
+    cols = df.columns
+    pairs = F.array(
         *[
             F.struct(
-                F.least(F.col(blk_col), F.lit(o)).alias("i"),
-                F.greatest(F.col(blk_col), F.lit(o)).alias("j"),
+                F.least(F.col("blk"), F.lit(o)).alias("i"),
+                F.greatest(F.col("blk"), F.lit(o)).alias("j"),
             )
             for o in range(n_blocks)
         ]
+    )
+    return (
+        df.withColumn(
+            "blk",
+            F.pmod(F.xxhash64(F.col("vid").cast("string")), F.lit(n_blocks)).cast("int"),
+        )
+        .select(*cols, "blk", F.explode(pairs).alias("p"))
+        .select(*cols, "blk", F.col("p.i").alias("i"), F.col("p.j").alias("j"))
     )
 
 
@@ -274,21 +309,17 @@ def _gemm_pair_score(pdf, i: int, j: int, thr: float):
     mat = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
     unit = mat / np.sqrt((mat * mat).sum(axis=1))[:, None]
     ids = pdf["vid"].to_numpy()
-    left = pdf["blk"].to_numpy() == i
-    empty = (
-        np.empty(0, dtype=ids.dtype),
-        np.empty(0, dtype=ids.dtype),
-        np.empty(0, dtype=np.float64),
-    )
     if i == j:
         sims = unit @ unit.T
         ai, bj = np.nonzero(sims >= thr)
         ia, ib, cs = ids[ai], ids[bj], sims[ai, bj]
         keep = ia < ib
         return ia[keep], ib[keep], cs[keep]
+    left = pdf["blk"].to_numpy() == i
     right = ~left
     if not left.any() or not right.any():
-        return empty
+        empty = np.empty(0, dtype=ids.dtype)
+        return empty, empty, np.empty(0, dtype=np.float64)
     sims = unit[left] @ unit[right].T
     ai, bj = np.nonzero(sims >= thr)
     la, rb = ids[left][ai], ids[right][bj]
@@ -311,10 +342,14 @@ def embedding_near_dup_exact(
     1. candidate generation — block nested-loop: each vector hashes into
        one of ``blocks`` buckets; every unordered bucket pair (i, j)
        forms one task that gemms bucket i against bucket j (numpy BLAS,
-       not per-row), keeping pairs above ``threshold − 1e-6``. The
-       double round-off of a 64-term dot is ~1e-14, so no true pair can
-       be missed. Shuffle is O(n·blocks) rows; peak task memory is two
-       buckets (~2n/blocks vectors) — ``blocks`` scales it down;
+       not per-row), keeping pairs above ``threshold − 1e-6``. The gemm
+       scores the DECIMAL(12,6)-quantized values the verify step
+       scores, cast to double: quantization can move a cosine by far
+       more than 1e-6 (a raw-float gemm missed pairs whose exact cosine
+       reached the threshold), while the double round-off of a 64-term
+       dot is ~1e-14, so no true pair can be missed. Shuffle is
+       O(n·blocks) rows; peak task memory is two buckets (~2n/blocks
+       vectors) — ``blocks`` scales it down;
     2. exact verification — candidates join back (shuffle joins keyed on
        the ids; the candidate set is tiny) to DECIMAL-cast vectors; the
        reported cosine is an exact fixed-point fold (order-independent →
@@ -327,16 +362,13 @@ def embedding_near_dup_exact(
     import pandas as pd
 
     thr = threshold - 1e-6
-    src = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(blocks))
-        .cast("int")
-        .alias("blk"),
+    repl = _block_pairs(
+        embeddings.select(
+            F.col(id_col).alias("vid"),
+            F.transform(_as_dec_vec(F.col(vec_col)), lambda x: x.cast("double")).alias("v"),
+        ),
+        blocks,
     )
-    repl = src.select(
-        "vid", "v", "blk", F.explode(_unordered_pair_keys("blk", blocks)).alias("p")
-    ).select("vid", "v", "blk", F.col("p.i").alias("i"), F.col("p.j").alias("j"))
 
     def gemm_block_pair(key, pdf):
         ia, ib, _ = _gemm_pair_score(pdf, int(key[0]), int(key[1]), thr)
@@ -371,16 +403,7 @@ def embedding_near_dup_exact(
         materialize,
         eager=False,
     )
-    a = base.select(F.col("vid").alias("id_a"), F.col("dv").alias("dva"), F.col("n2").alias("n2_a"))
-    b = base.select(F.col("vid").alias("id_b"), F.col("dv").alias("dvb"), F.col("n2").alias("n2_b"))
-    dot = _dec_dot(F.col("dva"), F.col("dvb")).cast("double")
-    cos = dot / F.sqrt(F.col("n2_a") * F.col("n2_b"))
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _decimal_cosine_pairs(cands, base, threshold)
 
 
 def lsh_params(
@@ -457,8 +480,12 @@ def embedding_near_dup_lsh_md5(
     bit-identical. Production stays on the numpy-gemm twin (random
     Gaussian planes, applyInPandas BLAS scoring, multi-table recall
     sizing); this face pins the family's CANDIDATE SEMANTICS — sign-bit
-    bucketing and within-bucket exact verify — the same way
-    ``simhash_near_duplicates_md5`` pins SimHash's.
+    bucketing and within-bucket exact verify. Unlike the MinHash and
+    SimHash md5 faces, which are ``hash_family="md5"`` runs of their
+    production operators, it keeps its own candidate stage: it buckets
+    and pre-filters on DECIMAL-quantized values, which the float gemm
+    cannot reproduce. The hot-bucket cap (``_hot_keys``) and the exact
+    verify (:func:`_decimal_cosine_pairs`) are the shared ones.
 
     Plan shape mirrors production where it matters at scale: one
     projection computes the bucket (pure JVM expression — built as ONE
@@ -479,8 +506,9 @@ def embedding_near_dup_lsh_md5(
       cosine at ``threshold − 1e-6``: a 64-term double dot of
       decimal(12,6)-quantized values carries ≤ ~1e-13 relative
       round-off, so no pair whose exact decimal cosine reaches the
-      threshold can be dropped (the identical margin argument
-      ``embedding_near_dup_exact`` already relies on);
+      threshold can be dropped (the same argument covers
+      ``embedding_near_dup_exact``, whose candidate gemm also scores
+      the quantized values, not the raw floats);
     - the exact DECIMAL fold — the face's reason to exist — runs only
       on the handful of surviving candidates (O(near-dups), not
       O(Σ bucket²)), so the reported cosines stay bit-identical to the
@@ -536,13 +564,9 @@ def embedding_near_dup_lsh_md5(
         eager=False,
     )
     if max_bucket_size is not None:
-        hot = (
-            base.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket_size)
-            .drop("n")
+        base = base.join(
+            _hot_keys([base], ["bucket"], max_bucket_size), "bucket", "left_anti"
         )
-        base = base.join(hot, "bucket", "left_anti")
     a = base.select(
         F.col("vid").alias("id_a"),
         F.col("fv").alias("fva"),
@@ -571,23 +595,7 @@ def embedding_near_dup_lsh_md5(
     dec = base.select(
         "vid", "dv", _dec_dot(F.col("dv"), F.col("dv")).cast("double").alias("n2")
     )
-    va = dec.select(
-        F.col("vid").alias("id_a"), F.col("dv").alias("dva"),
-        F.col("n2").alias("n2_a"),
-    )
-    vb = dec.select(
-        F.col("vid").alias("id_b"), F.col("dv").alias("dvb"),
-        F.col("n2").alias("n2_b"),
-    )
-    cos = _dec_dot(F.col("dva"), F.col("dvb")).cast("double") / F.sqrt(
-        F.col("n2_a") * F.col("n2_b")
-    )
-    return (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _decimal_cosine_pairs(cands, dec, threshold)
 
 
 def embedding_near_dup_lsh(
@@ -634,7 +642,6 @@ def embedding_near_dup_lsh(
     10x data at fixed planes=4) without recall collapsing. Cost is a
     ~L× shuffle/flops multiplier; at 100 TB you size planes ≈
     log2(n/target_bucket) first, then buy recall with tables."""
-    import numpy as np
     import pandas as pd
 
     thr = threshold - 1e-6
@@ -661,16 +668,8 @@ def embedding_near_dup_lsh(
         def gemm_bucket(key, pdf):
             if group_size_acc is not None:
                 group_size_acc.add(len(pdf))
-            mat = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            unit = mat / np.sqrt((mat * mat).sum(axis=1))[:, None]
-            sims = unit @ unit.T
-            ai, bj = np.nonzero(sims >= thr)
-            ids = pdf["vid"].to_numpy()
-            ia, ib = ids[ai], ids[bj]
-            keep = ia < ib
-            return pd.DataFrame(
-                {"id_a": ia[keep], "id_b": ib[keep], "cosine": sims[ai, bj][keep]}
-            )
+            ia, ib, cs = _gemm_pair_score(pdf, 0, 0, thr)
+            return pd.DataFrame({"id_a": ia, "id_b": ib, "cosine": cs})
 
         return _dedup_pairs(
             withb.groupBy("tbl", "bucket")
@@ -680,17 +679,7 @@ def embedding_near_dup_lsh(
 
     # hot-bucket decomposition: replicate each row to every unordered
     # sub-block pair it participates in; each (bucket, i, j) is one task
-    src = withb.withColumn(
-        "blk",
-        F.pmod(F.xxhash64(F.col("vid").cast("string")), F.lit(sub_blocks)).cast("int"),
-    )
-    repl = src.select(
-        "vid", "v", "tbl", "bucket", "blk",
-        F.explode(_unordered_pair_keys("blk", sub_blocks)).alias("p"),
-    ).select(
-        "vid", "v", "tbl", "bucket", "blk",
-        F.col("p.i").alias("i"), F.col("p.j").alias("j"),
-    )
+    repl = _block_pairs(withb, sub_blocks)
 
     def gemm_bucket_pair(key, pdf):
         if group_size_acc is not None:
@@ -928,41 +917,40 @@ _INDEX_META = "_INDEX_META.json"
 
 def _centroid_digest(centroids: list[list[float]]) -> str:
     import hashlib
-    import json as _json
 
     return hashlib.sha256(
-        _json.dumps([[float(x) for x in c] for c in centroids]).encode()
+        json.dumps([[float(x) for x in c] for c in centroids]).encode()
     ).hexdigest()
 
 
 def _write_index_meta(spark: SparkSession, path: str, meta: dict) -> None:
     """Sidecar IO through the Hadoop FS API (`fsutil`): HDFS/S3 index
     paths behave like local ones (the indexes exist FOR those stores)."""
-    import json as _json
-
-    from .. import fsutil
-
-    fsutil.write_text_atomic(spark, f"{path}/{_INDEX_META}", _json.dumps(meta))
+    fsutil.write_text_atomic(spark, f"{path}/{_INDEX_META}", json.dumps(meta))
 
 
 def _read_index_meta(spark: SparkSession, path: str) -> dict:
-    import json as _json
+    return fsutil.read_sidecar(
+        spark, path, _INDEX_META,
+        "ivf_index_write/lsh_index_write/semdedup_index_write",
+    )
 
-    from .. import fsutil
 
-    fsutil.recover_swap(spark, path)
-    try:
-        return _json.loads(fsutil.read_text(spark, f"{path}/{_INDEX_META}"))
-    except FileNotFoundError:
+def _index_meta(
+    spark: SparkSession, path: str, kind: str, centroids=None, why: str = ""
+) -> dict:
+    """The sidecar of an index of ``kind``, refused for any other kind
+    or, when ``centroids`` is given, for another quantizer (``why`` says
+    what using it would break)."""
+    meta = _read_index_meta(spark, path)
+    if meta.get("kind") != kind:
+        raise ValueError(f"index at {path} is {meta.get('kind')!r}, not {kind}")
+    if centroids is not None and meta.get("centroid_digest") != _centroid_digest(centroids):
         raise ValueError(
-            f"no {_INDEX_META} sidecar at {path}: index was not written by "
-            "ivf_index_write/lsh_index_write, cannot validate probe parameters"
-        ) from None
-    except ValueError as e:  # json.JSONDecodeError ⊂ ValueError
-        raise ValueError(
-            f"{_INDEX_META} sidecar at {path} is corrupt ({e}): likely a "
-            "crash mid-write by an older writer — rebuild the index"
-        ) from None
+            f"centroids do not match the ones the index at {path} was "
+            f"built with — {why}"
+        )
+    return meta
 
 
 def ivf_index_write(
@@ -1020,14 +1008,10 @@ def ivf_index_append(
     with ``["bucket"]``) — pinned by
     test_ivf_index_compact_bounds_files_and_keeps_results.
     """
-    meta = _read_index_meta(embeddings.sparkSession, path)
-    if meta.get("kind") != "ivf":
-        raise ValueError(f"index at {path} is {meta.get('kind')!r}, not ivf")
-    if meta.get("centroid_digest") != _centroid_digest(centroids):
-        raise ValueError(
-            f"centroids do not match the ones the index at {path} was "
-            "built with — refusing to append under a different quantizer"
-        )
+    _index_meta(
+        embeddings.sparkSession, path, "ivf", centroids,
+        "refusing to append under a different quantizer",
+    )
     ivf_assign(embeddings, centroids, id_col, vec_col).write.mode(
         "append"
     ).partitionBy("cluster").parquet(path)
@@ -1047,14 +1031,9 @@ def cosine_topk_ivf_index(
     partition filter on the cluster-partitioned layout, so the scan reads
     ~nprobe/n_centroids of the files. Train once (``ivf_train_centroids``),
     write once (``ivf_index_write``), probe per query."""
-    meta = _read_index_meta(spark, path)
-    if meta.get("kind") != "ivf":
-        raise ValueError(f"index at {path} is {meta.get('kind')!r}, not ivf")
-    if meta.get("centroid_digest") != _centroid_digest(centroids):
-        raise ValueError(
-            f"centroids do not match the ones the index at {path} was "
-            "built with — a probe would prune to the wrong clusters"
-        )
+    _index_meta(
+        spark, path, "ivf", centroids, "a probe would prune to the wrong clusters"
+    )
     probe_ids = _probe_clusters(query_vector, centroids, nprobe)
     scan = spark.read.parquet(path).filter(F.col("cluster").isin(probe_ids))
     return cosine_topk_bruteforce(
@@ -1099,9 +1078,7 @@ def lsh_index_append(
     the index wasn't built with) and append to the bucket-partitioned
     layout. Same contract as :func:`ivf_index_append`: batch ids must be
     new; each append touches only the partitions its vectors hash to."""
-    meta = _read_index_meta(embeddings.sparkSession, path)
-    if meta.get("kind") != "lsh":
-        raise ValueError(f"index at {path} is {meta.get('kind')!r}, not lsh")
+    meta = _index_meta(embeddings.sparkSession, path, "lsh")
     planes = _plane_matrix(meta["dim"], meta["planes"], meta["seed"])
     _assign_sign_buckets(embeddings, planes, id_col, vec_col).write.mode(
         "append"
@@ -1162,9 +1139,7 @@ def cosine_topk_lsh_index(
     ``nprobe`` directories out of 2^planes (multi-probe: the extra
     buckets are the lowest-margin bit flips, the standard recall knob
     that costs probes, not index copies)."""
-    meta = _read_index_meta(spark, path)
-    if meta.get("kind") != "lsh":
-        raise ValueError(f"index at {path} is {meta.get('kind')!r}, not lsh")
+    meta = _index_meta(spark, path, "lsh")
     built = (meta.get("dim"), meta.get("planes"), meta.get("seed"))
     probing = (len(query_vector), planes, seed)
     if built != probing:

@@ -306,7 +306,7 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "minhash_lsh_candidates",
     None,  # xxhash64-based — no portable oracle; recall unit-tested vs exact
-    # Jaccard, and the md5-keyed twin below is the family's hash-checked face
+    # Jaccard, and the md5 face below runs this same operator, hash-checked
     note="MinHash(32 hashes)+LSH(8 bands) candidate pairs; shuffle O(docs×bands)",
 )
 def minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,25 +340,24 @@ def minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY a.doc_id, b.doc_id
     """,
     note="the first hash-checked face of the approximate-dedup tier "
-    "(r12 VERDICT task 7, enabled by fold #4): the exact MinHash+LSH "
-    "band pipeline keyed by md5 — a hash family DuckDB ships — so the "
-    "oracle replays shingle -> 16 K-min lanes -> 4 band buckets -> "
-    "bucket self-join verbatim; production stays on the xxhash64 twin "
-    "(integer lanes beat hex strings across the shuffle), whose "
-    "candidate semantics this pins transitively (same pipeline, "
-    "different hash family)",
+    "(r12 VERDICT task 7, enabled by fold #4): minhash_lsh_candidates "
+    "itself with hash_family='md5' — a hash family DuckDB ships — so "
+    "the oracle replays shingle -> 16 K-min lanes -> 4 band buckets -> "
+    "bucket self-join verbatim through the shipped code; only the lane "
+    "and bucket expressions differ from the xxhash64 production query "
+    "(integer lanes beat hex strings across the shuffle)",
 )
 def minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = docs_table(spark, sf_dir)
-    return dedup.minhash_lsh_candidates_md5(
-        docs, n=3, num_hashes=16, bands=4
+    return dedup.minhash_lsh_candidates(
+        docs, n=3, num_hashes=16, bands=4, hash_family="md5"
     )
 
 
 @register(
     "simhash_near_duplicates",
-    None,  # xxhash64-based — no portable oracle; the md5-keyed twin
-    # below is the family's hash-checked face (r13 VERDICT task 4)
+    None,  # xxhash64-based — no portable oracle; the md5 face below
+    # runs this same operator, hash-checked (r13 VERDICT task 4)
     note="SimHash 64-bit signatures + block-permutation Hamming join; "
     "max_hamming=3 < blocks=4 so the pigeonhole recall guarantee holds "
     "(at distance d, at least one of blocks > d chunks is untouched)",
@@ -397,13 +396,13 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
     """,
     note="the SimHash family's hash-checked face (r13 VERDICT task 4, "
-    "fold #5 freed the slot): the exact tokenize -> per-bit majority "
-    "vote -> block-permutation join -> Hamming verify pipeline keyed "
-    "by md5 (token bit b = top bit of md5(w)'s hex char b+1 — one md5 "
-    "per token, 32 independent bits) so "
-    "the oracle replays it verbatim; production stays on the 64-bit "
-    "xxhash64 twin, whose candidate semantics this pins transitively "
-    "(same pipeline, different hash family). 32-bit signature / 8-bit "
+    "fold #5 freed the slot): simhash_near_duplicates itself with "
+    "hash_family='md5' — the shipped tokenize -> per-bit majority vote "
+    "-> block-permutation join -> Hamming verify code, with token bit "
+    "b = top bit of md5(w)'s hex char b+1 (one md5 per token, 32 "
+    "independent bits) so the oracle replays it verbatim; only the bit "
+    "expression and width differ from the 64-bit xxhash64 production "
+    "query. 32-bit signature / 8-bit "
     "chunks: 4-bit chunks would give every block only 16 bucket "
     "values, collapsing the candidate join into O(n^2/16) buckets at "
     "scale. Runs on a deterministic quarter of the corpus (doc_id%4=0, "
@@ -413,8 +412,8 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def simhash_near_dups_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = docs_table(spark, sf_dir).filter(F.col("doc_id") % 4 == 0)
-    return dedup.simhash_near_duplicates_md5(
-        docs, bits=32, max_hamming=3, blocks=4
+    return dedup.simhash_near_duplicates(
+        docs, max_hamming=3, blocks=4, hash_family="md5"
     )
 
 

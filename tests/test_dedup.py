@@ -82,8 +82,8 @@ def test_minhash_md5_twin_recall_and_exact_dup_guarantee(spark):
     }
     cand = {
         (r["doc_a"], r["doc_b"]): r["bands_in_common"]
-        for r in dedup.minhash_lsh_candidates_md5(
-            df, n=3, num_hashes=16, bands=4
+        for r in dedup.minhash_lsh_candidates(
+            df, n=3, num_hashes=16, bands=4, hash_family="md5"
         ).collect()
     }
     recall = len(exact & set(cand)) / len(exact)
@@ -95,14 +95,16 @@ def test_minhash_md5_twin_recall_and_exact_dup_guarantee(spark):
     )
     out = {
         (r["doc_a"], r["doc_b"]): r["bands_in_common"]
-        for r in dedup.minhash_lsh_candidates_md5(dup, bands=4).collect()
+        for r in dedup.minhash_lsh_candidates(
+            dup, num_hashes=16, bands=4, hash_family="md5"
+        ).collect()
     }
     assert out == {(1, 2): 4}  # all 4 bands; the 2-word doc emits nothing
 
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="divide"):
-        dedup.minhash_lsh_candidates_md5(dup, num_hashes=16, bands=5)
+        dedup.minhash_lsh_candidates(dup, num_hashes=16, bands=5, hash_family="md5")
 
 
 def test_simhash_md5_twin_identical_docs_and_guards(spark):
@@ -123,14 +125,14 @@ def test_simhash_md5_twin_identical_docs_and_guards(spark):
     )
     out = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in dedup.simhash_near_duplicates_md5(df).collect()
+        for r in dedup.simhash_near_duplicates(df, hash_family="md5").collect()
     }
     assert out.get((1, 2)) == 0
     assert (1, 3) not in out and (2, 3) not in out
     with _pytest.raises(ValueError, match="divide"):
-        dedup.simhash_near_duplicates_md5(df, bits=16, blocks=5)
+        dedup.simhash_near_duplicates(df, hash_family="md5", blocks=5)
     with _pytest.raises(ValueError, match="pigeonhole|recall"):
-        dedup.simhash_near_duplicates_md5(df, max_hamming=4, blocks=4)
+        dedup.simhash_near_duplicates(df, max_hamming=4, blocks=4, hash_family="md5")
 
 
 def test_simhash_md5_twin_duckdb_parity(spark):
@@ -171,24 +173,23 @@ def test_simhash_near_identical_docs_close(spark):
 def test_simhash_chunk_cap_subsets_and_bounds(spark):
     """The hot-chunk cap only ever REMOVES candidate pairs (subset
     property), and a cap of 0 removes them all; planted near-identical
-    pairs survive a generous cap because their shared chunks are cold."""
+    pairs survive a generous cap because their shared chunks are cold.
+    Both hash families share the cap."""
     df, planted = _corpus(spark)
-    full = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.simhash_near_duplicates(df, max_hamming=12, blocks=4, partial_recall=True).collect()
-    }
-    capped = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.simhash_near_duplicates(
-            df, max_hamming=12, blocks=4, max_chunk_df=10, partial_recall=True
-        ).collect()
-    }
-    assert capped <= full
-    assert sum(1 for p in planted if p in capped) >= len(planted) - 1
-    none_left = dedup.simhash_near_duplicates(
-        df, max_hamming=12, blocks=4, max_chunk_df=0, partial_recall=True
-    )
-    assert none_left.count() == 0
+    for fam in ("xxhash64", "md5"):
+        kw = dict(max_hamming=12, blocks=4, partial_recall=True, hash_family=fam)
+        full = {
+            (r["doc_a"], r["doc_b"])
+            for r in dedup.simhash_near_duplicates(df, **kw).collect()
+        }
+        capped = {
+            (r["doc_a"], r["doc_b"])
+            for r in dedup.simhash_near_duplicates(df, max_chunk_df=10, **kw).collect()
+        }
+        assert capped <= full
+        assert sum(1 for p in planted if p in capped) >= len(planted) - 1
+        none_left = dedup.simhash_near_duplicates(df, max_chunk_df=0, **kw)
+        assert none_left.count() == 0
 
 
 def test_hot_shingle_cap_bounds_join(spark):
@@ -849,30 +850,77 @@ def test_compact_index_one_file_per_partition_and_recovery(spark, tmp_path):
         dedup.compact_index(spark, str(tmp_path / "nope"), ["band"])
 
 
+def test_frozen_index_rows_golden_digests(spark):
+    """Indexes written by earlier code must stay probe-able, so the rows
+    each frozen index stores are pinned byte for byte: sha256 of the
+    sorted rows on a fixed corpus, digests taken before MinHash and
+    SimHash gained ``hash_family``. Parity tests cannot catch a changed
+    bucket formula, because both of their sides would change
+    together."""
+    import hashlib
+
+    df = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumped over the lazy dog"),
+            (3, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"),
+            (4, "a b"),
+            (5, "to be or not to be that is the question"),
+        ],
+        "doc_id long, text string",
+    )
+
+    def digest(rows):
+        text = "\n".join(repr(tuple(r)) for r in sorted(tuple(r) for r in rows))
+        return hashlib.sha256(text.encode()).hexdigest()
+
+    assert digest(dedup.minhash_band_rows(df).collect()) == (
+        "31b27c47aaa1789d4fc4ed464fdb70f0e55ffcbedb3ddcd7ad58f28893a5fa1c"
+    )
+    assert digest(
+        dedup._chunked_signatures(dedup.simhash_signatures(df), 4).collect()
+    ) == "fa8a111e7a10f7d185e643522cf56817c841a544c0e432e9fc528f39c28634d2"
+    assert digest(dedup.exact_digest_rows(df).collect()) == (
+        "43de497e929efbe8df37447e5c6b2a9f27850f1b74c3735727364e5873856708"
+    )
+
+
+def test_one_pipeline_per_dedup_family():
+    """Structure pin: the md5 faces are ``hash_family`` values of the
+    production operators, the hot-key count is written once under
+    operators/ (``_hot_keys``), and index sidecars are read and
+    validated only by ``fsutil.read_sidecar``."""
+    import re
+    from pathlib import Path
+
+    assert not hasattr(dedup, "minhash_lsh_candidates_md5")
+    assert not hasattr(dedup, "simhash_near_duplicates_md5")
+    ops = Path(dedup.__file__).parent
+    src = "".join(p.read_text() for p in sorted(ops.glob("*.py")))
+    hot_count = r"count\(F\.lit\(1\)\)\.alias\(\"\w+\"\)\)\s*\.filter\(F\.col\(\"\w+\"\) >"
+    assert len(re.findall(hot_count, src)) == 1
+    assert "is corrupt" not in src and "read_sidecar" in src
+
+
 def test_minhash_hot_bucket_cap_subsets_and_bounds(spark):
     """The MinHash hot-bucket cap mirrors SimHash's max_chunk_df: it
     only ever REMOVES candidate pairs (subset property), cap=0 removes
     everything, and planted near-dup pairs survive a generous cap (their
-    shared buckets are cold)."""
+    shared buckets are cold). Both hash families share the cap."""
     df, planted = _corpus(spark)
-    full = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.minhash_lsh_candidates(df, n=3, num_hashes=32, bands=8).collect()
-    }
-    capped = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.minhash_lsh_candidates(
-            df, n=3, num_hashes=32, bands=8, max_bucket_df=10
-        ).collect()
-    }
-    assert capped <= full
-    assert sum(1 for p in planted if p in capped) >= len(planted) - 1
-    assert (
-        dedup.minhash_lsh_candidates(
-            df, n=3, num_hashes=32, bands=8, max_bucket_df=0
-        ).count()
-        == 0
-    )
+    for fam in ("xxhash64", "md5"):
+        kw = dict(n=3, num_hashes=32, bands=8, hash_family=fam)
+        full = {
+            (r["doc_a"], r["doc_b"])
+            for r in dedup.minhash_lsh_candidates(df, **kw).collect()
+        }
+        capped = {
+            (r["doc_a"], r["doc_b"])
+            for r in dedup.minhash_lsh_candidates(df, max_bucket_df=10, **kw).collect()
+        }
+        assert capped <= full
+        assert sum(1 for p in planted if p in capped) >= len(planted) - 1
+        assert dedup.minhash_lsh_candidates(df, max_bucket_df=0, **kw).count() == 0
 
 
 def test_probe_caps_match_capped_batch_recompute(spark, tmp_path):

@@ -38,6 +38,45 @@ def test_exact_near_dup_finds_planted(spark):
     assert len(pairs) == len(planted)
 
 
+def test_exact_near_dup_keeps_pair_moved_over_threshold_by_quantization(spark):
+    """The exact operator verifies on DECIMAL(12,6)-quantized vectors,
+    so its candidate gemm must score the same quantized values: this
+    pair's raw float cosine sits 3e-6 under the threshold (below the
+    gemm's 1e-6 margin) while its exact decimal cosine reaches it."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    thr = 0.9
+    rng = np.random.default_rng(24)
+    a = rng.normal(0, 0.01, 64)
+    d = rng.normal(0, 0.01, 64)
+    d -= (d @ a) / (a @ a) * a  # orthogonal to a
+    # b at raw cosine thr - 3e-6 from a: cos = |a| / sqrt(|a|² + t²|d|²)
+    t = np.sqrt((a @ a) * (1 / (thr - 3e-6) ** 2 - 1) / (d @ d))
+    va = [float(x) for x in a.astype(np.float32)]
+    vb = [float(x) for x in (a + t * d).astype(np.float32)]
+
+    def q6(vec):
+        return [
+            Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+            for x in vec
+        ]
+
+    qa, qb = q6(va), q6(vb)
+    exact = float(sum(x * y for x, y in zip(qa, qb))) / math.sqrt(
+        float(sum(x * x for x in qa)) * float(sum(x * x for x in qb))
+    )
+    fa, fb = np.asarray(va), np.asarray(vb)
+    raw = float(fa @ fb / math.sqrt((fa @ fa) * (fb @ fb)))
+    assert raw < thr - 1e-6 <= thr <= exact  # the case this test is about
+
+    df = spark.createDataFrame([(1, va), (2, vb)], "vec_id long, embedding array<float>")
+    out = [tuple(r) for r in similarity.embedding_near_dup_exact(df, threshold=thr).collect()]
+    assert len(out) == 1 and out[0][:2] == (1, 2)
+    assert out[0][2] >= thr and abs(out[0][2] - exact) < 1e-12
+
+
 def test_exact_near_dup_block_count_invariant(spark):
     """The block-pair decomposition is partition math, not semantics:
     any ``blocks`` value yields the identical pair set (each unordered
