@@ -198,20 +198,6 @@ def train_unigram_lm(
         .agg(F.count(F.lit(1)).alias("c"))
         .cache()
     )
-    return _fit_unigram_from_counts(counts, vocab_size, add_k, unpersist=counts)
-
-
-def _fit_unigram_from_counts(
-    counts: DataFrame,
-    vocab_size: int,
-    add_k: float,
-    unpersist: DataFrame | None = None,
-) -> UnigramLM:
-    """Fit the bounded unigram model from a (word, c) count table
-    (cached by the caller). ``unpersist`` is released once the model
-    table has materialized — ``train_unigram_lm`` passes ``counts``
-    itself; callers fitting from a shared count stream (e.g. the
-    scale-A/B harness's experimental forms) pass their own cache."""
     top = counts.orderBy(F.desc("c"), F.asc("word")).limit(vocab_size)
     # ONE job for both scalars (r16: v was a separate top.count() —
     # |top| == min(vocab_size, |counts|), and n_total is the corpus
@@ -230,8 +216,7 @@ def _fit_unigram_from_counts(
     p = (F.col("c") + F.lit(add_k)) / F.lit(denom)
     table = top.select("word", F.log(p).alias("logp"), p.alias("p")).cache()
     table.count()
-    if unpersist is not None:
-        unpersist.unpersist()
+    counts.unpersist()
     import math
 
     oov_p = add_k / denom if denom > 0 else 0.0
@@ -349,13 +334,13 @@ def train_bigram_lm(
     one-pass form (every position re-emitted as a (NULL, word) struct
     row, concatenated with the pair structs, one combined aggregate)
     saved a corpus scan but was measured at 10x scale to cost ~2x the
-    executor CPU of the two-pass form (tools/bigram_trainer_ab.py at
-    /tmp/sf1: 61.5 s vs 31.4 s executor-time median, wall 5.7 vs 3.2 s;
-    models verified identical) — the per-word interpreted struct HOF
-    plus the wider (prev, word) shuffle key on the unigram slice dwarf
-    one extra columnar scan at any scale (guide §1.2: the scan it
-    removed was the cheap part). The pair stream itself is built with
-    ``zip_with`` over two shifted slices instead of
+    executor CPU of the two-pass form (SCALE.md §"r17: at-scale paired
+    A/B evidence", sf1: 61.5 s vs 31.4 s executor-time median, wall
+    5.7 vs 3.2 s; models verified identical) — the per-word
+    interpreted struct HOF plus the wider (prev, word) shuffle key on
+    the unigram slice dwarf one extra columnar scan at any scale (guide
+    §1.2: the scan it removed was the cheap part). The pair stream
+    itself is built with ``zip_with`` over two shifted slices instead of
     ``transform(sequence(...), element_at(...))`` — same values, ~10%
     less executor time (no index array, no per-element lookups).
     """

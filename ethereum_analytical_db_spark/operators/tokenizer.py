@@ -261,44 +261,6 @@ def apply_merges(sym_col, picks: list[tuple[str, str]]) -> F.Column:
     return F.aggregate(sym, F.array().cast("array<string>"), step)
 
 
-def touches_any_pick(sym_col, picks: list[tuple[str, str]]) -> F.Column:
-    """True iff the word's symbol array contains at least one adjacent
-    occurrence of a picked pair — i.e. this round's merges can change
-    the word at all. Struct-equality overlap between the word's
-    :func:`adjacent_pairs` and the batch as an array literal: exact (no
-    string-concatenation separator to collide with corpus text) and one
-    JVM expression regardless of batch size."""
-    lit_picks = F.array(
-        *[
-            F.struct(F.lit(l).alias("left_sym"), F.lit(r).alias("right_sym"))
-            for l, r in picks
-        ]
-    )
-    return F.arrays_overlap(adjacent_pairs(sym_col), lit_picks)
-
-
-# delta-mode lineage bound: wf's lazy checkpoint realizes (truncating
-# the RDD graph) only every this-many rounds — see the loop comment in
-# train_bpe. 16 bounds task-binary growth to ~160 KiB and graph depth
-# to ~160 stages, far from the ~1000-stage StackOverflow observed.
-_WF_TRUNCATE_EVERY = 16
-
-# pair_maintenance="auto" resolution: None = recount in every regime.
-# The delta structure was implemented AND measured against recount at
-# both ends (tools/bpe_pair_maintenance_ab.py, SCALE_NEWOPS_DETAIL):
-# 31k-word probe vocabularies (recount is sub-scheduling-floor; delta
-# 2.1-2.5x slower) and a driver-exceeding 27M-cell corpus at 192 AND
-# 1024 merges (recount 482.9 s vs delta 721.7 s at 1024/82 rounds —
-# 1.5x slower: every high-frequency pick touches a large fraction of
-# the vocabulary, so the "touched-words-only" delta explodes MORE pair
-# rows than the recount, plus a pair-table shuffle). Deltas only
-# amortize when picks touch a SPARSE slice — a regime none of the
-# measured corpora reach within realistic merge budgets. Set a cell
-# count here to re-enable delta above it if a future corpus measures
-# otherwise.
-_DELTA_MAINTENANCE_MIN_CELLS: int | None = None
-
-
 def select_merge_batch(
     candidates: list[tuple[str, str, int]],
     existing_symbols: set[str],
@@ -469,7 +431,7 @@ def select_merge_batch_relaxed(
     before it commits to picks far below that deferred value. 0.0
     (default) is the pure skip-and-continue scan; 1.0 never picks past
     the first interference (exact-prefix-like round counts). Measured
-    curve: tools/relaxed_quality_ab.py → SCALE.md."""
+    curve: SCALE.md §"r15: relaxed-mode quality floor"."""
     picks: list[tuple[str, str, int]] = []
     used: set[str] = set()
     best_skipped = 0
@@ -591,7 +553,6 @@ def train_bpe(
     split: str = " ",
     batch_merges: int = 64,
     exact_order: bool = True,
-    pair_maintenance: str = "auto",
     relaxed_min_pick_ratio: float = 0.5,
     stats: dict | None = None,
 ) -> list[tuple[str, str, int]]:
@@ -629,44 +590,21 @@ def train_bpe(
       is its quality floor — picks must stay within that ratio of the
       best interference-skipped candidate's frequency, ending the
       batch early rather than spending table slots far below a
-      deferred merge chain. Measured (tools/relaxed_quality_ab.py,
-      natural Zipf + adversarial corpora): 0.5 cuts the
+      deferred merge chain. Measured (SCALE.md §"r15: relaxed-mode
+      quality floor", natural Zipf + adversarial corpora): 0.5 cuts the
       equal-merge-budget token toll from +7-13% to ~+1% for ~25-50%
       more rounds; 0.0 restores the r14 pure scan. ``stats`` (optional
       dict) gets ``{"rounds": N, "path": ...}`` for observability.
     - ``"auto"`` (default): driver iff the symbol table fits
       ``driver_max_cells`` total characters (cells ≈ list slots; the
       default 20M is a few hundred MB of driver heap — raise it on a
-      big driver before falling back to distributed rounds).
-
-    ``pair_maintenance`` governs how the distributed loop keeps its
-    pair statistics: ``"delta"`` maintains a persistent pair table
-    exactly, applying per-round deltas from the touched words only —
-    the distributed fastBPE structure (r14 VERDICT task 2);
-    ``"recount"`` re-aggregates the whole vocabulary every round (the
-    pre-r15 loop). Both are exact and produce rank-for-rank identical
-    merges (pinned by tests/test_tokenizer.py). Measured
-    (tools/bpe_pair_maintenance_ab.py, SCALE_NEWOPS_DETAIL): recount
-    won EVERY regime — at the sf10/sf100 probe corpora (~31k-word
-    vocabularies) every recount is sub-scheduling-floor and delta's
-    extra per-round stages make it 2.1-2.5x slower (384 vs 180 s
-    exact, 54 vs 22 s relaxed at sf10); on a driver-exceeding 27M-cell
-    corpus delta is still 1.5x slower at a 1024-merge budget (721.7 vs
-    482.9 s, 82 rounds both), because high-frequency picks touch a
-    LARGE fraction of the vocabulary, so the "touched-only" delta
-    explodes more pair rows than the recount plus a pair-table
-    shuffle. ``"auto"`` (default) therefore resolves to recount (see
-    ``_DELTA_MAINTENANCE_MIN_CELLS``); delta remains callable for
-    corpora whose picks genuinely touch sparse slices."""
+      big driver before falling back to distributed rounds)."""
     if mode not in ("auto", "driver", "distributed"):
         raise ValueError(
             f"mode {mode!r}: expected 'auto', 'driver' or 'distributed'"
         )
-    if pair_maintenance not in ("auto", "delta", "recount"):
-        raise ValueError(
-            f"pair_maintenance {pair_maintenance!r}: expected 'auto', "
-            "'delta' or 'recount'"
-        )
+    if batch_merges < 1:
+        raise ValueError(f"batch_merges {batch_merges!r}: expected >= 1")
     wf = _materialize(
         word_frequencies(docs, text_col, split), materialize, eager=False
     )
@@ -713,33 +651,6 @@ def train_bpe(
         wf = wf.coalesce(parts)
     merges: list[tuple[str, str, int]] = []
     rounds = 0
-    # Incremental pair-count maintenance (r14 VERDICT task 2 — the
-    # distributed analogue of fastBPE's in-memory pair index): the pair
-    # table is EXACTLY maintainable under a batch of merges, because a
-    # merge only changes the pairs of words that contain a picked
-    # adjacency. Each round applies a delta — the touched words' old
-    # pairs negated plus their rewritten pairs — instead of
-    # re-exploding every symbol of every word (the old per-round
-    # corpus-vocabulary scan, tokenizer.py@r14:629-640). Per-round cost
-    # drops from O(total cells) explode+shuffle to a pair-table-sized
-    # groupBy plus two passes over the touched words only; integer
-    # sums make the maintained table bit-identical to a recount
-    # (pinned by test_tokenizer's delta-vs-recount parity test).
-    # ``pair_maintenance="recount"`` keeps the legacy recompute path
-    # for A/B measurement.
-    if pair_maintenance == "auto":
-        use_delta = (
-            _DELTA_MAINTENANCE_MIN_CELLS is not None
-            and cells > _DELTA_MAINTENANCE_MIN_CELLS
-        )
-    else:
-        use_delta = pair_maintenance == "delta"
-    pc = (
-        _materialize(symbol_pair_counts(wf), materialize, eager=False)
-        if use_delta
-        else None
-    )
-    rounds_since_truncate = 0
     while len(merges) < num_merges:
         fetch = min(batch_merges, num_merges - len(merges))
         # extra window rows cost nothing beyond the collect (the pair
@@ -750,7 +661,7 @@ def train_bpe(
         # 64-pick batches where 2× found ~5)
         window = fetch * (2 if exact_order else 8) + 1
         top = (
-            (pc if use_delta else symbol_pair_counts(wf))
+            symbol_pair_counts(wf)
             .orderBy(
                 F.col("pair_freq").desc(),
                 F.col("left_sym").asc(),
@@ -793,69 +704,14 @@ def train_bpe(
         if len(merges) >= num_merges:
             break  # no next round: building its state would be waste
         pick_pairs = [(l, r) for l, r, _ in picks]
-        if use_delta:
-            touched = touches_any_pick("symbols", pick_pairs)
-            touched_wf = wf.filter(touched)
-            old_neg = symbol_pair_counts(
-                touched_wf.withColumn("freq", -F.col("freq"))
-            )
-            new_pos = symbol_pair_counts(
-                touched_wf.withColumn(
-                    "symbols", apply_merges("symbols", pick_pairs)
-                )
-            )
-            pc = _materialize(
-                pc.unionByName(old_neg)
-                .unionByName(new_pos)
-                .groupBy("left_sym", "right_sym")
-                .agg(F.sum("pair_freq").alias("pair_freq"))
-                .filter(F.col("pair_freq") > 0),
-                materialize,
-                eager=False,
-            )
-            # rewrite gated on `touched`: apply_merges is an identity on
-            # untouched words but still costs the full fold per row —
-            # the WHEN skips it for the (at scale, vast) untouched
-            # majority. The cut is LAZY like the rest of the loop (its
-            # blocks persist the moment next round's pc job computes
-            # them), with one wrinkle: the per-round action is
-            # pc.collect(), and Spark's doCheckpoint recursion stops at
-            # the FIRST marked RDD (pc) — wf's lazy cuts below it never
-            # REALIZE as truncations, so the RDD graph (and each task's
-            # serialized binary, ~10 KiB/round) deepens until
-            # StackOverflowError near round 100 (observed on the sf10
-            # probe). An eager realize every _WF_TRUNCATE_EVERY rounds
-            # bounds the depth; it reads only cached blocks, so it costs
-            # one narrow job per K rounds, not a recompute. Making EVERY
-            # round eager instead was measured 2.3× slower end-to-end at
-            # sf10 (423 s vs 180 s recount) — the per-round floor there
-            # is job scheduling, and a second job per round doubles it.
-            rounds_since_truncate += 1
-            eager_now = rounds_since_truncate >= _WF_TRUNCATE_EVERY
-            if eager_now:
-                rounds_since_truncate = 0
-            wf = _materialize(
-                wf.withColumn(
-                    "symbols",
-                    F.when(
-                        touched, apply_merges("symbols", pick_pairs)
-                    ).otherwise(F.col("symbols")),
-                ),
-                materialize,
-                eager=eager_now,
-            )
-        else:
-            wf = _materialize(
-                wf.withColumn("symbols", apply_merges("symbols", pick_pairs)),
-                materialize,
-                eager=False,
-            )
+        wf = _materialize(
+            wf.withColumn("symbols", apply_merges("symbols", pick_pairs)),
+            materialize,
+            eager=False,
+        )
     if stats is not None:
         stats["rounds"] = rounds
         stats["path"] = "distributed"
-        # record the RESOLVED path, never the raw knob: "auto" would
-        # misreport whichever branch it resolved to (ADVICE r15)
-        stats["pair_maintenance"] = "delta" if use_delta else "recount"
     return merges
 
 

@@ -35,7 +35,7 @@ def test_stage_chain_and_monotonicity(spark, docs):
     assert all(a >= b for a, b in zip(counts, counts[1:]))
     assert counts[0] == docs.count()
     # stats mode attributes wall time per stage, aligned with stages
-    # (the breakdown behind tools/corpus_stage_breakdown.py)
+    # (the breakdown behind SCALE.md's "r12 stage-level attribution")
     assert [n for n, _ in report.stage_secs] == names
     assert all(s >= 0 for _, s in report.stage_secs)
     # the planted benchmark docs are gone

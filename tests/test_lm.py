@@ -320,10 +320,10 @@ def test_local_fs_path_rfc8089_forms():
 def test_bigram_fused_unigram_matches_standalone(spark, docs):
     """The bigram trainer's embedded unigram model must equal the
     standalone train_unigram_lm fit exactly (r16 pinned this for the
-    fused one-pass form; r17 reverted to two passes — tools/
-    bigram_trainer_ab.py measured the fused form at ~2x the executor
-    CPU at 10x scale — and the equality pin stays as the regression
-    guard for any future trainer reshaping)."""
+    fused one-pass form; r17 reverted to two passes — SCALE.md §"r17:
+    at-scale paired A/B evidence" measured the fused form at ~2x the
+    executor CPU at 10x scale — and the equality pin stays as the
+    regression guard for any future trainer reshaping)."""
     uni = train_unigram_lm(docs, vocab_size=V, add_k=K)
     big = train_bigram_lm(docs, vocab_size=V, bigram_size=500, add_k=K)
     got = sorted(map(tuple, big.unigram.table.collect()))

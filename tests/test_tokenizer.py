@@ -299,6 +299,7 @@ def test_train_bpe_distributed_batched_parity_random_corpora(spark):
         (7, "ab", 60, 40),
         (11, "abc", 120, 50),
         (23, "abcd", 150, 40),
+        (31, "abc", 120, 60),
     ]:
         rng = random.Random(seed)
         words = [
@@ -348,6 +349,7 @@ def test_train_bpe_distributed_batches_rounds_below_merges(spark):
     # merge usually involves the previous merge's token — inherently
     # serial); measured ~74 rounds on this corpus, ~2-4x reduction
     assert stats["rounds"] <= 100, stats
+    assert set(stats) == {"rounds", "path"}, stats
 
 
 def test_train_bpe_relaxed_order_batches_aggressively(spark):
@@ -361,9 +363,10 @@ def test_train_bpe_relaxed_order_batches_aggressively(spark):
     keeps batches from spending slots far below an interference-
     skipped merge chain: the equal-merge-budget toll on this corpus
     drops from +13% (r14 pure scan, 13 rounds) to ~+1% at ~20 rounds
-    (tools/relaxed_quality_ab.py). Pinned at +5% / 30 rounds so both a
-    quality regression and a round-count blowup trip; the 0.0 knob is
-    pinned separately to preserve the r14 behavior contract."""
+    (SCALE.md §"r15: relaxed-mode quality floor"). Pinned at +5% / 30
+    rounds so both a quality regression and a round-count blowup trip;
+    the 0.0 knob is pinned separately to preserve the r14 behavior
+    contract."""
     texts = _merge_rich_corpus()
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
@@ -502,6 +505,12 @@ def test_batched_selector_exactness_property():
 def test_train_bpe_rejects_unknown_mode(spark, docs):
     with pytest.raises(ValueError, match="mode"):
         tokenizer.train_bpe(docs, num_merges=2, mode="cluster")
+    # a non-positive batch used to fetch no candidates and return []
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="batch_merges"):
+            tokenizer.train_bpe(
+                docs, num_merges=2, mode="distributed", batch_merges=bad
+            )
 
 
 def test_split_regex_engine_divergent_patterns_rejected(spark, docs):
@@ -657,79 +666,6 @@ def test_encode_tolerates_null_text(spark):
     out = {r["doc_id"]: r for r in tokenizer.encode_bpe(df, merges).collect()}
     assert out[1]["bpe_tokens"] == [] and out[1]["n_tokens"] == 0
     assert out[0]["n_tokens"] >= 1
-
-
-def test_train_bpe_delta_pair_maintenance_matches_recount(spark):
-    """r14 VERDICT task 2: the incrementally-maintained pair table
-    (pair_maintenance='delta', the distributed fastBPE structure) must
-    be EXACTLY equivalent to re-aggregating the vocabulary every round
-    ('recount', the pre-r15 loop) — merge tables identical rank-for-
-    rank and frequency-for-frequency on a tie-dense corpus where one
-    stale count anywhere reorders picks — and both must match the
-    sequential reference."""
-    import random
-
-    rng = random.Random(31)
-    words = [
-        "".join(rng.choice("abc") for _ in range(rng.randint(2, 8)))
-        for _ in range(120)
-    ]
-    texts = [" ".join(rng.choice(words) for _ in range(15)) for _ in range(40)]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    kw = dict(num_merges=60, min_freq=1, mode="distributed", batch_merges=16)
-    s_delta: dict = {}
-    s_recount: dict = {}
-    got_delta = tokenizer.train_bpe(
-        docs, **kw, pair_maintenance="delta", stats=s_delta
-    )
-    got_recount = tokenizer.train_bpe(
-        docs, **kw, pair_maintenance="recount", stats=s_recount
-    )
-    assert got_delta == got_recount
-    assert got_delta == py_train_bpe(texts, num_merges=60, min_freq=1)
-    assert s_delta["pair_maintenance"] == "delta"
-    assert s_recount["pair_maintenance"] == "recount"
-    # the relaxed selector consumes the same maintained counts — its
-    # skip-and-continue picks must also be invariant to how the pair
-    # table is produced
-    relaxed_delta = tokenizer.train_bpe(
-        docs, **kw, exact_order=False, pair_maintenance="delta"
-    )
-    relaxed_recount = tokenizer.train_bpe(
-        docs, **kw, exact_order=False, pair_maintenance="recount"
-    )
-    assert relaxed_delta == relaxed_recount
-    with pytest.raises(ValueError, match="pair_maintenance"):
-        tokenizer.train_bpe(docs, num_merges=2, pair_maintenance="nope")
-
-
-def test_touches_any_pick_detects_adjacency_only(spark):
-    """The delta path's touched-word gate: a word is touched iff a
-    picked pair occurs ADJACENTLY — containing both symbols apart must
-    not count (its pairs are unchanged by the merge)."""
-    df = spark.createDataFrame(
-        [
-            (0, ["a", "b", "c"]),   # (a,b) adjacent -> touched
-            (1, ["a", "c", "b"]),   # a and b present, never adjacent
-            (2, ["b", "a"]),        # reversed order only
-            (3, ["x", "c", "d"]),   # (c,d) adjacent -> touched
-            (4, ["a"]),             # single symbol, no pairs
-            (5, []),                # empty
-        ],
-        "i long, symbols array<string>",
-    )
-    got = {
-        r["i"]: r["t"]
-        for r in df.select(
-            "i",
-            tokenizer.touches_any_pick(
-                "symbols", [("a", "b"), ("c", "d")]
-            ).alias("t"),
-        ).collect()
-    }
-    assert got == {0: True, 1: False, 2: False, 3: True, 4: False, 5: False}
 
 
 def test_relaxed_selector_ratio_floor_properties():

@@ -172,8 +172,7 @@ def run_scale(spark, sf_dir: str, label: str) -> dict:
 def _evict_page_cache() -> None:
     """sync + drop_caches(3): every timed read after this hits storage.
     Clean-cache-only eviction — reversible, no data risk — but it IS
-    machine-wide, so cold runs must own the box (same helper contract
-    as tools/exact_probe_ab.py --cold)."""
+    machine-wide, so cold runs must own the box."""
     os.sync()
     with open("/proc/sys/vm/drop_caches", "w") as f:
         f.write("3\n")
