@@ -85,7 +85,7 @@ def extract_blocks(wh: Warehouse, factory, head: int) -> None:
         want = want.join(have, "number", "left_anti")
     if want.isEmpty():
         return
-    blocks = rpc.fetch_block_timestamps(wh.spark, want, factory)
+    blocks = rpc.fetch_block_timestamps(want, factory)
     wh.write("block", blocks)
 
 
@@ -106,11 +106,11 @@ def extract_traces(wh: Warehouse, factory) -> None:
     )
     if todo.isEmpty():
         return
-    raw = rpc.fetch_traces(wh.spark, todo.select("number"), factory)
+    raw = rpc.fetch_traces(todo, factory)
     # chain-transaction gasPrice merged onto each tx's top-level trace
     # row (reference _merge_block) — without it the balances API's fee
     # aggregates are silently zero
-    txs = rpc.fetch_block_transactions(wh.spark, todo.select("number"), factory)
+    txs = rpc.fetch_block_transactions(todo, factory)
     decoded = rpc.merge_transaction_gas(rpc.decode_traces(raw), txs)
     # block-range hive partitioning: incremental sync appends only tail
     # directories and block predicates prune at the scan (catalog.py
@@ -134,7 +134,7 @@ def extract_events(wh: Warehouse, factory, range_size: int) -> None:
     # frame form: ranges go scan→task without a driver round-trip (a
     # full-chain backfill at range_size=5 is millions of ranges)
     ranges = inc.block_ranges_frame(todo, range_size)
-    events = rpc.fetch_events(wh.spark, ranges, factory)
+    events = rpc.fetch_events(ranges, factory)
     wh.write("event", events, block_partition="blockNumber")
     inc.write_block_flags(wh, todo.select("id"), "events_extracted")
 
@@ -174,15 +174,6 @@ EVENT_INPUT_FLAG = "event_inputs_decoded_block"
 ENRICH_PAGE_SIZE = 1000
 
 
-def _pages(df, per: int = ENRICH_PAGE_SIZE):
-    """Stream a (small-schema) frame to the driver one bounded page at a
-    time (round-5 judge finding re: full-table collects) — delegates to
-    the shared cursor primitive, which also prefetches the next
-    partition so the HTTP work of one page overlaps the fetch of the
-    next."""
-    yield from paginate(df, per)
-
-
 def extract_tokens(wh: Warehouse, call, tokens_meta: dict | None = None) -> None:
     """Reference extract-tokens (operations/contract_methods.py:72-114):
     ERC-20-flagged contracts not yet described (anti-join on
@@ -214,7 +205,7 @@ def extract_tokens(wh: Warehouse, call, tokens_meta: dict | None = None) -> None
     # page of addresses + fetched rows at a time, never the full dim —
     # each page upserts independently, so a crash resumes at the
     # anti-join above (already-described contracts drop out)
-    for page in _pages(erc20, ENRICH_PAGE_SIZE):
+    for page in paginate(erc20, ENRICH_PAGE_SIZE):
         addresses = [r["address"] for r in page]
         desc = enrich.read_contract_constants(wh.spark, addresses, call)
         out = desc.select(
@@ -251,7 +242,7 @@ def download_abis(wh: Warehouse, fetch_abi) -> None:
     # paged like extract_tokens: one page of addresses on the driver at
     # a time; abi_extracted marks each attempt so a crash mid-pass
     # resumes at the anti-join without refetching finished pages
-    for page in _pages(todo, ENRICH_PAGE_SIZE):
+    for page in paginate(todo, ENRICH_PAGE_SIZE):
         addresses = [r["address"] for r in page]
         wh.write(
             "contract_abi",
@@ -259,88 +250,51 @@ def download_abis(wh: Warehouse, fetch_abi) -> None:
         )
 
 
-def _abi_dim(wh: Warehouse):
-    """J3: ABI'd contract dim as a DATAFRAME (id lowered, abi JSON).
+def _parse_inputs(wh: Warehouse, source: str, stage: str, flag: str, keep,
+                  addr_col: str, input_expr, include_events: bool,
+                  out_table: str) -> None:
+    """One parse-inputs stage: ``source`` rows passing ``keep`` that
+    target an ABI'd contract, sliced to the per-contract watermark
+    window (T2, ``inc.watermark_slice``) below the ``stage`` flag's
+    high-water mark, decoded by the selector of ``input_expr`` against
+    the target's ABI (F9/X2) → ``out_table``, then ``flag`` advances.
 
-    Never a driver dict: at chain scale the verified-contract dim is
-    ~10⁷ contracts × KBs of ABI JSON — GBs that must stay distributed
-    (the reference pages it, operations/inputs.py:131-151; round-5 judge
-    finding). Ids are lowercased — the ingest path normalizes addresses
-    (F8), but an external writer may land checksummed ids; every
-    comparison in the parse stages is on the lowered form so a
-    mixed-case id can never be silently skipped while its watermark
-    still advances."""
-    if not wh.exists("contract_abi"):
-        return None
-    # dedup AFTER lowering (ANY-join agg form): FINAL dedup upstream
-    # keys on the raw id, so '0xAB…' and '0xab…' both survive it and
-    # would double every joined fact row downstream; max() picks one
-    # deterministically
-    return (
-        wh.read("contract_abi")
-        .filter(F.col("abi").isNotNull())
-        .select(F.lower(F.col("id")).alias("id"), "abi")
-        .groupBy("id")
-        .agg(F.max("abi").alias("abi"))
-    )
-
-
-def _watermark_slice(wh, rows, todo, flag, max_block, addr_col):
-    """P4/J2/T2: rows targeting a to-do contract, above that contract's
-    per-contract watermark, at or below the global high-water mark. The
-    reference compiles OR-chains grouped by equal watermark
-    (utils.py:119-161); here ``todo`` — the (address → watermark) dim
-    from :func:`_parse_inputs_todo` — rides as ONE equi-join: AQE
-    broadcasts it while it is dim-sized and falls back to a shuffled
-    join if it ever isn't, and no address list is inlined into the plan
-    or materialized on the driver. Address comparison is
-    case-normalized (see _abi_dim)."""
-    wm = todo.select(
-        F.col("id").alias("wm_id"), F.col("last_block").alias("last_block")
-    )
-    lowered = F.lower(rows[addr_col])
-    return (
-        rows.join(wm, lowered == F.col("wm_id"), "inner")
-        .filter(
-            (F.col("last_block").isNull() | (F.col("blockNumber") > F.col("last_block")))
-            & (F.col("blockNumber") <= F.lit(max_block))
+    The ABI dim stays a DATAFRAME, never a driver dict: at chain scale
+    the verified-contract dim is ~10⁷ contracts × KBs of ABI JSON — GBs
+    that must stay distributed (the reference pages it,
+    operations/inputs.py:131-151)."""
+    if not wh.exists("contract_abi") or not wh.exists(source):
+        return
+    max_block = inc.max_flagged_block(_flags(wh), stage)
+    if max_block is None:
+        return
+    abis = wh.read("contract_abi")
+    # cached: the todo dim feeds the emptiness check, the slice join,
+    # and the watermark advance — one materialization, never collected
+    todo = inc.parse_inputs_todo(
+        wh, abis.filter(F.col("abi").isNotNull()), flag, max_block
+    ).cache()
+    try:
+        if todo.isEmpty():
+            return
+        rows = inc.watermark_slice(
+            wh.read(source).filter(keep), todo, max_block, addr_col
+        ).select("id", addr_col, input_expr.alias("_input"))
+        decoded = abi_fn.decode_inputs_joined(
+            rows, abis, input_col="_input", address_col=addr_col,
+            include_events=include_events,
         )
-        .drop("wm_id")
-        .drop("last_block")
-    )
-
-
-def _parse_inputs_todo(wh, abi_ids, flag, max_block):
-    """(id, last_block) for contracts whose watermark is behind
-    ``max_block`` (last_block NULL = never processed), as a DataFrame —
-    a left join of the ABI'd ids against the watermark table, nothing
-    driver-side. An empty frame = the pass is a no-op: nothing is
-    decoded, nothing is appended, no watermark rows are rewritten (a
-    looping sync would otherwise grow contract_block by |contracts|
-    physical rows per pass)."""
-    todo = abi_ids.select("id")
-    if wh.exists("contract_block"):
-        wm = inc.contract_watermarks(wh.read("contract_block"), flag).select(
-            F.lower(F.col("id")).alias("id"), "last_block"
+        out = decoded.filter(F.col("decoded").isNotNull()).select(
+            "id",
+            F.col("decoded.name").alias("name"),
+            F.col("decoded.params_type").alias("params_type"),
+            F.col("decoded.params_value").alias("params_value"),
         )
-        todo = todo.join(wm, "id", "left")
-    else:
-        todo = todo.withColumn("last_block", F.lit(None).cast("long"))
-    return todo.filter(
-        F.col("last_block").isNull() | (F.col("last_block") < F.lit(max_block))
-    )
-
-
-def _advance_watermarks(wh, todo, flag, max_block):
-    """T2 write side AFTER the data write (crash-safe resume: a crash
-    between data and watermark re-decodes, never skips — reference
-    decode_inputs, operations/inputs.py:196-207). Only the contracts
-    that actually moved (the ``todo`` frame) are rewritten."""
-    inc.save_contract_watermarks(
-        wh,
-        todo.select("id", F.lit(max_block).cast("long").alias("value")),
-        flag,
-    )
+        if not out.isEmpty():
+            wh.write(out_table, out)
+        inc.advance_watermarks(wh, todo, flag, max_block)
+    finally:
+        todo.unpersist()
 
 
 def parse_transactions_inputs(wh: Warehouse) -> None:
@@ -349,36 +303,9 @@ def parse_transactions_inputs(wh: Warehouse) -> None:
     callType='call' AND error IS NULL, inputs.py:217-220), per-contract
     incremental slice, Arrow-batched selector decode (F9/X2) →
     transaction_input."""
-    abi_dim = _abi_dim(wh)
-    if abi_dim is None or not wh.exists("internal_transaction"):
-        return
-    max_block = inc.max_flagged_block(_flags(wh), "traces_extracted")
-    if max_block is None:
-        return
-    # cached: the todo dim feeds the emptiness check, the slice join,
-    # and the watermark advance — one materialization, never collected
-    todo = _parse_inputs_todo(wh, abi_dim, TX_INPUT_FLAG, max_block).cache()
-    try:
-        if todo.isEmpty():
-            return
-        txs = wh.read("internal_transaction").filter(
-            (F.col("callType") == "call")
-            & F.col("error").isNull()
-            & F.col("input").isNotNull()
-        )
-        sliced = _watermark_slice(wh, txs, todo, TX_INPUT_FLAG, max_block, "to")
-        decoded = abi_fn.decode_inputs_joined(sliced, abi_dim, address_col="to")
-        out = decoded.filter(F.col("decoded").isNotNull()).select(
-            "id",
-            F.col("decoded.name").alias("name"),
-            F.col("decoded.params_type").alias("params_type"),
-            F.col("decoded.params_value").alias("params_value"),
-        )
-        if not out.isEmpty():
-            wh.write("transaction_input", out)
-        _advance_watermarks(wh, todo, TX_INPUT_FLAG, max_block)
-    finally:
-        todo.unpersist()
+    keep = (F.col("callType") == "call") & F.col("error").isNull() & F.col("input").isNotNull()
+    _parse_inputs(wh, "internal_transaction", "traces_extracted", TX_INPUT_FLAG,
+                  keep, "to", F.col("input"), False, "transaction_input")
 
 
 def parse_events_inputs(wh: Warehouse) -> None:
@@ -387,47 +314,19 @@ def parse_events_inputs(wh: Warehouse) -> None:
     (topic0[0:10] ++ topics[1:] ++ data, F9 event pseudo-input) and
     decoded against the EMITTING contract's ABI, event entries included
     (inputs.py:38-39)."""
-    abi_dim = _abi_dim(wh)
-    if abi_dim is None or not wh.exists("event"):
-        return
-    max_block = inc.max_flagged_block(_flags(wh), "events_extracted")
-    if max_block is None:
-        return
-    todo = _parse_inputs_todo(wh, abi_dim, EVENT_INPUT_FLAG, max_block).cache()
-    try:
-        if todo.isEmpty():
-            return
-        ev = wh.read("event").filter(F.col("id").isNotNull())
-        sliced = _watermark_slice(wh, ev, todo, EVENT_INPUT_FLAG, max_block, "address")
-        pseudo = F.concat(
-            F.substring(F.get(F.col("topics"), 0), 1, 10),
-            F.array_join(
-                F.transform(
-                    F.slice(F.col("topics"), 2, F.greatest(F.size("topics") - 1, F.lit(0))),
-                    lambda t: t.substr(F.lit(3), F.length(t)),  # strip '0x'
-                ),
-                "",
+    pseudo = F.concat(
+        F.substring(F.get(F.col("topics"), 0), 1, 10),
+        F.array_join(
+            F.transform(
+                F.slice(F.col("topics"), 2, F.greatest(F.size("topics") - 1, F.lit(0))),
+                lambda t: t.substr(F.lit(3), F.length(t)),  # strip '0x'
             ),
-            F.coalesce(F.col("data").substr(F.lit(3), F.length("data")), F.lit("")),
-        )
-        decoded = abi_fn.decode_inputs_joined(
-            sliced.withColumn("pseudo_input", pseudo),
-            abi_dim,
-            input_col="pseudo_input",
-            address_col="address",
-            include_events=True,
-        )
-        out = decoded.filter(F.col("decoded").isNotNull()).select(
-            "id",
-            F.col("decoded.name").alias("name"),
-            F.col("decoded.params_type").alias("params_type"),
-            F.col("decoded.params_value").alias("params_value"),
-        )
-        if not out.isEmpty():
-            wh.write("event_input", out)
-        _advance_watermarks(wh, todo, EVENT_INPUT_FLAG, max_block)
-    finally:
-        todo.unpersist()
+            "",
+        ),
+        F.coalesce(F.col("data").substr(F.lit(3), F.length("data")), F.lit("")),
+    )
+    _parse_inputs(wh, "event", "events_extracted", EVENT_INPUT_FLAG,
+                  F.col("id").isNotNull(), "address", pseudo, True, "event_input")
 
 
 def download_prices(wh: Warehouse, fetch_history) -> None:

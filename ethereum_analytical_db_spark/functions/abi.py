@@ -12,7 +12,8 @@ ABI head/tail encoding (no eth_abi dependency — the container doesn't
 ship it), wrapped in an Arrow-batched pandas UDF: the Python work rides
 one vectorized transfer per batch instead of per-row round trips, and
 scales out with task parallelism (the Pool analogue). The ABI registry
-{address → selector table} is broadcast to executors.
+(address, ABI JSON) is joined to the rows as a DataFrame and compiled to
+selector tables per contract on the executors.
 
 Supported types: uint<N>/int<N>, address, bool, bytes<N>, fixed-size
 and dynamic arrays thereof, string, bytes — everything the reference's
@@ -26,7 +27,7 @@ import json
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .keccak import selector as keccak_selector
@@ -182,45 +183,6 @@ def event_pseudo_input(topics: list[str], data: str | None) -> str:
     return head + rest + (data or "0x")[2:]
 
 
-def decode_inputs(
-    df: DataFrame,
-    abis_by_address: dict[str, str],
-    input_col: str = "input",
-    address_col: str = "to",
-    out_col: str = "decoded",
-    include_events: bool = False,
-) -> DataFrame:
-    """F9/X2: decode calldata rows against each target contract's ABI.
-
-    ``abis_by_address`` (address → ABI JSON) is precompiled to selector
-    tables and broadcast; decoding runs in Arrow-batched pandas with no
-    shuffle (narrow transformation). ``include_events``: index event
-    entries too (the parse-events-inputs path over pseudo-calldata).
-    """
-    tables = {
-        addr.lower(): selector_table(abi, include_events=include_events)
-        for addr, abi in abis_by_address.items()
-    }
-    sc = df.sparkSession.sparkContext
-    btables = sc.broadcast(tables)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tbl = btables.value
-        for pdf in batches:
-            decoded = []
-            for inp, addr in zip(pdf[input_col], pdf[address_col]):
-                sel = tbl.get((addr or "").lower())
-                decoded.append(decode_input_py(inp, sel) if sel else None)
-            pdf = pdf.copy()
-            pdf[out_col] = decoded
-            yield pdf
-
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    return df.mapInPandas(run, schema=f"{out_schema}, {out_col} {DECODED_DDL}")
-
-
 def decode_inputs_joined(
     df: DataFrame,
     abi_df: DataFrame,
@@ -231,14 +193,11 @@ def decode_inputs_joined(
     abi_id_col: str = "id",
     abi_col: str = "abi",
 ) -> DataFrame:
-    """F9/X2 at dim scale: the ABI registry rides as a JOINED DataFrame,
-    never a driver dict.
-
-    ``decode_inputs`` broadcasts {address → ABI} built on the driver —
-    fine for thousands of contracts, but the full verified-contract dim
-    (~10⁷ contracts × KBs of ABI JSON at chain scale) must not be
-    collected (round-5 judge finding; the reference pages it instead,
-    operations/inputs.py:131-151). Here:
+    """F9/X2: decode calldata rows against each target contract's ABI.
+    The ABI registry ``abi_df`` (id, abi) rides as a JOINED DataFrame,
+    never a driver dict: the full verified-contract dim (~10⁷ contracts
+    × KBs of ABI JSON at chain scale) must not be collected (the
+    reference pages it instead, operations/inputs.py:131-151). Here:
 
     - rows inner-join the (id, abi) dim on the lowered address —
       Catalyst/AQE picks broadcast for a small dim and a shuffled hash /
@@ -247,17 +206,19 @@ def decode_inputs_joined(
       (SMJ output is key-sorted; hash joins cluster by key), so the
       selector table is compiled per-contract via a small per-partition
       memo instead of per-row keccak work;
-    - the inner join drops rows without an ABI — exactly the rows
-      ``decode_inputs`` would decode to NULL and the caller filters out.
+    - the inner join drops rows without an ABI (no NULL-decoded row is
+      emitted for them); unknown selectors decode to NULL.
+    ``include_events``: index event entries too (the parse-events-inputs
+    path over pseudo-calldata).
     """
     addr_lower = F.lower(F.col(address_col))
     # ANY-join-style dedup AFTER lowercasing: case-variant duplicate ids
     # ('0xAB…' from a checksummed external writer next to '0xab…')
-    # collapse to the same key, and an un-deduped dim would emit — and
-    # decode, and write — every matching fact row once per variant. The
-    # agg form collapses duplicates map-side before the shuffle; max()
-    # is the deterministic pick (the driver-dict path kept "last seen",
-    # which was iteration-order luck).
+    # collapse to the same key — FINAL dedup upstream keys on the raw id,
+    # so both survive it — and an un-deduped dim would emit, decode and
+    # write every matching fact row once per variant. The agg form
+    # collapses duplicates map-side before the shuffle; max() is the
+    # deterministic pick.
     dim = (
         abi_df.filter(F.col(abi_col).isNotNull())
         .select(

@@ -345,6 +345,6 @@ def union_all_universe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `compat_notebook_gas` carries the SAME integer-divide bucketing
 # (toInt64(blockNumber/1000)*1000 in the `g` CTE, hash-checked against
 # DuckDB every round), and the range micro-batch operator itself
-# (`streaming/incremental.py` block_ranges) keeps its dedicated pytest
+# (`streaming/incremental.py` block_ranges_frame) keeps its dedicated pytest
 # coverage. The freed oracle slot promotes `simhash_near_duplicates_md5`
 # (plans/pipeline.py) — the SimHash family's first hash-checked face.

@@ -25,11 +25,18 @@ import urllib.request
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions import ethereum as eth_fn
 from ..operators.traces import assign_trace_ids, propagate_parent_errors
+
+# requests per JSON-RPC batch POST: real nodes cap batch sizes, so a
+# backfill partition of thousands of blocks goes out in bounded POSTs
+RPC_BATCH_SIZE = 10
+# block 0 has no on-node timestamp (reference config.py:61 ETHEREUM_START_DATE)
+GENESIS_TS = "2015-07-30 15:26:13"
 
 # trace rows come back flattened to these fields (reference
 # operations/internal_transactions.py:276-303 _preprocess)
@@ -157,6 +164,11 @@ class FileJsonRpcTransport:
         return out
 
 
+def _hex_quantity(c):
+    """0x-hex JSON-RPC quantity → decimal string (unsigned 64-bit conv)."""
+    return F.conv(F.regexp_replace(c, "^0x", ""), 16, 10)
+
+
 def _post_matched(transport, reqs: list[dict]) -> list[dict]:
     """POST a batch and realign responses to request order by ``id`` —
     JSON-RPC 2.0 batch responses are NOT guaranteed ordered, so a
@@ -185,6 +197,36 @@ def _post_matched(transport, reqs: list[dict]) -> list[dict]:
             )
         out.append(resp)
     return out
+
+
+def _rpc_frame(keys, make_transport, method, params, rows, ddl) -> DataFrame:
+    """The one JSON-RPC fetch loop: ``mapInPandas`` over ``keys`` (a
+    row's integer columns are one request key), ``RPC_BATCH_SIZE``
+    requests per POST through :func:`_post_matched`. ``params(*key)``
+    builds a request's params; ``rows(result, *key)`` yields output rows
+    (tuples in ``ddl`` order or dicts keyed by its names). The transport
+    is built on a task's first non-empty batch, so the mostly-empty
+    tasks of a small incremental tick never dial the endpoint."""
+    cols = StructType.fromDDL(ddl).names
+
+    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        transport = None
+        for pdf in batches:
+            out: list = []
+            todo = [tuple(int(v) for v in k) for k in pdf.itertuples(index=False)]
+            if todo and transport is None:
+                transport = make_transport()
+            for off in range(0, len(todo), RPC_BATCH_SIZE):
+                chunk = todo[off : off + RPC_BATCH_SIZE]
+                reqs = [
+                    {"jsonrpc": "2.0", "id": i, "method": method, "params": params(*k)}
+                    for i, k in enumerate(chunk)
+                ]
+                for k, resp in zip(chunk, _post_matched(transport, reqs)):
+                    out.extend(rows(resp.get("result"), *k))
+            yield pd.DataFrame(out, columns=cols)
+
+    return keys.mapInPandas(fetch, schema=ddl)
 
 
 def _flatten_trace(block_number: int, tx_hash: str | None, raw: dict) -> dict:
@@ -221,45 +263,23 @@ def _flatten_trace(block_number: int, tx_hash: str | None, raw: dict) -> dict:
     }
 
 
-def fetch_traces(
-    spark: SparkSession,
-    block_numbers: DataFrame,
-    make_transport,
-    batch_size: int = 10,
-) -> DataFrame:
+def fetch_traces(block_numbers: DataFrame, make_transport) -> DataFrame:
     """S6: trace_block per block, batched, partition-parallel.
 
     ``block_numbers``: DataFrame with a ``number`` column.
     ``make_transport``: picklable zero-arg factory (or factory taking a
     block number via pick_host composition) returning a transport.
     """
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = make_transport()
-        for pdf in batches:
-            nums = [int(n) for n in pdf["number"]]
-            rows: list[dict] = []
-            for off in range(0, len(nums), batch_size):
-                chunk = nums[off : off + batch_size]
-                reqs = [
-                    {
-                        "jsonrpc": "2.0",
-                        "id": i,
-                        "method": "trace_block",
-                        "params": [hex(n)],
-                    }
-                    for i, n in enumerate(chunk)
-                ]
-                for n, resp in zip(chunk, _post_matched(transport, reqs)):
-                    for raw in resp.get("result") or []:
-                        rows.append(
-                            _flatten_trace(n, raw.get("transactionHash"), raw)
-                        )
-            yield pd.DataFrame(rows, columns=TRACE_FIELDS) if rows else pd.DataFrame(
-                {f: pd.Series(dtype="object") for f in TRACE_FIELDS}
-            )
-
-    return block_numbers.mapInPandas(fetch, schema=TRACE_DDL)
+    return _rpc_frame(
+        block_numbers.select("number"),
+        make_transport,
+        "trace_block",
+        lambda n: [hex(n)],
+        lambda result, n: (
+            _flatten_trace(n, raw.get("transactionHash"), raw) for raw in result or []
+        ),
+        TRACE_DDL,
+    )
 
 
 def decode_traces(raw: DataFrame) -> DataFrame:
@@ -277,7 +297,6 @@ def decode_traces(raw: DataFrame) -> DataFrame:
     blockHash`` — a flat null partition would re-mint the same bare
     '0..N' ids every ingest batch and last-write-wins would replace
     earlier blocks' reward rows."""
-    hexv = lambda c: F.conv(F.regexp_replace(c, "^0x", ""), 16, 10)  # noqa: E731
     word = F.concat(
         F.lit("0x"),
         F.lpad(F.regexp_replace(F.col("value_hex"), "^0x", ""), 64, "0"),
@@ -285,7 +304,7 @@ def decode_traces(raw: DataFrame) -> DataFrame:
     df = raw.withColumn(
         "value",
         F.when(F.col("value_hex").isNotNull(), eth_fn.hex_word_to_float(word, 18)),
-    ).withColumn("gasUsed", hexv(F.col("gasUsed_hex")).cast("int"))
+    ).withColumn("gasUsed", _hex_quantity(F.col("gasUsed_hex")).cast("int"))
     df = df.withColumn(
         "_id_key", F.coalesce(F.col("transactionHash"), F.col("blockHash"))
     )
@@ -304,52 +323,24 @@ def decode_traces(raw: DataFrame) -> DataFrame:
 TX_GAS_DDL = "blockNumber long, blockHash string, hash string, gasPrice_hex string"
 
 
-def fetch_block_transactions(
-    spark: SparkSession,
-    block_numbers: DataFrame,
-    make_transport,
-    batch_size: int = 10,
-) -> DataFrame:
+def fetch_block_transactions(block_numbers: DataFrame, make_transport) -> DataFrame:
     """S7: chain transactions per block — eth_getBlockByNumber(n, full=
     True), the dim the reference merges gasPrice from
     (_make_transactions_requests + _merge_block,
     internal_transactions.py:151-202). Without it every ingested trace
     row has NULL gasPrice and the balance API's fee / fee_reward
     aggregates silently collapse to zero."""
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = make_transport()
-        cols = ["blockNumber", "blockHash", "hash", "gasPrice_hex"]
-        for pdf in batches:
-            nums = [int(n) for n in pdf["number"]]
-            rows: list[dict] = []
-            for off in range(0, len(nums), batch_size):
-                chunk = nums[off : off + batch_size]
-                reqs = [
-                    {
-                        "jsonrpc": "2.0",
-                        "id": i,
-                        "method": "eth_getBlockByNumber",
-                        "params": [hex(n), True],
-                    }
-                    for i, n in enumerate(chunk)
-                ]
-                for n, resp in zip(chunk, _post_matched(transport, reqs)):
-                    res = resp.get("result") or {}
-                    for tx in res.get("transactions") or []:
-                        rows.append(
-                            {
-                                "blockNumber": n,
-                                "blockHash": tx.get("blockHash"),
-                                "hash": tx.get("hash"),
-                                "gasPrice_hex": tx.get("gasPrice"),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {f: pd.Series(dtype="object") for f in cols}
-            )
-
-    return block_numbers.mapInPandas(fetch, schema=TX_GAS_DDL)
+    return _rpc_frame(
+        block_numbers.select("number"),
+        make_transport,
+        "eth_getBlockByNumber",
+        lambda n: [hex(n), True],
+        lambda result, n: (
+            (n, tx.get("blockHash"), tx.get("hash"), tx.get("gasPrice"))
+            for tx in (result or {}).get("transactions") or []
+        ),
+        TX_GAS_DDL,
+    )
 
 
 def merge_transaction_gas(traces: DataFrame, txs: DataFrame) -> DataFrame:
@@ -364,11 +355,9 @@ def merge_transaction_gas(traces: DataFrame, txs: DataFrame) -> DataFrame:
     dim = txs.select(
         F.col("hash").alias("_tx_hash"),
         F.col("blockHash").alias("_tx_bh"),
-        (
-            F.conv(F.regexp_replace("gasPrice_hex", "^0x", ""), 16, 10)
-            .cast("double")
-            / F.lit(1e18)
-        ).alias("_gas_price"),
+        (_hex_quantity(F.col("gasPrice_hex")).cast("double") / F.lit(1e18)).alias(
+            "_gas_price"
+        ),
     )
     joined = traces.join(
         dim,
@@ -382,125 +371,68 @@ def merge_transaction_gas(traces: DataFrame, txs: DataFrame) -> DataFrame:
     )
 
 
-def fetch_block_timestamps(
-    spark: SparkSession,
-    block_numbers: DataFrame,
-    make_transport,
-    genesis_ts: str = "2015-07-30 15:26:13",
-) -> DataFrame:
+def fetch_block_timestamps(block_numbers: DataFrame, make_transport) -> DataFrame:
     """S9: block → timestamp dim. Block 0 has no timestamp on-node; the
     reference substitutes ETHEREUM_START_DATE (config.py:61)."""
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = make_transport()
-        for pdf in batches:
-            nums = [int(n) for n in pdf["number"]]
-            reqs = [
-                {
-                    "jsonrpc": "2.0",
-                    "id": i,
-                    "method": "eth_getBlockByNumber",
-                    "params": [hex(n), False],
-                }
-                for i, n in enumerate(nums)
-            ]
-            rows = []
-            for n, resp in zip(nums, _post_matched(transport, reqs)):
-                res = resp.get("result") or {}
-                ts = res.get("timestamp")
-                rows.append(
-                    {"number": n, "ts_unix": int(ts, 16) if ts else None}
-                )
-            yield pd.DataFrame(rows, columns=["number", "ts_unix"])
-
-    fetched = block_numbers.mapInPandas(fetch, schema="number long, ts_unix long")
+    fetched = _rpc_frame(
+        block_numbers.select("number"),
+        make_transport,
+        "eth_getBlockByNumber",
+        lambda n: [hex(n), False],
+        lambda result, n: [(n, (result or {}).get("timestamp"))],
+        "number long, ts_hex string",
+    )
     return fetched.select(
         F.col("number").cast("long").alias("number"),
-        F.when(F.col("number") == 0, F.lit(genesis_ts).cast("timestamp"))
-        .otherwise(F.timestamp_seconds(F.col("ts_unix")))
+        F.when(F.col("number") == 0, F.lit(GENESIS_TS).cast("timestamp"))
+        .otherwise(F.timestamp_seconds(_hex_quantity(F.col("ts_hex")).cast("long")))
         .alias("timestamp"),
     ).withColumn("id", F.col("number").cast("string"))
 
 
-def fetch_events(
-    spark: SparkSession,
-    ranges: "DataFrame | list[tuple[int, int]]",
-    make_transport,
-) -> DataFrame:
+EVENT_DDL = (
+    "address string, topics array<string>, data string, blockNumber long, "
+    "transactionHash string, transactionLogIndex int, logIndex int, "
+    "blockHash string, type string"
+)
+
+
+def _event_row(log: dict) -> dict:
+    return {
+        "address": (log.get("address") or "").lower(),
+        "topics": log.get("topics", []),
+        "data": log.get("data"),
+        "blockNumber": int(str(log["blockNumber"]), 0),
+        "transactionHash": log.get("transactionHash"),
+        "transactionLogIndex": int(str(log.get("transactionLogIndex", "0x0")), 0),
+        "logIndex": int(str(log.get("logIndex", "0x0")), 0),
+        "blockHash": log.get("blockHash"),
+        "type": log.get("type", "mined"),
+    }
+
+
+def fetch_events(ranges: DataFrame, make_transport) -> DataFrame:
     """S10: eth_getLogs per [from, to) block range (reference
     operations/events.py:37-52 uses web3 filters over
-    EVENTS_RANGE_SIZE-block windows). Ranges fan out one-per-task.
+    EVENTS_RANGE_SIZE-block windows).
 
-    ``ranges`` is either a ``(lo, hi)`` DataFrame
-    (``incremental.block_ranges_frame`` — the backfill path: range rows
-    go scan→shuffle→task without ever touching the driver) or a small
-    driver-side list/iterable for targeted re-fetches."""
-    if isinstance(ranges, DataFrame):
-        rng = ranges.select(
-            F.col("lo").cast("long"), F.col("hi").cast("long")
-        ).repartition(spark.sparkContext.defaultParallelism)
-    else:
-        ranges = list(ranges)
-        rng = spark.createDataFrame(ranges, "lo long, hi long").repartition(
-            max(1, min(len(ranges), spark.sparkContext.defaultParallelism))
-        )
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # transport is built LAZILY on the first non-empty batch: the
-        # frame branch fans out to defaultParallelism tasks, and a tiny
-        # incremental tick would otherwise dial the (rate-limited) RPC
-        # endpoint once per EMPTY task (review find)
-        transport = None
-        cols = [
-            "address", "topics", "data", "blockNumber", "transactionHash",
-            "transactionLogIndex", "logIndex", "blockHash", "type",
-        ]
-        for pdf in batches:
-            if len(pdf) and transport is None:
-                transport = make_transport()
-            rows = []
-            for lo, hi in zip(pdf["lo"], pdf["hi"]):
-                # real eth_getLogs filter object; ranges here are
-                # half-open [lo, hi) so toBlock (inclusive) = hi - 1
-                reqs = [
-                    {
-                        "jsonrpc": "2.0",
-                        "id": 0,
-                        "method": "eth_getLogs",
-                        "params": [
-                            {"fromBlock": hex(int(lo)), "toBlock": hex(int(hi) - 1)}
-                        ],
-                    }
-                ]
-                for resp in _post_matched(transport, reqs):
-                    for log in resp.get("result") or []:
-                        rows.append(
-                            {
-                                "address": (log.get("address") or "").lower(),
-                                "topics": log.get("topics", []),
-                                "data": log.get("data"),
-                                "blockNumber": int(str(log["blockNumber"]), 0),
-                                "transactionHash": log.get("transactionHash"),
-                                "transactionLogIndex": int(
-                                    str(log.get("transactionLogIndex", "0x0")), 0
-                                ),
-                                "logIndex": int(str(log.get("logIndex", "0x0")), 0),
-                                "blockHash": log.get("blockHash"),
-                                "type": log.get("type", "mined"),
-                            }
-                        )
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
-            )
-
-    schema = (
-        "address string, topics array<string>, data string, blockNumber long, "
-        "transactionHash string, transactionLogIndex int, logIndex int, "
-        "blockHash string, type string"
+    ``ranges`` is a ``(lo, hi)`` DataFrame
+    (``incremental.block_ranges_frame``): range rows go
+    scan→shuffle→task without ever touching the driver, spread over
+    ``defaultParallelism`` tasks."""
+    rng = ranges.select(
+        F.col("lo").cast("long"), F.col("hi").cast("long")
+    ).repartition(ranges.sparkSession.sparkContext.defaultParallelism)
+    out = _rpc_frame(
+        rng,
+        make_transport,
+        "eth_getLogs",
+        # real eth_getLogs filter object; ranges here are half-open
+        # [lo, hi) so toBlock (inclusive) = hi - 1
+        lambda lo, hi: [{"fromBlock": hex(lo), "toBlock": hex(hi - 1)}],
+        lambda result, lo, hi: (_event_row(log) for log in result or []),
+        EVENT_DDL,
     )
-    out = rng.mapInPandas(fetch, schema=schema)
     # event id = '{txHash}.{transactionLogIndex}' (reference operations/events.py:83)
     return out.withColumn(
         "id",

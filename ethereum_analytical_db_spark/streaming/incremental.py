@@ -53,14 +53,10 @@ def unprocessed_blocks(
     return blocks.join(done, "id", "left_anti")
 
 
-def write_block_flags(wh: Warehouse, block_ids: DataFrame | list, flag_name: str) -> None:
-    """T1 write side: mark blocks processed (only call AFTER the batch's
-    data landed — that ordering is the crash-safety contract)."""
-    spark = wh.spark
-    if isinstance(block_ids, list):
-        block_ids = spark.createDataFrame(
-            [(str(b),) for b in block_ids], "id string"
-        )
+def write_block_flags(wh: Warehouse, block_ids: DataFrame, flag_name: str) -> None:
+    """T1 write side: mark the ``id`` column's blocks processed (only
+    call AFTER the batch's data landed — that ordering is the
+    crash-safety contract)."""
     flags = block_ids.select(
         F.col("id").cast("string").alias("id"),
         F.lit(flag_name).alias("name"),
@@ -102,69 +98,70 @@ def block_ranges_frame(
     )
 
 
-def block_ranges(
-    blocks: DataFrame, range_size: int, number_col: str = "number"
-):
-    """Driver-side view of :func:`block_ranges_frame`: a LAZY iterator of
-    ``(lo, hi)`` tuples in ascending order. ``toLocalIterator`` pulls
-    one partition at a time, so driver memory is bounded by the largest
-    shuffle partition regardless of chain length — never a full
-    ``collect()``. Callers that need a list (tests, tiny incremental
-    batches) wrap it in ``list(...)``; the event backfill path passes
-    the frame form to ``fetch_events`` instead."""
-    frame = block_ranges_frame(blocks, range_size, number_col).orderBy("lo")
-    for r in frame.toLocalIterator():
-        yield (int(r["lo"]), int(r["hi"]))
+def parse_inputs_todo(wh: Warehouse, contract_ids: DataFrame, flag: str,
+                      max_block: int) -> DataFrame:
+    """T2 read side (J2/P5): (id, last_block) for the contracts whose
+    ``flag`` watermark is behind ``max_block`` (last_block NULL = never
+    processed), as a DataFrame — a left join of the lowered distinct
+    ``contract_ids`` against ``contract_block`` (reference
+    utils.py:96-117), nothing driver-side.
 
-
-def contract_watermarks(watermarks: DataFrame, flag_name: str) -> DataFrame:
-    """T2 read side: (id, value) last-synced block per contract for one
-    operation (reference utils.py:108-117 ANY LEFT JOIN contract_block)."""
-    return watermarks.filter(F.col("name") == flag_name).select(
-        "id", F.col("value").alias("last_block")
+    Ids are lowercased: the ingest path normalizes addresses (F8), but
+    an external writer may land checksummed ids, and every comparison
+    of the protocol is on the lowered form so a mixed-case id can never
+    be silently skipped while its watermark still advances. An empty
+    frame = the pass is a no-op: nothing is decoded, nothing is
+    appended, no watermark rows are rewritten (a looping sync would
+    otherwise grow contract_block by |contracts| physical rows per
+    pass)."""
+    todo = contract_ids.select(F.lower(F.col("id")).alias("id")).distinct()
+    if wh.exists("contract_block"):
+        wm = wh.read("contract_block").filter(F.col("name") == flag).select(
+            F.lower(F.col("id")).alias("id"), F.col("value").alias("last_block")
+        )
+        todo = todo.join(wm, "id", "left")
+    else:
+        todo = todo.withColumn("last_block", F.lit(None).cast("long"))
+    return todo.filter(
+        F.col("last_block").isNull() | (F.col("last_block") < F.lit(max_block))
     )
 
 
-def transactions_after_watermark(
-    txs: DataFrame,
-    watermarks: DataFrame,
-    flag_name: str,
-    max_block: int,
-    to_col: str = "to",
-    block_col: str = "blockNumber",
-) -> DataFrame:
-    """P4/T2: incremental per-contract slice — transactions targeting a
-    watched contract, above that contract's watermark, at or below the
-    global high-water mark.
-
-    The reference compiles this as OR-chains of
-    ``(to in(...) AND blockNumber > last AND blockNumber <= max)``
-    grouped by equal watermark (utils.py:119-161); the join form needs
-    no predicate batching and broadcasts the tiny watermark table.
-    """
-    wm = contract_watermarks(watermarks, flag_name)
+def watermark_slice(rows: DataFrame, todo: DataFrame, max_block: int,
+                    addr_col: str) -> DataFrame:
+    """P4/J2/T2: rows targeting a to-do contract, above that contract's
+    watermark, at or below the global high-water mark. The reference
+    compiles OR-chains grouped by equal watermark (utils.py:119-161);
+    here ``todo`` — the (address → watermark) dim from
+    :func:`parse_inputs_todo` — rides as ONE equi-join on the lowered
+    address: AQE broadcasts it while it is dim-sized and falls back to a
+    shuffled join if it ever isn't, and no address list is inlined into
+    the plan or materialized on the driver."""
+    wm = todo.select(F.col("id").alias("wm_id"), "last_block")
     return (
-        txs.join(F.broadcast(wm), txs[to_col] == wm["id"], "inner")
+        rows.join(wm, F.lower(rows[addr_col]) == F.col("wm_id"), "inner")
         .filter(
-            (F.col("last_block").isNull() | (F.col(block_col) > F.col("last_block")))
-            & (F.col(block_col) <= F.lit(max_block))
+            (F.col("last_block").isNull() | (F.col("blockNumber") > F.col("last_block")))
+            & (F.col("blockNumber") <= F.lit(max_block))
         )
-        .drop(wm["id"])
+        .drop("wm_id")
         .drop("last_block")
     )
 
 
-def save_contract_watermarks(
-    wh: Warehouse, contracts_max: DataFrame, flag_name: str
-) -> None:
-    """T2 write side: upsert {id: contract, name: flag, value: max_block}
-    (reference utils.py:186-199). ``contracts_max``: (id, value)."""
+def advance_watermarks(wh: Warehouse, todo: DataFrame, flag: str,
+                       max_block: int) -> None:
+    """T2 write side, AFTER the data write (crash-safe resume: a crash
+    between data and watermark re-decodes, never skips — reference
+    decode_inputs, operations/inputs.py:196-207): upsert {id: contract,
+    name: flag, value: max_block} (reference utils.py:186-199) for the
+    contracts that actually moved (the ``todo`` frame) only."""
     wh.write(
         "contract_block",
-        contracts_max.select(
+        todo.select(
             F.col("id").cast("string").alias("id"),
-            F.lit(flag_name).alias("name"),
-            F.col("value").cast("long").alias("value"),
+            F.lit(flag).alias("name"),
+            F.lit(max_block).cast("long").alias("value"),
         ),
     )
 

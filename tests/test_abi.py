@@ -107,12 +107,14 @@ def test_decode_inputs_dataframe(spark):
         ("0xOther", "0xa9059cbb" + _w(5) + _w(500)),  # no ABI for contract
     ]
     df = spark.createDataFrame(rows, "`to` string, input string")
-    out = abi.decode_inputs(df, {"0xToken": ERC20_ABI}).collect()
+    abi_df = spark.createDataFrame([("0xToken", ERC20_ABI)], "id string, abi string")
+    out = abi.decode_inputs_joined(df, abi_df).collect()
     by_input = {(r["to"], r["input"][:10]): r["decoded"] for r in out}
     ok = by_input[("0xToken", "0xa9059cbb")]
     assert ok["name"] == "transfer" and ok["params_value"][1] == "500"
     assert by_input[("0xToken", "0xdeadbeef")] is None
-    assert by_input[("0xOther", "0xa9059cbb")] is None
+    # the inner join drops rows of contracts without an ABI
+    assert ("0xOther", "0xa9059cbb") not in by_input
 
 
 def test_decode_inputs_joined_case_variant_ids_no_duplicates(spark):

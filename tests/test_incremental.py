@@ -2,12 +2,18 @@
 resumable batches over the warehouse, mirroring the reference's
 block_flag/contract_block semantics."""
 
+import re
+from pathlib import Path
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+import ethereum_analytical_db_spark
 from ethereum_analytical_db_spark.catalog import Warehouse
 from ethereum_analytical_db_spark.streaming import incremental as inc
+
+PKG = Path(ethereum_analytical_db_spark.__file__).parent
 
 
 @pytest.fixture()
@@ -17,6 +23,10 @@ def wh(spark, tmp_path):
     w.create("block_flag")
     w.create("contract_block")
     return w
+
+
+def _ids(wh, ids):
+    return wh.spark.createDataFrame([(str(b),) for b in ids], "id string")
 
 
 def _write_blocks(wh, numbers):
@@ -29,7 +39,7 @@ def _write_blocks(wh, numbers):
 
 def test_unprocessed_blocks_anti_join(wh):
     _write_blocks(wh, range(10))
-    inc.write_block_flags(wh, [0, 1, 2], "traces_extracted")
+    inc.write_block_flags(wh, _ids(wh, [0, 1, 2]), "traces_extracted")
     left = inc.unprocessed_blocks(
         wh.read("block"), wh.read("block_flag"), "traces_extracted"
     )
@@ -43,8 +53,8 @@ def test_unprocessed_blocks_anti_join(wh):
 
 def test_flag_replay_is_idempotent(wh):
     _write_blocks(wh, range(5))
-    inc.write_block_flags(wh, [1, 2], "traces_extracted")
-    inc.write_block_flags(wh, [1, 2], "traces_extracted")  # crash-replay
+    inc.write_block_flags(wh, _ids(wh, [1, 2]), "traces_extracted")
+    inc.write_block_flags(wh, _ids(wh, [1, 2]), "traces_extracted")  # crash-replay
     flags = wh.read("block_flag")  # FINAL dedup by (id, name)
     assert flags.filter(F.col("name") == "traces_extracted").count() == 2
     assert inc.max_flagged_block(flags, "traces_extracted") == 2
@@ -52,24 +62,18 @@ def test_flag_replay_is_idempotent(wh):
 
 def test_block_ranges_bucketing(wh):
     _write_blocks(wh, [0, 1, 4, 5, 9, 23])
-    ranges = list(inc.block_ranges(wh.read("block"), 5))
-    assert ranges == [(0, 5), (5, 10), (20, 25)]
-    # frame form carries the same buckets (order-free)
-    frame = {
+    ranges = sorted(
         (r["lo"], r["hi"])
         for r in inc.block_ranges_frame(wh.read("block"), 5).collect()
-    }
-    assert frame == set(ranges)
+    )
+    assert ranges == [(0, 5), (5, 10), (20, 25)]
 
 
 def test_block_ranges_driver_memory_bounded(spark, monkeypatch):
-    """Full-chain-backfill shape: block_ranges over a 2M-block frame must
-    never collect() the range set to the driver — it is a lazy
-    toLocalIterator (one partition in driver memory at a time), and the
-    backfill path (extract_events) uses the frame form, which keeps
-    ranges off the driver entirely."""
-    import itertools
-
+    """Full-chain-backfill shape: the range micro-batches over a
+    2M-block frame are a distributed frame that the backfill path
+    (extract_events) fans out directly — building it never collect()s
+    the range set to the driver."""
     from pyspark.sql import DataFrame
 
     blocks = spark.range(0, 2_000_000).withColumnRenamed("id", "number")
@@ -77,13 +81,9 @@ def test_block_ranges_driver_memory_bounded(spark, monkeypatch):
         DataFrame,
         "collect",
         lambda self: (_ for _ in ()).throw(
-            AssertionError("block_ranges must not collect() the range set")
+            AssertionError("block_ranges_frame must not collect() the range set")
         ),
     )
-    it = inc.block_ranges(blocks, 5)
-    first = list(itertools.islice(it, 3))
-    assert first == [(0, 5), (5, 10), (10, 15)]
-    # frame form: building the fan-out plan needs no driver materialization
     frame = inc.block_ranges_frame(blocks, 5)
     monkeypatch.undo()
     assert frame.count() == 400_000
@@ -102,7 +102,7 @@ def test_sync_loop_converges(wh):
         ids = [r["id"] for r in todo.select("id").collect()]
         processed_per_pass.append(len(ids))
         if ids:  # data write would happen here, THEN the flag write
-            inc.write_block_flags(w, ids, "traces_extracted")
+            inc.write_block_flags(w, _ids(w, ids), "traces_extracted")
 
     pipe = inc.SyncPipeline(wh, [("traces", stage)])
     pipe.run_once()
@@ -121,26 +121,18 @@ def test_contract_watermark_slicing(wh):
             Row(to="0xA", blockNumber=99),  # beyond global high-water
         ]
     )
-    inc.save_contract_watermarks(
-        wh,
-        wh.spark.createDataFrame([Row(id="0xA", value=10), Row(id="0xB", value=0)]),
-        "tx_input_block",
-    )
-    out = inc.transactions_after_watermark(
-        txs, wh.read("contract_block"), "tx_input_block", max_block=50
-    )
+    inc.advance_watermarks(wh, _ids(wh, ["0xA"]), "tx_input_block", 10)
+    inc.advance_watermarks(wh, _ids(wh, ["0xB"]), "tx_input_block", 0)
+    todo = inc.parse_inputs_todo(wh, _ids(wh, ["0xA", "0xB"]), "tx_input_block", 50)
+    out = inc.watermark_slice(txs, todo, max_block=50, addr_col="to")
     got = sorted((r["to"], r["blockNumber"]) for r in out.collect())
     assert got == [("0xA", 11), ("0xB", 3)]
 
 
 def test_watermark_advance_last_write_wins(wh):
-    inc.save_contract_watermarks(
-        wh, wh.spark.createDataFrame([Row(id="0xA", value=10)]), "op_block"
-    )
-    inc.save_contract_watermarks(
-        wh, wh.spark.createDataFrame([Row(id="0xA", value=20)]), "op_block"
-    )
-    wm = inc.contract_watermarks(wh.read("contract_block"), "op_block").collect()
+    inc.advance_watermarks(wh, _ids(wh, ["0xA"]), "op_block", 10)
+    inc.advance_watermarks(wh, _ids(wh, ["0xA"]), "op_block", 20)
+    wm = inc.parse_inputs_todo(wh, _ids(wh, ["0xA"]), "op_block", 30).collect()
     assert len(wm) == 1 and wm[0]["last_block"] == 20
 
 
@@ -159,11 +151,29 @@ def test_watermark_slice_plan_broadcasts_dim(spark, tmp_path):
         [("0xT.0", 6, "0xtok")], "id string, blockNumber long, `to` string"
     )
     abi_ids = spark.createDataFrame([("0xtok",)], "id string")
-    todo = cli._parse_inputs_todo(wh, abi_ids, cli.TX_INPUT_FLAG, 10)
+    todo = inc.parse_inputs_todo(wh, abi_ids, cli.TX_INPUT_FLAG, 10)
     got = [(r["id"], r["last_block"]) for r in todo.collect()]
     assert got == [("0xtok", 5)]  # behind max_block → in the to-do set
-    sliced = cli._watermark_slice(wh, txs, todo, cli.TX_INPUT_FLAG, 10, "to")
+    sliced = inc.watermark_slice(txs, todo, 10, "to")
     assert sliced.count() == 1  # block 6 is above the watermark (5)
     plan = sliced._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+def test_sync_steps_have_one_implementation():
+    """One implementation per sync step: one JSON-RPC fetch loop in
+    rpc.py, no test-only twins of the watermark slice, the range
+    micro-batcher, the ABI decode or the enrichment pager, and the
+    per-contract watermark table is read and written by the watermark
+    protocol alone. A second copy has to change this test."""
+    sources = {p.relative_to(PKG).as_posix(): p.read_text() for p in PKG.rglob("*.py")}
+    assert sources["sources/rpc.py"].count("mapInPandas(") == 1
+    twins = re.compile(
+        r"def (transactions_after_watermark|block_ranges|decode_inputs|_pages)\("
+    )
+    assert [m for m, src in sorted(sources.items()) if twins.search(src)] == []
+    touch = re.compile(r"\.(read|write|exists)\(\s*\"contract_block\"")
+    assert [m for m, src in sorted(sources.items()) if touch.search(src)] == [
+        "streaming/incremental.py"
+    ]

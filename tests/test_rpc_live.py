@@ -73,7 +73,7 @@ def test_live_spark_block_timestamp_source(spark):
     got = {
         r["number"]: r["timestamp"]
         for r in rpc.fetch_block_timestamps(
-            spark, nums, functools.partial(cli._http_transport, NODE)
+            nums, functools.partial(cli._http_transport, NODE)
         ).collect()
     }
     assert set(got) == {0, 1, 2}

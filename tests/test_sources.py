@@ -3,6 +3,7 @@ mapInPandas fetch), HTTP enrichments with injected fetchers, genesis/
 token file loads, CSV export."""
 
 import json
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -78,9 +79,7 @@ def rpc_fixtures(tmp_path):
 def test_fetch_and_decode_traces(spark, rpc_fixtures):
     blocks = spark.createDataFrame([(1,), (2,)], "number long")
     fixture_dir = rpc_fixtures
-    raw = rpc.fetch_traces(
-        spark, blocks, lambda: rpc.FileJsonRpcTransport(fixture_dir)
-    )
+    raw = rpc.fetch_traces(blocks, lambda: rpc.FileJsonRpcTransport(fixture_dir))
     decoded = rpc.decode_traces(raw)
     rows = {r["id"]: r for r in decoded.collect()}
     assert len(rows) == 3  # block 2 empty
@@ -97,7 +96,7 @@ def test_fetch_block_timestamps_genesis_default(spark, rpc_fixtures):
     out = {
         r["number"]: r["timestamp"]
         for r in rpc.fetch_block_timestamps(
-            spark, blocks, lambda: rpc.FileJsonRpcTransport(fixture_dir)
+            blocks, lambda: rpc.FileJsonRpcTransport(fixture_dir)
         ).collect()
     }
     assert out[0].year == 2015 and out[0].month == 7  # ETHEREUM_START_DATE
@@ -106,14 +105,76 @@ def test_fetch_block_timestamps_genesis_default(spark, rpc_fixtures):
 
 def test_fetch_events_builds_ids(spark, rpc_fixtures):
     fixture_dir = rpc_fixtures
+    ranges = spark.createDataFrame([(0, 5)], "lo long, hi long")
     out = rpc.fetch_events(
-        spark, [(0, 5)], lambda: rpc.FileJsonRpcTransport(fixture_dir)
+        ranges, lambda: rpc.FileJsonRpcTransport(fixture_dir)
     ).collect()
     assert len(out) == 1
     ev = out[0]
     assert ev["id"] == "0xT9.2"  # txHash.transactionLogIndex
     assert ev["address"] == "0xtoken"  # lowercased (F8)
     assert ev["blockNumber"] == 3
+
+
+def test_rpc_posts_are_bounded_batches(spark, tmp_path):
+    """A backfill partition goes out as POSTs of at most RPC_BATCH_SIZE
+    requests, not one POST per partition (real nodes cap batch sizes).
+    Executors are separate processes, so the transport logs each POST's
+    size to a file."""
+    fixture_dir, log = str(tmp_path), str(tmp_path / "posts.log")
+    for n in range(25):
+        (tmp_path / f"eth_getBlockByNumber_{hex(n)}.json").write_text(
+            json.dumps({"timestamp": hex(1_500_000_000 + n)})
+        )
+
+    def factory():
+        inner = rpc.FileJsonRpcTransport(fixture_dir)
+
+        class Logged:
+            def post(self, batch):
+                with open(log, "a") as fh:
+                    fh.write(f"{len(batch)}\n")
+                return inner.post(batch)
+
+        return Logged()
+
+    blocks = spark.range(0, 25, numPartitions=1).withColumnRenamed("id", "number")
+    assert rpc.fetch_block_timestamps(blocks, factory).count() == 25
+    sizes = [int(x) for x in (tmp_path / "posts.log").read_text().split()]
+    assert sum(sizes) == 25
+    assert max(sizes) <= rpc.RPC_BATCH_SIZE == 10
+
+
+def test_fetch_block_transactions(spark, tmp_path):
+    """eth_getBlockByNumber(n, full=True) → one row per transaction, an
+    empty (or missing) block adds none; 12 blocks in one partition cross
+    a batch boundary."""
+    txs_per_block = {1: 0, 10: 12}  # every other block has one
+    for n in range(12):
+        if n == 5:
+            continue  # no response body for block 5
+        txs = [
+            {"blockHash": f"0xB{n}", "hash": f"0xT{n}.{i}", "gasPrice": hex(n * 100 + i)}
+            for i in range(txs_per_block.get(n, 1))
+        ]
+        (tmp_path / f"eth_getBlockByNumber_{hex(n)}.json").write_text(
+            json.dumps({"transactions": txs})
+        )
+    fixture_dir = str(tmp_path)
+    blocks = spark.range(0, 12, numPartitions=1).withColumnRenamed("id", "number")
+    rows = rpc.fetch_block_transactions(
+        blocks, lambda: rpc.FileJsonRpcTransport(fixture_dir)
+    ).collect()
+    got = sorted((r["blockNumber"], r["hash"], r["blockHash"], r["gasPrice_hex"]) for r in rows)
+    want = sorted(
+        (n, f"0xT{n}.{i}", f"0xB{n}", hex(n * 100 + i))
+        for n in range(12) if n != 5
+        for i in range(txs_per_block.get(n, 1))
+    )
+    assert got == want
+    counts = Counter(r["blockNumber"] for r in rows)
+    assert 1 not in counts and 5 not in counts  # empty / missing block: no rows
+    assert counts[10] == 12 and len(rows) == 9 + 12
 
 
 def test_host_routing():
