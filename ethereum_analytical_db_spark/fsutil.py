@@ -1,15 +1,19 @@
 """Small-file IO through the Hadoop FileSystem API.
 
-The frozen-index sidecars (IVF centroid digest, LSH plane meta, MinHash
-band / SimHash chunk parameters) are tiny JSON files living INSIDE a
-Parquet index directory. Writing them with driver-local ``open()``
+The frozen-index sidecars (MinHash band / SimHash chunk parameters,
+the exact-digest kind, IVF centroid digest, LSH plane meta, SemDeDup
+threshold and census) are tiny JSON files living INSIDE a Parquet index
+directory. Writing them with driver-local ``open()``
 works in local mode but silently targets the wrong filesystem when the
 index lives on HDFS/S3 — exactly the 100 TB deployment the indexes
 exist for. These helpers route the same reads/writes through the
 JVM-side Hadoop FileSystem resolved from the path itself, so
 ``file:/``, ``hdfs:/`` and ``s3a:/`` index paths all behave
 identically. Driver-side only (sidecars are bounded metadata, never
-data).
+data). Every index family writes, validates and ensures its sidecar
+through the one protocol here (:func:`write_sidecar`,
+:func:`check_sidecar`, :func:`ensure_sidecar`) and supplies only the
+sidecar name and its meta dict.
 
 It also holds the package's one directory swap (:func:`swap_dir`,
 :func:`recover_swap`): every rewrite that replaces a directory in
@@ -84,9 +88,21 @@ def write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
         raise IOError(f"write_text_atomic: rename {tmp} -> {path} failed")
 
 
+# what a sidecar mismatch breaks, unless the index family says more
+_WHY = "a probe or append would route rows by parameters the index was not built with"
+
+
+def write_sidecar(spark: SparkSession, path: str, name: str, meta: dict) -> None:
+    """Write ``meta`` as the JSON sidecar ``name`` (leading underscore:
+    Parquet readers skip it) of the index directory ``path``, atomically."""
+    import json
+
+    write_text_atomic(spark, f"{path}/{name}", json.dumps(meta))
+
+
 def read_sidecar(spark: SparkSession, path: str, name: str, writer: str) -> dict:
     """Read the JSON sidecar ``name`` of the index directory ``path``
-    (the reader half of :func:`write_text_atomic`). Runs
+    (the reader half of :func:`write_sidecar`). Runs
     :func:`recover_swap` first, so a rewrite that crashed mid-swap is
     rolled back before the read. An absent or unparseable sidecar
     raises a ``ValueError`` naming ``writer``, the operator that
@@ -107,6 +123,41 @@ def read_sidecar(spark: SparkSession, path: str, name: str, writer: str) -> dict
             f"mid-write by an older writer — rebuild the index ({writer}) "
             "or restore the sidecar by hand"
         ) from None
+
+
+def check_sidecar(
+    spark: SparkSession, path: str, name: str, want: dict, writer: str, why: str = _WHY
+) -> dict:
+    """Refuse an index whose sidecar ``name`` disagrees with the caller's
+    build parameters ``want`` (``why`` says what the mismatch would
+    break). Only the keys of ``want`` are compared, so a mutable census
+    stays out of the check. Returns the sidecar."""
+    meta = read_sidecar(spark, path, name, writer)
+    if meta.get("kind") != want["kind"]:
+        raise ValueError(f"index at {path} is {meta.get('kind')!r}, not {want['kind']}")
+    built = {k: meta.get(k) for k in want}
+    if built != want:
+        bad = ", ".join(k for k in want if built[k] != want[k])
+        raise ValueError(
+            f"index at {path} was built with {built}, used with {want}: "
+            f"mismatched parameters ({bad}) — {why}"
+        )
+    return meta
+
+
+def ensure_sidecar(
+    spark: SparkSession, path: str, name: str, meta: dict, writer: str, why: str = _WHY
+) -> None:
+    """Write the sidecar ``name`` iff absent, else validate ``meta``
+    against it: a stream restarted with drifted parameters must raise,
+    not stamp them over its index. :func:`recover_swap` runs first, or a
+    fresh sidecar would recreate a parked ``path`` empty and the next
+    swap would delete the only full copy as stale."""
+    recover_swap(spark, path)
+    if exists(spark, f"{path}/{name}"):
+        check_sidecar(spark, path, name, meta, writer, why)
+    else:
+        write_sidecar(spark, path, name, meta)
 
 
 def rename(spark: SparkSession, src: str, dst: str) -> bool:

@@ -22,7 +22,6 @@ registry's md5 faces run the production pipelines under an oracle.
 
 from __future__ import annotations
 
-import json
 import logging
 
 from pyspark.sql import DataFrame, Window
@@ -485,57 +484,15 @@ def minhash_lsh_candidates(
     )
 
 
+# parameter sidecar of the band index (fsutil's sidecar protocol):
+# probes and appends with another shingle width, hash count or band
+# count silently yield wrong buckets, so each entry point validates it
 _BAND_INDEX_META = "_band_index_meta.json"
+_BAND_WRITER = "minhash_index_write/near_dedup_stream"
 
 
 def _band_meta(n: int, num_hashes: int, bands: int) -> dict:
     return {"kind": "minhash_bands", "n": n, "num_hashes": num_hashes, "bands": bands}
-
-
-def _write_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int) -> None:
-    """Parameter sidecar (leading-underscore name — Parquet readers skip
-    it). Written through the Hadoop FS API (`fsutil`) so HDFS/S3 index
-    paths work identically to local ones; temp+rename so a crash can't
-    leave truncated JSON blocking every future reader."""
-    fsutil.write_text_atomic(
-        spark, f"{path}/{_BAND_INDEX_META}", json.dumps(_band_meta(n, num_hashes, bands))
-    )
-
-
-def _check_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int) -> None:
-    """Refuse to probe or append with parameters other than the ones the
-    index was built with — a mismatched shingle width, hash count, or
-    band count silently yields wrong buckets (the same footgun
-    ivf_index_append's centroid digest guards against)."""
-    meta = fsutil.read_sidecar(
-        spark, path, _BAND_INDEX_META, "minhash_index_write/near_dedup_stream"
-    )
-    want = _band_meta(n, num_hashes, bands)
-    if meta != want:
-        raise ValueError(
-            f"band index at {path} was built with {meta}, used with "
-            f"{want} — mismatched parameters would corrupt every result"
-        )
-
-
-def _ensure_meta(spark, path: str, name: str, check, write, *params) -> None:
-    """Write the sidecar ``name`` iff absent; otherwise VALIDATE against
-    it (``check(spark, path, *params)``). The wiring-time call in
-    ``near_dedup_stream`` must not blindly rewrite: a stream restarted
-    with drifted parameters (bands=4 over a bands=8 index) would stamp
-    the new parameters over the old sidecar and turn the mismatch guard
-    into a rubber stamp — every probe then joins incompatible bucket
-    spaces silently (review find)."""
-    fsutil.recover_swap(spark, path)
-    step = check if fsutil.exists(spark, f"{path}/{name}") else write
-    step(spark, path, *params)
-
-
-def _ensure_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int) -> None:
-    _ensure_meta(
-        spark, path, _BAND_INDEX_META, _check_band_index_meta,
-        _write_band_index_meta, n, num_hashes, bands,
-    )
 
 
 def minhash_index_write(
@@ -557,7 +514,8 @@ def minhash_index_write(
     minhash_band_rows(df, text_col, id_col, n, num_hashes, bands).write.mode(
         "overwrite"
     ).partitionBy("band").parquet(path)
-    _write_band_index_meta(df.sparkSession, path, n, num_hashes, bands)
+    meta = _band_meta(n, num_hashes, bands)
+    fsutil.write_sidecar(df.sparkSession, path, _BAND_INDEX_META, meta)
 
 
 def minhash_index_append(
@@ -581,7 +539,9 @@ def minhash_index_append(
     operation (run :func:`compact_index` over the small files on
     whatever cadence the scan profile needs, exactly like any
     log-structured table)."""
-    _check_band_index_meta(df.sparkSession, path, n, num_hashes, bands)
+    fsutil.check_sidecar(
+        df.sparkSession, path, _BAND_INDEX_META, _band_meta(n, num_hashes, bands), _BAND_WRITER
+    )
     minhash_band_rows(df, text_col, id_col, n, num_hashes, bands).write.mode(
         "append"
     ).partitionBy("band").parquet(path)
@@ -846,8 +806,6 @@ def _rewrite_index(spark, path: str, partition_cols: list[str], transform=None) 
     with its ``_*.json`` sidecars, then publish it with
     :func:`fsutil.swap_dir`. ``transform`` optionally rewrites the
     DataFrame between read and write (the fold's batch relabeling)."""
-    import posixpath
-
     fsutil.recover_swap(spark, path)  # finish a crashed prior rewrite
     if not fsutil.exists(spark, path):
         raise ValueError(f"no index directory at {path}")
@@ -860,15 +818,10 @@ def _rewrite_index(spark, path: str, partition_cols: list[str], transform=None) 
     df.repartition(*[F.col(c) for c in partition_cols]).write.partitionBy(
         *partition_cols
     ).parquet(tmp)
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
+    for name in fsutil.list_names(spark, path):
         if name.startswith("_") and name.endswith(".json"):  # sidecars
-            fsutil.write_text(
-                spark,
-                posixpath.join(tmp, name),
-                fsutil.read_text(spark, posixpath.join(path, name)),
-            )
+            text = fsutil.read_text(spark, f"{path}/{name}")
+            fsutil.write_text(spark, f"{tmp}/{name}", text)
     fsutil.swap_dir(spark, tmp, path)
 
 
@@ -917,7 +870,9 @@ def minhash_probe_candidates(
     corpus-wide document frequency); the hot set broadcasts into
     anti-joins on both sides, so the index branch stays Exchange-free
     below the probe join. Default None keeps single-scan probes."""
-    _check_band_index_meta(spark, index_path, n, num_hashes, bands)
+    fsutil.check_sidecar(
+        spark, index_path, _BAND_INDEX_META, _band_meta(n, num_hashes, bands), _BAND_WRITER
+    )
     new_rows = minhash_band_rows(new_df, text_col, id_col, n, num_hashes, bands)
     # computed once, consumed by two join branches (index probe + batch
     # self-join): cut lineage so the shingle+minhash pipeline runs once
@@ -1056,35 +1011,11 @@ def _chunked_signatures(sigs: DataFrame, blocks: int, bits: int = 64) -> DataFra
 
 
 _SIMHASH_INDEX_META = "_simhash_index_meta.json"
+_SIMHASH_WRITER = "simhash_index_write/near_dedup_stream"
 
 
 def _simhash_meta(blocks: int) -> dict:
     return {"kind": "simhash_blocks", "bits": 64, "blocks": blocks}
-
-
-def _write_simhash_index_meta(spark, path: str, blocks: int) -> None:
-    fsutil.write_text_atomic(
-        spark, f"{path}/{_SIMHASH_INDEX_META}", json.dumps(_simhash_meta(blocks))
-    )
-
-
-def _check_simhash_index_meta(spark, path: str, blocks: int) -> None:
-    meta = fsutil.read_sidecar(
-        spark, path, _SIMHASH_INDEX_META, "simhash_index_write"
-    )
-    want = _simhash_meta(blocks)
-    if meta != want:
-        raise ValueError(
-            f"simhash index at {path} was built with {meta}, used with "
-            f"{want} — mismatched parameters would corrupt every result"
-        )
-
-
-def _ensure_simhash_index_meta(spark, path: str, blocks: int) -> None:
-    _ensure_meta(
-        spark, path, _SIMHASH_INDEX_META, _check_simhash_index_meta,
-        _write_simhash_index_meta, blocks,
-    )
 
 
 def simhash_index_write(
@@ -1102,7 +1033,7 @@ def simhash_index_write(
         simhash_signatures(df, text_col, id_col), blocks
     )
     chunked.write.mode("overwrite").partitionBy("blk").parquet(path)
-    _write_simhash_index_meta(df.sparkSession, path, blocks)
+    fsutil.write_sidecar(df.sparkSession, path, _SIMHASH_INDEX_META, _simhash_meta(blocks))
 
 
 def simhash_index_append(
@@ -1116,7 +1047,9 @@ def simhash_index_append(
     against the parameter sidecar); ``probe → append`` per shard is the
     same incremental-ingest loop :func:`minhash_index_append` documents
     — O(shard) writes, resident files untouched."""
-    _check_simhash_index_meta(df.sparkSession, path, blocks)
+    fsutil.check_sidecar(
+        df.sparkSession, path, _SIMHASH_INDEX_META, _simhash_meta(blocks), _SIMHASH_WRITER
+    )
     _chunked_signatures(simhash_signatures(df, text_col, id_col), blocks).write.mode(
         "append"
     ).partitionBy("blk").parquet(path)
@@ -1149,7 +1082,9 @@ def simhash_probe_candidates(
     aggregation pass over the index per probe when set. Doc ids must be
     disjoint from the index."""
     _check_simhash_params(64, blocks, max_hamming, partial_recall)
-    _check_simhash_index_meta(spark, index_path, blocks)
+    fsutil.check_sidecar(
+        spark, index_path, _SIMHASH_INDEX_META, _simhash_meta(blocks), _SIMHASH_WRITER
+    )
     new_rows = _materialize(
         _chunked_signatures(simhash_signatures(new_df, text_col, id_col), blocks),
         materialize,
@@ -1563,7 +1498,12 @@ def connected_components(
 # broadcast join (zero Exchange above the index scan), append folds the
 # survivors in, compact_index/fold_stream_index bound the file counts.
 
+# no parameter of the digest index can drift (md5 is md5), but its
+# sidecar's kind still refuses an exact probe pointed at a band or
+# chunk index, whose join key would silently be garbage
 _EXACT_INDEX_META = "_exact_index_meta.json"
+_EXACT_META = {"kind": "exact_md5"}
+_EXACT_WRITER = "exact_index_write/near_dedup_stream"
 
 
 def exact_digest_rows(
@@ -1584,30 +1524,6 @@ def exact_digest_rows(
     ).withColumn("pfx", F.substring("digest", 1, 1))
 
 
-def _write_exact_index_meta(spark, path: str) -> None:
-    fsutil.write_text_atomic(
-        spark, f"{path}/{_EXACT_INDEX_META}", json.dumps({"kind": "exact_md5"})
-    )
-
-
-def _check_exact_index_meta(spark, path: str) -> None:
-    """No parameters can drift (md5 is md5), but the sidecar still
-    guards against pointing an exact probe at a BAND or chunk index —
-    the join key would silently be garbage — and hosts the crashed-
-    compact recovery hook like every other index entry point."""
-    meta = fsutil.read_sidecar(spark, path, _EXACT_INDEX_META, "exact_index_write")
-    if meta != {"kind": "exact_md5"}:
-        raise ValueError(
-            f"index at {path} is {meta}, not an exact_md5 digest index"
-        )
-
-
-def _ensure_exact_index_meta(spark, path: str) -> None:
-    _ensure_meta(
-        spark, path, _EXACT_INDEX_META, _check_exact_index_meta, _write_exact_index_meta
-    )
-
-
 def exact_index_write(
     df: DataFrame, path: str, text_col: str = "text", id_col: str = "doc_id"
 ) -> None:
@@ -1619,7 +1535,7 @@ def exact_index_write(
     exact_digest_rows(df, text_col, id_col).repartition(F.col("pfx")).write.mode(
         "overwrite"
     ).partitionBy("pfx").parquet(path)
-    _write_exact_index_meta(df.sparkSession, path)
+    fsutil.write_sidecar(df.sparkSession, path, _EXACT_INDEX_META, _EXACT_META)
 
 
 def exact_index_append(
@@ -1629,7 +1545,7 @@ def exact_index_append(
     the probe's survivors — appending known duplicates is allowed but
     makes them extra canonical-candidates forever). Parquet append only
     adds files; run :func:`compact_index` (``["pfx"]``) on cadence."""
-    _check_exact_index_meta(df.sparkSession, path)
+    fsutil.check_sidecar(df.sparkSession, path, _EXACT_INDEX_META, _EXACT_META, _EXACT_WRITER)
     exact_digest_rows(df, text_col, id_col).repartition(F.col("pfx")).write.mode(
         "append"
     ).partitionBy("pfx").parquet(path)
@@ -1682,7 +1598,7 @@ def exact_probe_duplicates(
     undercut case, not a collect_list that concentrates one content's
     million holders into a single aggregation buffer; the only arrays
     are batch-sized (per-shard, caller-bounded)."""
-    _check_exact_index_meta(spark, index_path)
+    fsutil.check_sidecar(spark, index_path, _EXACT_INDEX_META, _EXACT_META, _EXACT_WRITER)
     new_rows = _materialize(exact_digest_rows(new_df, text_col, id_col), materialize)
     idx = spark.read.parquet(index_path)
     if index_filter is not None:

@@ -38,7 +38,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _assign_clusters, ivf_train_centroids
+from .. import fsutil
+from .similarity import (
+    _INDEX_META,
+    _INDEX_WRITER,
+    _assign_clusters,
+    _centroid_digest,
+    ivf_train_centroids,
+)
 
 # rows per GEMM slab inside a cluster task: peak extra memory is
 # _BLOCK × cluster_rows float32 scores (2048 × 200k ≈ 1.6 GB worst case
@@ -202,6 +209,26 @@ def semantic_dedup(
     )
 
 
+def _semdedup_meta(centroids: list[list[float]], threshold: float | None) -> dict:
+    """The verdict index's build parameters: its quantizer and the
+    THRESHOLD (verdicts are not comparable across thresholds). A
+    ``None`` threshold leaves the key out, so a probe that takes the
+    index's own threshold does not compare it."""
+    meta = {
+        "kind": "semdedup",
+        "dim": len(centroids[0]),
+        "n_centroids": len(centroids),
+        "threshold": threshold,
+        "centroid_digest": _centroid_digest(centroids),
+    }
+    if threshold is None:
+        del meta["threshold"]
+    return meta
+
+
+_SEMDEDUP_WHY = "centroids do not match or the threshold differs: verdicts would not compare"
+
+
 def semdedup_index_write(
     embeddings: DataFrame,
     path: str,
@@ -221,8 +248,6 @@ def semdedup_index_write(
     threshold they were made at, so probes refuse a different one.
     Returns the (possibly trained) centroids — persist them next to the
     index; probes need them to assign new batches."""
-    from .similarity import _centroid_digest, _write_index_meta
-
     if centroids is None:
         centroids = ivf_train_centroids(
             embeddings, n_centroids, iterations, id_col, vec_col
@@ -252,66 +277,11 @@ def semdedup_index_write(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    _write_index_meta(
-        spark,
-        path,
-        {
-            "kind": "semdedup",
-            "dim": len(centroids[0]),
-            "n_centroids": len(centroids),
-            "threshold": threshold,
-            "centroid_digest": _centroid_digest(centroids),
-            "kept_per_cluster": kept_counts,
-        },
+    fsutil.write_sidecar(
+        spark, path, _INDEX_META,
+        {**_semdedup_meta(centroids, threshold), "kept_per_cluster": kept_counts},
     )
     return centroids
-
-
-def _validate_semdedup_meta(spark, path: str, centroids, threshold):
-    from .similarity import _index_meta
-
-    meta = _index_meta(
-        spark, path, "semdedup", centroids,
-        "a probe would assign new vectors to the wrong clusters",
-    )
-    if threshold is not None and float(threshold) != float(meta["threshold"]):
-        raise ValueError(
-            f"index at {path} holds verdicts at threshold "
-            f"{meta['threshold']}, refusing to probe at {threshold} — "
-            "resident verdicts are not comparable across thresholds"
-        )
-    return meta
-
-
-def ensure_semdedup_meta(
-    spark, path: str, centroids: list[list[float]], threshold: float
-) -> None:
-    """Write the index sidecar iff absent; otherwise VALIDATE against
-    it — the wiring-time protocol shared with the band/simhash/exact
-    stream indexes (``dedup._ensure_band_index_meta``): a stream
-    restarted with drifted centroids or threshold must raise, not stamp
-    the new parameters over the index it would corrupt."""
-    from .similarity import (
-        _INDEX_META,
-        _centroid_digest,
-        _write_index_meta,
-    )
-    from .. import fsutil
-
-    if fsutil.exists(spark, f"{path}/{_INDEX_META}"):
-        _validate_semdedup_meta(spark, path, centroids, threshold)
-    else:
-        _write_index_meta(
-            spark,
-            path,
-            {
-                "kind": "semdedup",
-                "dim": len(centroids[0]),
-                "n_centroids": len(centroids),
-                "threshold": float(threshold),
-                "centroid_digest": _centroid_digest(centroids),
-            },
-        )
 
 
 def semdedup_bootstrap_verdicts(
@@ -388,7 +358,10 @@ def semdedup_probe(
     import pandas as pd
 
     spark = batch.sparkSession
-    meta = _validate_semdedup_meta(spark, path, centroids, threshold)
+    meta = fsutil.check_sidecar(
+        spark, path, _INDEX_META, _semdedup_meta(centroids, threshold),
+        _INDEX_WRITER, _SEMDEDUP_WHY,
+    )
     thr = float(meta["threshold"])
 
     # persist: the touched-cluster census and the union below both need
@@ -757,10 +730,8 @@ def semdedup_index_append(
     # it, and the probe-side near-limit census (semdedup_probe) covers
     # the window in between. Read-modify-write of the sidecar remains
     # safe under the append contract (single writer, new ids only).
-    from .similarity import _read_index_meta, _write_index_meta
-
     spark = batch.sparkSession
-    meta = _read_index_meta(spark, path)
+    meta = fsutil.read_sidecar(spark, path, _INDEX_META, _INDEX_WRITER)
     if meta.get("kept_per_cluster") is not None:
         # pre-sidecar-census indexes (r12-era) keep the key absent —
         # seeding it with only this batch's counts would undercount the
@@ -781,7 +752,7 @@ def semdedup_index_append(
         for c in touched:
             counts[str(c)] = int(recount.get(c, 0))
         meta["kept_per_cluster"] = counts
-        _write_index_meta(spark, path, meta)
+        fsutil.write_sidecar(spark, path, _INDEX_META, meta)
     return rows.select(id_col, "cluster", "centroid_sim", "kept")
 
 

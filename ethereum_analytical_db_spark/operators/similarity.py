@@ -910,9 +910,10 @@ def cosine_topk_ivf(
 # if those parameters differ from what the index was built with. The
 # writers record the build parameters in an underscore-prefixed JSON file
 # INSIDE the index directory (parquet scans ignore `_*` files); the probe
-# functions validate before pruning. Local-fs I/O here — at cluster scale
-# the same file rides on the object store next to _SUCCESS.
+# functions validate before pruning (fsutil's sidecar protocol). The
+# same file rides on the object store next to _SUCCESS at cluster scale.
 _INDEX_META = "_INDEX_META.json"
+_INDEX_WRITER = "ivf_index_write/lsh_index_write/semdedup_index_write"
 
 
 def _centroid_digest(centroids: list[list[float]]) -> str:
@@ -923,34 +924,13 @@ def _centroid_digest(centroids: list[list[float]]) -> str:
     ).hexdigest()
 
 
-def _write_index_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    """Sidecar IO through the Hadoop FS API (`fsutil`): HDFS/S3 index
-    paths behave like local ones (the indexes exist FOR those stores)."""
-    fsutil.write_text_atomic(spark, f"{path}/{_INDEX_META}", json.dumps(meta))
-
-
-def _read_index_meta(spark: SparkSession, path: str) -> dict:
-    return fsutil.read_sidecar(
-        spark, path, _INDEX_META,
-        "ivf_index_write/lsh_index_write/semdedup_index_write",
-    )
-
-
-def _index_meta(
-    spark: SparkSession, path: str, kind: str, centroids=None, why: str = ""
-) -> dict:
-    """The sidecar of an index of ``kind``, refused for any other kind
-    or, when ``centroids`` is given, for another quantizer (``why`` says
-    what using it would break)."""
-    meta = _read_index_meta(spark, path)
-    if meta.get("kind") != kind:
-        raise ValueError(f"index at {path} is {meta.get('kind')!r}, not {kind}")
-    if centroids is not None and meta.get("centroid_digest") != _centroid_digest(centroids):
-        raise ValueError(
-            f"centroids do not match the ones the index at {path} was "
-            f"built with — {why}"
-        )
-    return meta
+def _ivf_meta(centroids: list[list[float]]) -> dict:
+    return {
+        "kind": "ivf",
+        "dim": len(centroids[0]),
+        "n_centroids": len(centroids),
+        "centroid_digest": _centroid_digest(centroids),
+    }
 
 
 def ivf_index_write(
@@ -969,16 +949,7 @@ def ivf_index_write(
     ivf_assign(embeddings, centroids, id_col, vec_col).write.mode(
         "overwrite"
     ).partitionBy("cluster").parquet(path)
-    _write_index_meta(
-        embeddings.sparkSession,
-        path,
-        {
-            "kind": "ivf",
-            "dim": len(centroids[0]),
-            "n_centroids": len(centroids),
-            "centroid_digest": _centroid_digest(centroids),
-        },
-    )
+    fsutil.write_sidecar(embeddings.sparkSession, path, _INDEX_META, _ivf_meta(centroids))
 
 
 def ivf_index_append(
@@ -1008,9 +979,10 @@ def ivf_index_append(
     with ``["bucket"]``) — pinned by
     test_ivf_index_compact_bounds_files_and_keeps_results.
     """
-    _index_meta(
-        embeddings.sparkSession, path, "ivf", centroids,
-        "refusing to append under a different quantizer",
+    fsutil.check_sidecar(
+        embeddings.sparkSession, path, _INDEX_META, _ivf_meta(centroids),
+        _INDEX_WRITER,
+        "centroids do not match — refusing to append under a different quantizer",
     )
     ivf_assign(embeddings, centroids, id_col, vec_col).write.mode(
         "append"
@@ -1031,8 +1003,9 @@ def cosine_topk_ivf_index(
     partition filter on the cluster-partitioned layout, so the scan reads
     ~nprobe/n_centroids of the files. Train once (``ivf_train_centroids``),
     write once (``ivf_index_write``), probe per query."""
-    _index_meta(
-        spark, path, "ivf", centroids, "a probe would prune to the wrong clusters"
+    fsutil.check_sidecar(
+        spark, path, _INDEX_META, _ivf_meta(centroids), _INDEX_WRITER,
+        "centroids do not match — a probe would prune to the wrong clusters",
     )
     probe_ids = _probe_clusters(query_vector, centroids, nprobe)
     scan = spark.read.parquet(path).filter(F.col("cluster").isin(probe_ids))
@@ -1060,9 +1033,8 @@ def lsh_index_write(
     _assign_sign_buckets(
         embeddings, _plane_matrix(dim, planes, seed), id_col, vec_col
     ).write.mode("overwrite").partitionBy("bucket").parquet(path)
-    _write_index_meta(
-        embeddings.sparkSession,
-        path,
+    fsutil.write_sidecar(
+        embeddings.sparkSession, path, _INDEX_META,
         {"kind": "lsh", "dim": dim, "planes": planes, "seed": seed},
     )
 
@@ -1078,7 +1050,9 @@ def lsh_index_append(
     the index wasn't built with) and append to the bucket-partitioned
     layout. Same contract as :func:`ivf_index_append`: batch ids must be
     new; each append touches only the partitions its vectors hash to."""
-    meta = _index_meta(embeddings.sparkSession, path, "lsh")
+    meta = fsutil.check_sidecar(
+        embeddings.sparkSession, path, _INDEX_META, {"kind": "lsh"}, _INDEX_WRITER
+    )
     planes = _plane_matrix(meta["dim"], meta["planes"], meta["seed"])
     _assign_sign_buckets(embeddings, planes, id_col, vec_col).write.mode(
         "append"
@@ -1139,15 +1113,13 @@ def cosine_topk_lsh_index(
     ``nprobe`` directories out of 2^planes (multi-probe: the extra
     buckets are the lowest-margin bit flips, the standard recall knob
     that costs probes, not index copies)."""
-    meta = _index_meta(spark, path, "lsh")
-    built = (meta.get("dim"), meta.get("planes"), meta.get("seed"))
-    probing = (len(query_vector), planes, seed)
-    if built != probing:
-        raise ValueError(
-            f"probe parameters (dim, planes, seed)={probing} do not match "
-            f"the index at {path} built with {built} — the query would "
-            "hash into the wrong bucket"
-        )
+    fsutil.check_sidecar(
+        spark, path, _INDEX_META,
+        {"kind": "lsh", "dim": len(query_vector), "planes": planes, "seed": seed},
+        _INDEX_WRITER,
+        "(dim, planes, seed) fix the plane matrix — the query would hash "
+        "into the wrong bucket",
+    )
     pm = _plane_matrix(len(query_vector), planes, seed)
     buckets = _multiprobe_buckets(query_vector, pm, nprobe)
     scan = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import traces
+from . import frozen
 from .registry import register, table
 
 # The standalone uint256_decode micro-query (F1 high-limb/decimals
@@ -171,31 +172,19 @@ def trace_parent_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "parent_error")
 
 
-# per-process reorg warehouse cache: (abs sf_dir) → warehouse root.
-# Built ONCE per process (frozen lifecycle: pid-suffixed dir, atexit
-# removal, dead-pid orphan sweep — plans/frozen.py), then every
+# reorg warehouse root, built ONCE per session (plans/frozen.memo:
+# pid-suffixed dir, atexit removal, dead-pid orphan sweep), then every
 # invocation measures the serve side: a FINAL read resolving the upsert
 # stream + tombstones. The build is the reference-shaped ingest story:
 # v1 = every block's facts from the then-canonical chain, v2 = a fork
 # re-ingest of a subset, reconcile_chain tombstoning the orphans whose
 # block is covered by the canonical dim (operators/reorg.py).
-_REORG_FROZEN: dict[str, str] = {}
-
-
 def _reorg_warehouse(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import tempfile
-
     from ..catalog import Warehouse
     from ..operators.reorg import reconcile_chain
-    from .frozen import acquire
     from .registry import table as _table
 
-    key = os.path.abspath(sf_dir)
-    if key not in _REORG_FROZEN:
-        root = acquire(
-            os.path.join(tempfile.gettempdir(), "spark_graft_reorg_wh"), key
-        )
+    def build(root: str) -> str:
         wh = Warehouse(spark, root)
         ev = _table(spark, sf_dir, "events")
         v1 = ev.select(
@@ -226,8 +215,9 @@ def _reorg_warehouse(spark: SparkSession, sf_dir: str) -> str:
             .withColumn("hash", F.md5(F.col("number").cast("string")))
         )
         reconcile_chain(wh, canon, tables=("event",))
-        _REORG_FROZEN[key] = root
-    return _REORG_FROZEN[key]
+        return root
+
+    return frozen.memo(spark, "reorg_wh", sf_dir, build)
 
 
 @register(

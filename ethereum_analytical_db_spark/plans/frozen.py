@@ -1,11 +1,16 @@
 """Per-process frozen artifacts for serve-path registry queries.
 
-Two registry queries measure a production READ path against an index
-materialized once per process (the IVF Parquet index, the hash-bucketed
-events layout). Their artifacts land under a shared ``$TMPDIR`` base as
+Five registry queries measure a production READ path against a fixture
+materialized once (the IVF, MinHash band and exact-digest Parquet
+indexes, the hash-bucketed events layout, the reorg fork warehouse).
+Their artifacts land under a shared ``$TMPDIR`` base as
 ``<md5-of-sf-dir>_<pid>`` directories; this module owns the lifecycle
-rules both share:
+rules all of them share:
 
+- :func:`memo` is the one fixture memo, keyed on the SparkContext's
+  ``applicationId`` as well as the fixture kind and the data directory:
+  a fixture holds catalog names and py4j-backed state of the session
+  that built it, so a restarted session builds its own;
 - :func:`acquire` reserves the path, registers ONE shared atexit
   cleanup on first use, and sweeps dead-pid orphans once per base per
   process — so every frozen artifact gets the same lifecycle and a fix
@@ -21,8 +26,11 @@ import atexit
 import hashlib
 import os
 import shutil
+import tempfile
 
 _OWNED: list[str] = []
+# (applicationId, kind, abspath(sf_dir)) → the fixture build(path) returned
+_MEMO: dict[tuple[str, str, str], object] = {}
 _ATEXIT_REGISTERED = False
 _SWEPT_BASES: set[str] = set()
 
@@ -46,19 +54,34 @@ def acquire(base: str, key: str) -> str:
     return path
 
 
-def release(path: str) -> None:
-    """Remove one owned artifact now (tests / explicit invalidation)."""
-    shutil.rmtree(path, ignore_errors=True)
-    if path in _OWNED:
-        _OWNED.remove(path)
+def memo(spark, kind: str, sf_dir: str, build):
+    """The frozen fixture ``kind`` of ``sf_dir`` for the active
+    SparkContext: ``build(path)`` materializes it into a directory
+    reserved by :func:`acquire` under ``$TMPDIR/spark_graft_<kind>``,
+    once, and every later call returns what it returned. The
+    application id is part of the key: a fixture registered in the
+    catalog of a stopped session is unknown to the next one, which
+    rebuilds into the same directory, emptied first."""
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, kind, os.path.abspath(sf_dir))
+    if key not in _MEMO:
+        for stale in [k for k in _MEMO if k[0] != app_id]:
+            del _MEMO[stale]
+        base = os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}")
+        path = acquire(base, key[2])
+        shutil.rmtree(path, ignore_errors=True)  # a stopped session's copy
+        _MEMO[key] = build(path)
+    return _MEMO[key]
 
 
 def release_all() -> None:
-    """atexit: remove every artifact THIS process froze (the caches are
-    per-process, so nothing else can be reading them at exit)."""
+    """Remove every artifact THIS process froze and forget every memoised
+    fixture (atexit; tests and explicit invalidation call it too — the
+    artifacts are per-process, so nothing else can be reading them)."""
     for p in _OWNED:
         shutil.rmtree(p, ignore_errors=True)
     _OWNED.clear()
+    _MEMO.clear()
 
 
 def sweep_orphans(base: str) -> None:

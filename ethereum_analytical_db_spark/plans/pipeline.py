@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup, packing, sampling, similarity, text
+from . import frozen
 from .registry import register, table
 
 STOPWORDS = ["the", "a", "value", "row", "data"]
@@ -952,60 +953,25 @@ def ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# frozen-index cache for the probe-only serve query: (abs sf_dir) →
-# (index path, centroids, query vector). Train + materialize happen ONCE
-# per process; every subsequent build is a pure probe. This is what
+# frozen index of the probe-only serve query: (index path, centroids,
+# query vector), built once per session (plans/frozen.memo). This is what
 # separates the two registered IVF timings: `ann_cosine_ivf` measures
 # BUILD+probe (k-means + full assignment each run — the cost a user pays
 # to stand the index up), `ann_cosine_ivf_probe` measures the production
 # READ path (partition-pruned scan of ~nprobe/n_centroids of the files).
-_IVF_FROZEN: dict[str, tuple[str, list, list]] = {}
-
-
-def _ivf_cleanup() -> None:
-    """Remove every index THIS process materialized and drop the cache
-    (tests / explicit invalidation; at exit the shared frozen.release_all
-    handles the trees)."""
-    from .frozen import release
-
-    for path, _, _ in _IVF_FROZEN.values():
-        release(path)
-    _IVF_FROZEN.clear()
-
-
-def _ivf_sweep_orphans(base: str) -> None:
-    """Shared frozen-artifact orphan rule — see plans/frozen.py."""
-    from .frozen import sweep_orphans
-
-    sweep_orphans(base)
-
-
 def _ivf_frozen_index(spark: SparkSession, sf_dir: str):
-    import os
-    import tempfile
-
-    from .frozen import acquire
-
-    key = os.path.abspath(sf_dir)
-    if key not in _IVF_FROZEN:
+    def build(path: str):
         emb = table(spark, sf_dir, "embeddings")
         qvec = [
             float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
         ]
         centroids = similarity.ivf_train_centroids(emb, n_centroids=8, iterations=2)
-        # per-process (pid-suffixed) + collision-free (md5 of the abs
-        # dir): two concurrent bench/pytest processes must never
-        # overwrite each other's partition-pruned reads (review find);
-        # atexit cleanup + dead-pid orphan sweep are the shared frozen
-        # lifecycle (plans/frozen.py)
-        path = acquire(
-            os.path.join(tempfile.gettempdir(), "spark_graft_ivf_index"), key
-        )
         # the index holds the candidate set (query row excluded, same as
         # ann_cosine_ivf); centroids still train on the full corpus
         similarity.ivf_index_write(emb.filter(F.col("vec_id") != 0), path, centroids)
-        _IVF_FROZEN[key] = (path, centroids, qvec)
-    return _IVF_FROZEN[key]
+        return path, centroids, qvec
+
+    return frozen.memo(spark, "ivf_index", sf_dir, build)
 
 
 @register(
@@ -1027,41 +993,19 @@ def ann_cosine_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# frozen-index cache for the incremental-dedup serve query: (abs sf_dir)
-# → band-index path. Same split as the IVF pair: `minhash_lsh_candidates`
-# measures the full batch recompute (every doc re-hashed every run);
-# `minhash_dedup_probe` measures what a production ingest pays PER SHARD
-# once the corpus index exists — only the shard hashes, the corpus is a
-# scan-only broadcast-join side.
-_MINHASH_FROZEN: dict[str, str] = {}
-
-
-def _minhash_cleanup() -> None:
-    """Remove every band index THIS process materialized and drop the
-    cache (tests / explicit invalidation; at exit the shared
-    frozen.release_all handles the trees)."""
-    from .frozen import release
-
-    for path in _MINHASH_FROZEN.values():
-        release(path)
-    _MINHASH_FROZEN.clear()
-
-
+# frozen band index of the incremental-dedup serve query. Same split as
+# the IVF pair: `minhash_lsh_candidates` measures the full batch
+# recompute (every doc re-hashed every run); `minhash_dedup_probe`
+# measures what a production ingest pays PER SHARD once the corpus index
+# exists — only the shard hashes, the corpus is a scan-only
+# broadcast-join side.
 def _minhash_frozen_index(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    from .frozen import acquire
-
-    key = os.path.abspath(sf_dir)
-    if key not in _MINHASH_FROZEN:
+    def build(path: str) -> str:
         corpus = docs_table(spark, sf_dir).filter(F.col("doc_id") % 10 != 0)
-        path = acquire(
-            os.path.join(tempfile.gettempdir(), "spark_graft_minhash_index"), key
-        )
         dedup.minhash_index_write(corpus, path, n=3, num_hashes=32, bands=8)
-        _MINHASH_FROZEN[key] = path
-    return _MINHASH_FROZEN[key]
+        return path
+
+    return frozen.memo(spark, "minhash_index", sf_dir, build)
 
 
 @register(
@@ -1088,35 +1032,13 @@ def minhash_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `exact_dedup_probe` completes the incremental serve-path trio
 # (MinHash r9, SimHash r9, exact r10): per-shard cost is O(shard
 # digests + corpus scan) with the shard broadcast to the index side.
-_EXACT_FROZEN: dict[str, str] = {}
-
-
-def _exact_cleanup() -> None:
-    """Remove every digest index THIS process materialized and drop the
-    cache (tests / explicit invalidation; at exit the shared
-    frozen.release_all handles the trees)."""
-    from .frozen import release
-
-    for path in _EXACT_FROZEN.values():
-        release(path)
-    _EXACT_FROZEN.clear()
-
-
 def _exact_frozen_index(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    from .frozen import acquire
-
-    key = os.path.abspath(sf_dir)
-    if key not in _EXACT_FROZEN:
+    def build(path: str) -> str:
         corpus = docs_table(spark, sf_dir).filter(F.col("doc_id") % 10 != 0)
-        path = acquire(
-            os.path.join(tempfile.gettempdir(), "spark_graft_exact_index"), key
-        )
         dedup.exact_index_write(corpus, path)
-        _EXACT_FROZEN[key] = path
-    return _EXACT_FROZEN[key]
+        return path
+
+    return frozen.memo(spark, "exact_index", sf_dir, build)
 
 
 @register(

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import fsutil
+
 
 def dedup_exact_stream(
     docs: DataFrame,
@@ -226,8 +228,7 @@ def near_dedup_stream(
                 batch_df, text_col, id_col, n, num_hashes, bands
             )
 
-        def write_meta(spark):
-            d._ensure_band_index_meta(spark, index_path, n, num_hashes, bands)
+        sidecar = (d._BAND_INDEX_META, d._band_meta(n, num_hashes, bands), d._BAND_WRITER)
 
         index_partition = "band"
     elif family == "simhash":
@@ -251,8 +252,7 @@ def near_dedup_stream(
                 d.simhash_signatures(batch_df, text_col, id_col), blocks
             )
 
-        def write_meta(spark):
-            d._ensure_simhash_index_meta(spark, index_path, blocks)
+        sidecar = (d._SIMHASH_INDEX_META, d._simhash_meta(blocks), d._SIMHASH_WRITER)
 
         index_partition = "blk"
     elif family == "exact":
@@ -273,8 +273,7 @@ def near_dedup_stream(
         def index_rows(batch_df):
             return d.exact_digest_rows(batch_df, text_col, id_col)
 
-        def write_meta(spark):
-            d._ensure_exact_index_meta(spark, index_path)
+        sidecar = (d._EXACT_INDEX_META, d._EXACT_META, d._EXACT_WRITER)
 
         index_partition = "pfx"
     elif family == "semantic":
@@ -308,10 +307,11 @@ def near_dedup_stream(
 
         index_rows_from_pairs = _semantic_index_rows
 
-        def write_meta(spark):
-            sd.ensure_semdedup_meta(
-                spark, index_path, centroids, semantic_threshold
-            )
+        sidecar = (
+            sd._INDEX_META,
+            sd._semdedup_meta(centroids, float(semantic_threshold)),
+            sd._INDEX_WRITER, sd._SEMDEDUP_WHY,
+        )
 
         index_partition = "cluster"
     else:
@@ -327,7 +327,7 @@ def near_dedup_stream(
     # stuck (review find). Write-iff-absent, VALIDATE if present: a
     # restart with drifted parameters must raise here, not stamp the new
     # parameters over the index it would corrupt (second review find).
-    write_meta(stream_docs.sparkSession)
+    fsutil.ensure_sidecar(stream_docs.sparkSession, index_path, *sidecar)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -335,8 +335,6 @@ def near_dedup_stream(
             return
         batch_df.persist()
         try:
-            from .. import fsutil
-
             # finish any crashed swap or fold FIRST: a pairs (or index)
             # dir parked by a crashed swap would otherwise be shadowed
             # by this batch's write recreating the canonical path, and

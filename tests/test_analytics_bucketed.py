@@ -3,6 +3,9 @@ shuffle form, a ZERO-Exchange physical plan, and the compact(layout=
 "bucketed") maintenance hook that keeps the layout live."""
 
 import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 from pyspark.sql import Row
@@ -53,12 +56,13 @@ def test_bucketed_events_frozen_lifecycle(spark):
     import tempfile
 
     from ethereum_analytical_db_spark.plans import analytics as an
+    from ethereum_analytical_db_spark.plans import frozen
     from ethereum_analytical_db_spark.plans.frozen import sweep_orphans
 
     base = os.path.join(tempfile.gettempdir(), "spark_graft_bucketed")
     name = an._bucketed_events_table(spark, SF)
     assert spark.table(name).count() > 0
-    [root] = [d for d in an._BUCKETED_EVENTS_DIRS if d.startswith(base)]
+    [root] = [d for d in frozen._OWNED if d.startswith(base)]
     assert os.path.isdir(root)
     # orphan from a dead process is swept; our live dir survives
     child = subprocess.Popen(["true"])  # noqa: S603,S607 - pid donor
@@ -68,9 +72,79 @@ def test_bucketed_events_frozen_lifecycle(spark):
     sweep_orphans(base)
     assert not os.path.exists(orphan)
     assert os.path.isdir(root)
-    an._bucketed_events_cleanup()
+    frozen.release_all()
     assert not os.path.exists(root)
-    assert an._BUCKETED_EVENTS == {}
+    assert frozen._MEMO == {}
+
+
+def test_frozen_fixtures_live_in_one_memo():
+    """Structure pin: every frozen fixture of the registry goes through
+    ``frozen.memo``. No other module under plans/ reserves a frozen
+    directory itself or keeps a module-level fixture dict."""
+    import ast
+    from pathlib import Path
+
+    from ethereum_analytical_db_spark.plans import frozen
+
+    for path in sorted(Path(frozen.__file__).parent.glob("*.py")):
+        if path.name == "frozen.py":
+            continue
+        tree = ast.parse(path.read_text())
+        calls = {
+            getattr(n.func, "attr", getattr(n.func, "id", None))
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+        }
+        assert not calls & {"acquire", "release", "sweep_orphans"}, path
+        names = [
+            t.id
+            for n in tree.body
+            if isinstance(n, (ast.Assign, ast.AnnAssign))
+            for t in (n.targets if isinstance(n, ast.Assign) else [n.target])
+            if isinstance(t, ast.Name)
+        ]
+        assert not [n for n in names if "FROZEN" in n or "BUCKETED" in n], path
+
+
+RESTART = textwrap.dedent(
+    f"""
+    from pyspark import SparkContext
+    from ethereum_analytical_db_spark.plans.registry import all_queries
+    from ethereum_analytical_db_spark.session import get_spark
+
+    for _ in range(2):
+        spark = get_spark(app_name="frozen-restart", cpus=1, shuffle_partitions=1)
+        q = all_queries()["balances_pyramid_bucketed"]
+        assert q.build(spark, {SF!r}).count() > 0
+        spark.stop()
+        # a fresh gateway and JVM for the next session
+        SparkContext._gateway.shutdown()
+        SparkContext._gateway = None
+        SparkContext._jvm = None
+    print("OK")
+    """
+)
+
+
+def test_frozen_fixture_rebuilt_after_session_restart(tmp_path):
+    """A frozen fixture belongs to the session that built it: the
+    bucketed layout is a catalog table of that session, so a restarted
+    session must build its own rather than be handed a table name it
+    never registered. The restart runs in a child process, which may
+    stop its session and gateway."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g", PYTHONPATH=repo)
+    proc = subprocess.run(
+        [sys.executable, "-c", RESTART],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0 and proc.stdout.strip().endswith("OK"), (
+        proc.stdout[-2000:] + proc.stderr[-4000:]
+    )
 
 
 def test_compact_bucketed_layout_refreshes_with_the_table(spark, tmp_path):

@@ -655,7 +655,7 @@ def test_registered_minhash_probe_query_matches_batch_form(spark):
     the same lifecycle hooks as the IVF index."""
     import os
 
-    from ethereum_analytical_db_spark.plans import pipeline as pl
+    from ethereum_analytical_db_spark.plans import frozen
     from ethereum_analytical_db_spark.plans.registry import all_queries
 
     sf = "/root/testdata/sf0.001"
@@ -671,14 +671,14 @@ def test_registered_minhash_probe_query_matches_batch_form(spark):
     assert got == {
         p: c for p, c in full.items() if p[0] % 10 == 0 or p[1] % 10 == 0
     }
-    key = os.path.abspath(sf)
-    path = pl._MINHASH_FROZEN[key]
+    key = (spark.sparkContext.applicationId, "minhash_index", os.path.abspath(sf))
+    path = frozen._MEMO[key]
     assert os.path.isdir(path)
     qs["minhash_dedup_probe"].build(spark, sf)
-    assert pl._MINHASH_FROZEN[key] == path  # cached, not rebuilt
-    pl._minhash_cleanup()
+    assert frozen._MEMO[key] == path  # cached, not rebuilt
+    frozen.release_all()
     assert not os.path.exists(path)
-    assert pl._MINHASH_FROZEN == {}
+    assert frozen._MEMO == {}
 
 
 def test_minhash_probe_append_sequential_shards(spark, tmp_path):
@@ -888,8 +888,8 @@ def test_frozen_index_rows_golden_digests(spark):
 def test_one_pipeline_per_dedup_family():
     """Structure pin: the md5 faces are ``hash_family`` values of the
     production operators, the hot-key count is written once under
-    operators/ (``_hot_keys``), and index sidecars are read and
-    validated only by ``fsutil.read_sidecar``."""
+    operators/ (``_hot_keys``), and index sidecars are read, written,
+    validated and ensured only by fsutil's sidecar protocol."""
     import re
     from pathlib import Path
 
@@ -900,6 +900,17 @@ def test_one_pipeline_per_dedup_family():
     hot_count = r"count\(F\.lit\(1\)\)\.alias\(\"\w+\"\)\)\s*\.filter\(F\.col\(\"\w+\"\) >"
     assert len(re.findall(hot_count, src)) == 1
     assert "is corrupt" not in src and "read_sidecar" in src
+    # sidecars are written, validated and ensured only by fsutil's
+    # protocol: no family keeps its own writer, check or ensure
+    pkg = ops.parent
+    for path in sorted([*ops.glob("*.py"), *(pkg / "streaming").glob("*.py")]):
+        body = path.read_text()
+        assert "write_text_atomic" not in body, path
+        assert not re.findall(
+            r"def (_check_\w*_index_meta|_ensure_\w*|_validate_semdedup_meta"
+            r"|ensure_semdedup_meta)\(",
+            body,
+        ), path
 
 
 def test_minhash_hot_bucket_cap_subsets_and_bounds(spark):
@@ -1028,6 +1039,8 @@ def test_precompact_recovery_at_every_index_entry_point(spark, tmp_path):
     deleted the backup as 'provably stale', destroying the only copy."""
     import os
 
+    from ethereum_analytical_db_spark import fsutil
+
     from ethereum_analytical_db_spark.operators import dedup
 
     docs = spark.createDataFrame(
@@ -1053,9 +1066,12 @@ def test_precompact_recovery_at_every_index_entry_point(spark, tmp_path):
         assert got == want  # full content recovered, nothing bootstrapped
 
     # the stream-wiring path (write-iff-absent would have recreated it)
-    crash(lambda: dedup._ensure_band_index_meta(spark, idx, 3, 32, 8))
+    crash(lambda: fsutil.ensure_sidecar(
+        spark, idx, dedup._BAND_INDEX_META, dedup._band_meta(3, 32, 8),
+        dedup._BAND_WRITER,
+    ))
     # the probe/append validation path
-    crash(lambda: dedup._check_band_index_meta(spark, idx, 3, 32, 8))
+    crash(lambda: dedup.minhash_probe_candidates(spark, idx, docs))
     # compact_index itself still recovers-and-compacts in one call
     crash(lambda: dedup.compact_index(spark, idx, ["band"]))
 
@@ -1088,7 +1104,7 @@ def test_corrupt_sidecar_raises_actionable_error(spark, tmp_path):
     # truncate the sidecar the way a crash mid-write would have
     fsutil.write_text(spark, f"{idx}/{dedup._BAND_INDEX_META}", '{"kind": "minh')
     with pytest.raises(ValueError, match="corrupt"):
-        dedup._check_band_index_meta(spark, idx, 3, 32, 8)
+        dedup.minhash_probe_candidates(spark, idx, docs)
 
 
 def _exact_recompute_pairs(rows):
@@ -1205,7 +1221,7 @@ def test_exact_index_rejects_wrong_kind_and_validates(spark, tmp_path):
     # a band probe against an exact index: the band sidecar is absent
     # (the exact one is there), so the check fails loudly either way
     with pytest.raises(ValueError, match="sidecar"):
-        dedup._check_band_index_meta(spark, exact_idx, 3, 32, 8)
+        dedup.minhash_probe_candidates(spark, exact_idx, docs)
     # and the kind field catches a hand-mislabeled sidecar
     import json
 
@@ -1216,8 +1232,8 @@ def test_exact_index_rejects_wrong_kind_and_validates(spark, tmp_path):
         f"{exact_idx}/{dedup._EXACT_INDEX_META}",
         json.dumps({"kind": "minhash_bands"}),
     )
-    with pytest.raises(ValueError, match="not an exact_md5"):
-        dedup._check_exact_index_meta(spark, exact_idx)
+    with pytest.raises(ValueError, match="not exact_md5"):
+        dedup.exact_probe_duplicates(spark, exact_idx, docs)
 
 
 def test_exact_dedup_probe_registry_query(spark):
@@ -1227,7 +1243,7 @@ def test_exact_dedup_probe_registry_query(spark):
     shard-touching ones."""
     import os
 
-    from ethereum_analytical_db_spark.plans import pipeline as pl
+    from ethereum_analytical_db_spark.plans import frozen
     from ethereum_analytical_db_spark.plans.registry import all_queries
 
     sf = "/root/testdata/sf0.001"
@@ -1244,14 +1260,14 @@ def test_exact_dedup_probe_registry_query(spark):
         if p[0] % 10 == 0 or p[1] % 10 == 0
     }
     assert got == want
-    key = os.path.abspath(sf)
-    path = pl._EXACT_FROZEN[key]
+    key = (spark.sparkContext.applicationId, "exact_index", os.path.abspath(sf))
+    path = frozen._MEMO[key]
     assert os.path.isdir(path)
     qs["exact_dedup_probe"].build(spark, sf)
-    assert pl._EXACT_FROZEN[key] == path  # cached, not rebuilt
-    pl._exact_cleanup()
+    assert frozen._MEMO[key] == path  # cached, not rebuilt
+    frozen.release_all()
     assert not os.path.exists(path)
-    assert pl._EXACT_FROZEN == {}
+    assert frozen._MEMO == {}
 
 
 def test_self_join_branches_reuse_one_exchange(spark):

@@ -297,9 +297,10 @@ def test_probe_prunes_partitions_and_validates(spark, served):
         semdedup.semdedup_probe(df, path, bad)
     with pytest.raises(ValueError, match="threshold"):
         semdedup.semdedup_probe(df, path, centroids, threshold=0.5)
+    from ethereum_analytical_db_spark import fsutil
     from ethereum_analytical_db_spark.operators import similarity as sim
 
-    sim._write_index_meta(spark, path + "_k", {"kind": "ivf"})
+    fsutil.write_sidecar(spark, path + "_k", sim._INDEX_META, {"kind": "ivf"})
     with pytest.raises(ValueError, match="not semdedup"):
         semdedup.semdedup_probe(df, path + "_k", centroids)
 
@@ -379,9 +380,10 @@ def test_sidecar_kept_counts_maintained_and_probe_equivalent(spark, served):
     a probe with the sidecar counts equals one forced onto the census
     fallback, and a pre-census index (key absent) never gets a partial
     seed from an append."""
+    from ethereum_analytical_db_spark import fsutil
     from ethereum_analytical_db_spark.operators.similarity import (
-        _read_index_meta,
-        _write_index_meta,
+        _INDEX_META,
+        _INDEX_WRITER,
     )
 
     path, centroids, batches = served
@@ -392,12 +394,12 @@ def test_sidecar_kept_counts_maintained_and_probe_equivalent(spark, served):
             out[str(r["cluster"])] = out.get(str(r["cluster"]), 0) + 1
         return out
 
-    meta = _read_index_meta(spark, path)
+    meta = fsutil.read_sidecar(spark, path, _INDEX_META, _INDEX_WRITER)
     assert meta["kept_per_cluster"] == census()
 
     df = spark.createDataFrame(batches[1], "vec_id long, embedding array<float>")
     semdedup.semdedup_index_append(df, path, centroids)
-    meta = _read_index_meta(spark, path)
+    meta = fsutil.read_sidecar(spark, path, _INDEX_META, _INDEX_WRITER)
     assert meta["kept_per_cluster"] == census()
 
     # probe parity: sidecar counts vs census fallback (key stripped)
@@ -408,7 +410,7 @@ def test_sidecar_kept_counts_maintained_and_probe_equivalent(spark, served):
     }
     stripped = dict(meta)
     stripped.pop("kept_per_cluster")
-    _write_index_meta(spark, path, stripped)
+    fsutil.write_sidecar(spark, path, _INDEX_META, stripped)
     without_meta = {
         r["vec_id"]: (r["kept"], r["cluster"])
         for r in semdedup.semdedup_probe(df2, path, centroids).collect()
@@ -417,7 +419,9 @@ def test_sidecar_kept_counts_maintained_and_probe_equivalent(spark, served):
 
     # pre-census index: append must NOT seed a partial count map
     semdedup.semdedup_index_append(df2, path, centroids)
-    assert "kept_per_cluster" not in _read_index_meta(spark, path)
+    assert "kept_per_cluster" not in fsutil.read_sidecar(
+        spark, path, _INDEX_META, _INDEX_WRITER
+    )
 
 
 def test_sidecar_self_heals_after_simulated_crash_drift(spark, served):
@@ -427,16 +431,17 @@ def test_sidecar_self_heals_after_simulated_crash_drift(spark, served):
     REBUILDS the touched clusters' counts from the index, so a
     deliberately-corrupted (undercounted) sidecar heals on the next
     append that touches the cluster."""
+    from ethereum_analytical_db_spark import fsutil
     from ethereum_analytical_db_spark.operators.similarity import (
-        _read_index_meta,
-        _write_index_meta,
+        _INDEX_META,
+        _INDEX_WRITER,
     )
 
     path, centroids, batches = served
-    meta = _read_index_meta(spark, path)
+    meta = fsutil.read_sidecar(spark, path, _INDEX_META, _INDEX_WRITER)
     corrupted = {k: 1 for k in meta["kept_per_cluster"]}  # deep undercount
     meta["kept_per_cluster"] = corrupted
-    _write_index_meta(spark, path, meta)
+    fsutil.write_sidecar(spark, path, _INDEX_META, meta)
 
     df = spark.createDataFrame(batches[1], "vec_id long, embedding array<float>")
     touched = {
@@ -449,7 +454,9 @@ def test_sidecar_self_heals_after_simulated_crash_drift(spark, served):
     census = {}
     for r in spark.read.parquet(path).filter("kept").collect():
         census[str(r["cluster"])] = census.get(str(r["cluster"]), 0) + 1
-    healed = _read_index_meta(spark, path)["kept_per_cluster"]
+    healed = fsutil.read_sidecar(
+        spark, path, _INDEX_META, _INDEX_WRITER
+    )["kept_per_cluster"]
     for c in touched:
         assert healed[c] == census.get(c, 0), (c, healed, census)
     for c in set(corrupted) - touched:  # untouched clusters stay stale
@@ -465,9 +472,10 @@ def test_probe_near_limit_census_belt(spark, served):
     arms the chunked plan. (A DEEP undercount below the half band keeps
     the single-pass plan by design — bounded-cost trade covered by the
     self-healing append recount.)"""
+    from ethereum_analytical_db_spark import fsutil
     from ethereum_analytical_db_spark.operators.similarity import (
-        _read_index_meta,
-        _write_index_meta,
+        _INDEX_META,
+        _INDEX_WRITER,
     )
 
     path, centroids, batches = served
@@ -478,11 +486,11 @@ def test_probe_near_limit_census_belt(spark, served):
     limit = census[big] - 1  # the big cluster is genuinely over-limit
     assert limit >= 2
 
-    meta = _read_index_meta(spark, path)
+    meta = fsutil.read_sidecar(spark, path, _INDEX_META, _INDEX_WRITER)
     near = dict(meta["kept_per_cluster"])
     near[big] = (limit + 1) // 2  # near-limit undercount: belt triggers
     meta["kept_per_cluster"] = near
-    _write_index_meta(spark, path, meta)
+    fsutil.write_sidecar(spark, path, _INDEX_META, meta)
 
     df = spark.createDataFrame(batches[1], "vec_id long, embedding array<float>")
     stats: dict = {}
@@ -534,8 +542,10 @@ def test_semdedup_index_compact_bounds_files_and_keeps_verdicts(spark, served):
     import glob
 
     from ethereum_analytical_db_spark.operators import dedup
+    from ethereum_analytical_db_spark import fsutil
     from ethereum_analytical_db_spark.operators.similarity import (
-        _read_index_meta,
+        _INDEX_META,
+        _INDEX_WRITER,
     )
 
     path, centroids, batches = served
@@ -549,7 +559,7 @@ def test_semdedup_index_compact_bounds_files_and_keeps_verdicts(spark, served):
         (r["vec_id"], r["cluster"], r["kept"])
         for r in spark.read.parquet(path).collect()
     )
-    meta_before = _read_index_meta(spark, path)
+    meta_before = fsutil.read_sidecar(spark, path, _INDEX_META, _INDEX_WRITER)
     n_clusters = len({c for _, c, _ in content_before})
     files_before = glob.glob(f"{path}/cluster=*/*.parquet")
     assert len(files_before) > n_clusters  # appends did fragment it
@@ -558,7 +568,8 @@ def test_semdedup_index_compact_bounds_files_and_keeps_verdicts(spark, served):
 
     files_after = glob.glob(f"{path}/cluster=*/*.parquet")
     assert len(files_after) == n_clusters  # one file per cluster dir
-    assert _read_index_meta(spark, path) == meta_before  # census survives
+    # census survives
+    assert fsutil.read_sidecar(spark, path, _INDEX_META, _INDEX_WRITER) == meta_before
     content_after = sorted(
         (r["vec_id"], r["cluster"], r["kept"])
         for r in spark.read.parquet(path).collect()
@@ -574,7 +585,9 @@ def test_semdedup_index_compact_bounds_files_and_keeps_verdicts(spark, served):
     census = {}
     for r in spark.read.parquet(path).filter("kept").collect():
         census[str(r["cluster"])] = census.get(str(r["cluster"]), 0) + 1
-    healed = _read_index_meta(spark, path)["kept_per_cluster"]
+    healed = fsutil.read_sidecar(
+        spark, path, _INDEX_META, _INDEX_WRITER
+    )["kept_per_cluster"]
     for c, n in census.items():
         assert healed.get(c) == n
 

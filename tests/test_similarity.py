@@ -429,8 +429,10 @@ def test_ivf_index_compact_bounds_files_and_keeps_results(spark, tmp_path):
     import glob
 
     from ethereum_analytical_db_spark.operators import dedup
+    from ethereum_analytical_db_spark import fsutil
     from ethereum_analytical_db_spark.operators.similarity import (
-        _read_index_meta,
+        _INDEX_META,
+        _INDEX_WRITER,
     )
 
     rows, _ = _mk_vectors()
@@ -451,14 +453,14 @@ def test_ivf_index_compact_bounds_files_and_keeps_results(spark, tmp_path):
             spark, path, q, cents, k=5, nprobe=4
         ).collect()
     ]
-    meta_before = _read_index_meta(spark, path)
+    meta_before = fsutil.read_sidecar(spark, path, _INDEX_META, _INDEX_WRITER)
     n_clusters = len(glob.glob(f"{path}/cluster=*"))
     assert len(glob.glob(f"{path}/cluster=*/*.parquet")) > n_clusters
 
     dedup.compact_index(spark, path, ["cluster"])
 
     assert len(glob.glob(f"{path}/cluster=*/*.parquet")) == n_clusters
-    assert _read_index_meta(spark, path) == meta_before
+    assert fsutil.read_sidecar(spark, path, _INDEX_META, _INDEX_WRITER) == meta_before
     got = [
         (r["vec_id"], round(r["cosine"], 9))
         for r in similarity.cosine_topk_ivf_index(
@@ -483,8 +485,10 @@ def test_lsh_index_compact_bounds_files_and_keeps_results(spark, tmp_path):
     import glob
 
     from ethereum_analytical_db_spark.operators import dedup
+    from ethereum_analytical_db_spark import fsutil
     from ethereum_analytical_db_spark.operators.similarity import (
-        _read_index_meta,
+        _INDEX_META,
+        _INDEX_WRITER,
     )
 
     rows, _ = _mk_vectors()
@@ -506,14 +510,14 @@ def test_lsh_index_compact_bounds_files_and_keeps_results(spark, tmp_path):
             spark, path, q, k=5, nprobe=4
         ).collect()
     ]
-    meta_before = _read_index_meta(spark, path)
+    meta_before = fsutil.read_sidecar(spark, path, _INDEX_META, _INDEX_WRITER)
     n_buckets = len(glob.glob(f"{path}/bucket=*"))
     assert len(glob.glob(f"{path}/bucket=*/*.parquet")) > n_buckets
 
     dedup.compact_index(spark, path, ["bucket"])
 
     assert len(glob.glob(f"{path}/bucket=*/*.parquet")) == n_buckets
-    assert _read_index_meta(spark, path) == meta_before
+    assert fsutil.read_sidecar(spark, path, _INDEX_META, _INDEX_WRITER) == meta_before
     got = [
         (r["vec_id"], round(r["cosine"], 9))
         for r in similarity.cosine_topk_lsh_index(
@@ -664,6 +668,7 @@ def test_ivf_frozen_index_lifecycle(spark):
     import subprocess
     import tempfile
 
+    from ethereum_analytical_db_spark.plans import frozen
     from ethereum_analytical_db_spark.plans import pipeline as pl
 
     base = os.path.join(tempfile.gettempdir(), "spark_graft_ivf_index")
@@ -676,15 +681,15 @@ def test_ivf_frozen_index_lifecycle(spark):
     child.wait()  # reaped: os.kill(pid, 0) now raises ProcessLookupError
     orphan = os.path.join(base, f"deadbeefdeadbeef_{child.pid}")
     os.makedirs(orphan, exist_ok=True)
-    pl._ivf_sweep_orphans(base)
+    frozen.sweep_orphans(base)
     assert not os.path.exists(orphan)
     # a dir owned by a LIVE pid (ours) survives the sweep
-    pl._ivf_sweep_orphans(base)
+    frozen.sweep_orphans(base)
     assert os.path.isdir(path)
     # atexit hook removes our own index and empties the cache
-    pl._ivf_cleanup()
+    frozen.release_all()
     assert not os.path.exists(path)
-    assert pl._IVF_FROZEN == {}
+    assert frozen._MEMO == {}
 
 
 def test_embedding_near_dup_lsh_md5_face(spark):

@@ -18,6 +18,7 @@ import ethereum_analytical_db_spark
 from ethereum_analytical_db_spark import fsutil
 from ethereum_analytical_db_spark.catalog import Warehouse
 from ethereum_analytical_db_spark.operators import dedup
+from ethereum_analytical_db_spark.streaming import dedupe_stream, stream
 
 
 class Crash(BaseException):
@@ -89,13 +90,20 @@ def _warehouse(spark, tmp_path):
     return wh._path("block"), lambda: wh.compact("block"), entry, rows
 
 
+def _band_sidecar(spark, path):
+    return (
+        spark, path, dedup._BAND_INDEX_META, dedup._band_meta(3, 32, 8),
+        dedup._BAND_WRITER,
+    )
+
+
 def _band_index(spark, tmp_path):
     path = str(tmp_path / "band_index")
     dedup.minhash_index_write(_docs(spark, 0, 6), path)
     dedup.minhash_index_append(_docs(spark, 6, 12), path)
 
     def entry():
-        dedup._check_band_index_meta(spark, path, 3, 32, 8)
+        fsutil.check_sidecar(*_band_sidecar(spark, path))
 
     return (
         path,
@@ -111,10 +119,10 @@ def _stream_index(spark, tmp_path):
         dedup.minhash_band_rows(_docs(spark, 4 * b, 4 * b + 4)).withColumn(
             "batch", F.lit(b)
         ).write.mode("append").partitionBy("batch", "band").parquet(path)
-    dedup._ensure_band_index_meta(spark, path, 3, 32, 8)
+    fsutil.ensure_sidecar(*_band_sidecar(spark, path))
 
     def entry():
-        dedup._ensure_band_index_meta(spark, path, 3, 32, 8)
+        fsutil.ensure_sidecar(*_band_sidecar(spark, path))
 
     return (
         path,
@@ -124,10 +132,49 @@ def _stream_index(spark, tmp_path):
     )
 
 
+def _semantic_stream_index(spark, tmp_path):
+    """A SemDeDup stream index: its entry point is the stream wiring's
+    sidecar ensure, which a restart runs before any batch."""
+    path = str(tmp_path / "semantic_index")
+    spark.createDataFrame(
+        [(i, [float(i % 2), float(1 - i % 2)], i % 2, 1.0, i % 3 > 0, i // 4)
+         for i in range(12)],
+        "doc_id long, embedding array<float>, cluster int, "
+        "centroid_sim double, kept boolean, batch int",
+    ).write.partitionBy("batch", "cluster").parquet(path)
+    src = tmp_path / "semantic_src"
+    src.mkdir()
+    schema = spark.createDataFrame([], "doc_id long, embedding array<float>").schema
+
+    def entry():
+        dedupe_stream.near_dedup_stream(
+            stream.stream_from_files(spark, str(src), schema),
+            path, str(tmp_path / "semantic_pairs"), family="semantic",
+            id_col="doc_id", centroids=[[1.0, 0.0], [0.0, 1.0]],
+            semantic_threshold=0.9,
+        )
+
+    entry()
+
+    def rows():
+        return sorted(
+            (r["doc_id"], r["cluster"], r["kept"])
+            for r in spark.read.parquet(path).collect()
+        )
+
+    return (
+        path,
+        lambda: dedup.fold_stream_index(spark, path, "cluster", 3),
+        entry,
+        rows,
+    )
+
+
 CALLERS = {
     "warehouse_compact": _warehouse,
     "compact_index": _band_index,
     "fold_stream_index": _stream_index,
+    "semantic_stream_index": _semantic_stream_index,
 }
 
 
