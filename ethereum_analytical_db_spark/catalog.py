@@ -198,9 +198,7 @@ class Warehouse:
         table: str,
         df: DataFrame,
         id_expr=None,
-        partition_by: list[str] | None = None,
         block_partition: str | None = None,
-        block_range_size: int = 100_000,
     ) -> None:
         """Bulk upsert (reference bulk_index, clients/custom_clickhouse.py:130-189):
         set id, align to schema (drop unknown columns, null-fill missing),
@@ -228,25 +226,19 @@ class Warehouse:
         seq = self._next_seq(table)
         out = df.select(*cols).withColumn("_seq", F.lit(seq).cast("long"))
         if block_partition is not None:
-            out = out.withColumn(
-                "_block_range", block_range(block_partition, block_range_size)
-            )
-            partition_by = ["_block_range"] + (partition_by or [])
+            out = out.withColumn("_block_range", block_range(block_partition))
         writer = out.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
+        if block_partition is not None:
+            writer = writer.partitionBy("_block_range")
         writer.parquet(self._path(table))
 
     def has_block_partitions(self, table: str) -> bool:
         """True when the table directory uses the ``_block_range`` hive
         layout (cheap driver-side listing)."""
-        try:
-            return any(
-                e.startswith("_block_range=")
-                for e in fsutil.list_names(self.spark, self._path(table))
-            )
-        except FileNotFoundError:
-            return False
+        return any(
+            e.startswith("_block_range=")
+            for e in fsutil.list_names(self.spark, self._path(table))
+        )
 
     def _read_schema(self, table: str) -> StructType | None:
         """The deterministic scan schema: the registered table schema +

@@ -248,11 +248,11 @@ def mkdirs(spark: SparkSession, path: str) -> None:
 
 
 def list_names(spark: SparkSession, path: str) -> list[str]:
-    """Child entry basenames of a directory; raises FileNotFoundError
-    when the directory doesn't exist (mirroring ``os.listdir``)."""
+    """Child entry basenames of a directory; ``[]`` when the directory
+    does not exist (an index or table not written yet holds nothing)."""
     fs, jpath = _fs_and_path(spark, path)
     if not fs.exists(jpath):
-        raise FileNotFoundError(path)
+        return []
     return [st.getPath().getName() for st in fs.listStatus(jpath)]
 
 

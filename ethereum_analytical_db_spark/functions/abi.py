@@ -256,27 +256,3 @@ def decode_inputs_joined(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
     )
     return joined.mapInPandas(run, schema=f"{out_schema}, {out_col} {DECODED_DDL}")
-
-
-def decode_with_selector_table(
-    df: DataFrame,
-    selectors: dict[str, tuple[str, list[str]]],
-    input_col: str = "input",
-    out_col: str = "decoded",
-) -> DataFrame:
-    """Single-ABI variant (one selector table for all rows) — the shape
-    the registry's oracle-checked query uses."""
-    sc = df.sparkSession.sparkContext
-    bsel = sc.broadcast(selectors)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sel = bsel.value
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [decode_input_py(x, sel) for x in pdf[input_col]]
-            yield pdf
-
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    return df.mapInPandas(run, schema=f"{out_schema}, {out_col} {DECODED_DDL}")

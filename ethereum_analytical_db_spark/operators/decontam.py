@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import _shingled
+from .similarity import _unit_rows
 
 
 def benchmark_ngram_overlap(
@@ -164,10 +165,7 @@ def benchmark_embedding_similarity(
     if not rows:
         raise ValueError("benchmark side has no scorable embeddings")
     bench_ids = np.array([r["i"] for r in rows])
-    bm = np.array([r["v"] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(bm, axis=1)
-    norms[norms == 0.0] = 1.0  # zero vectors score 0 against everything
-    bm = (bm.T / norms).T  # L2-normalized, (B, dim)
+    bm = _unit_rows(r["v"] for r in rows)[0]  # (B, dim); zero rows score 0
 
     # bound the per-task gemm scratch: the (rows, B) similarity block is
     # rows×B float64, and an Arrow batch of 10k rows against a 20k-vector
@@ -186,10 +184,7 @@ def benchmark_embedding_similarity(
             vecs = pdf[vec_col]
             ok = vecs.map(lambda v: v is not None and len(v) > 0)
             if ok.any():
-                m = np.array(list(vecs[ok]), dtype=np.float64)
-                mn = np.linalg.norm(m, axis=1)
-                mn[mn == 0.0] = 1.0
-                m = m / mn[:, None]
+                m = _unit_rows(vecs[ok])[0]
                 n_ok = len(m)
                 blk_cos = np.empty(n_ok)
                 blk_near = np.empty(n_ok, dtype=np.int64)

@@ -567,19 +567,44 @@ def compact_index(spark, path: str, partition_cols: list[str]) -> None:
     _rewrite_index(spark, path, partition_cols)
 
 
+def _dir_id(name: str, prefix: str) -> int | None:
+    """Parse a dir name ``<prefix><k>`` → k; any other name → None."""
+    try:
+        return int(name[len(prefix):]) if name.startswith(prefix) else None
+    except ValueError:
+        return None
+
+
 def _gen_dir_id(name: str) -> tuple[int, str] | None:
     """Parse a pairs GENERATION dir name: ``gen=b<k>`` (live, one
     micro-batch) → (k, 'b'); ``gen=f<k>`` (folded, the union of live
     gens merged at batch k+1) → (k, 'f'); anything else → None."""
-    if not name.startswith("gen="):
-        return None
-    val = name[len("gen="):]
-    if len(val) < 2 or val[0] not in ("b", "f"):
-        return None
-    try:
-        return int(val[1:]), val[0]
-    except ValueError:
-        return None
+    for kind in "bf":
+        if (k := _dir_id(name, f"gen={kind}")) is not None:
+            return k, kind
+    return None
+
+
+def _drop_stale(spark, path: str, batch_id: int, parse) -> dict[str, int]:
+    """The one replay-hygiene loop: delete every child of ``path`` whose
+    ``parse``d batch id is ``>= batch_id``; returns {dropped name: id}
+    in name order. Non-empty drops are exceptional and logged with the
+    names, so an unintended wipe is visible, not silent."""
+    dropped = {
+        name: k for name in sorted(fsutil.list_names(spark, path))
+        if (k := parse(name)) is not None and k >= batch_id
+    }
+    for name in dropped:
+        fsutil.delete(spark, f"{path}/{name}")
+    if dropped:
+        _LOG.warning(
+            "replay hygiene at %s (batch_id=%d): dropped %s — a retry/replay "
+            "is rebuilding them (a fresh checkpoint over an existing "
+            "index/pairs path wipes prior state unless the full original "
+            "source replays)",
+            path, batch_id, list(dropped),
+        )
+    return dropped
 
 
 def drop_stale_pair_gens(spark, path: str, batch_id: int) -> list[str]:
@@ -591,24 +616,9 @@ def drop_stale_pair_gens(spark, path: str, batch_id: int) -> list[str]:
     previous life and rebuilds deterministically; a mid-stream retry of
     batch b drops only its own crashed ``gen=b<b>`` (a fold created
     during the crashed attempt is ``f<b-1>``, strictly earlier, and
-    survives correctly). Non-empty drops are exceptional and logged."""
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    dropped: list[str] = []
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        parsed = _gen_dir_id(name)
-        if parsed is not None and parsed[0] >= batch_id:
-            fs.delete(status.getPath(), True)
-            dropped.append(name)
-    if dropped:
-        _LOG.warning(
-            "drop_stale_pair_gens(%s, batch_id=%d): dropped %s — a "
-            "retry/replay is rebuilding these generations",
-            path, batch_id, sorted(dropped),
-        )
-    return sorted(dropped)
+    survives correctly). Returns the dropped dir names."""
+    gen_of = lambda name: (p := _gen_dir_id(name)) and p[0]  # noqa: E731
+    return list(_drop_stale(spark, path, batch_id, gen_of))
 
 
 def _recover_pair_fold(spark, path: str) -> None:
@@ -619,22 +629,16 @@ def _recover_pair_fold(spark, path: str) -> None:
     fold reads ALL live gens strictly earlier than its batch), so any
     such survivor is a crashed source-delete — remove it, or its rows
     would be permanently duplicated beside their folded copy."""
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return
-    names = [st.getPath().getName() for st in fs.listStatus(jpath)]
-    max_f = None
+    names = fsutil.list_names(spark, path)
     for name in names:
         if name.startswith(".compact.gen="):
             fsutil.delete(spark, f"{path}/{name}")
-        parsed = _gen_dir_id(name)
-        if parsed is not None and parsed[1] == "f":
-            max_f = parsed[0] if max_f is None else max(max_f, parsed[0])
+    gens = {name: parsed for name in names if (parsed := _gen_dir_id(name))}
+    max_f = max((k for k, kind in gens.values() if kind == "f"), default=None)
     if max_f is None:
         return
-    for name in names:
-        parsed = _gen_dir_id(name)
-        if parsed is not None and parsed[1] == "b" and parsed[0] <= max_f:
+    for name, (k, kind) in gens.items():
+        if kind == "b" and k <= max_f:
             _LOG.warning(
                 "pairs fold recovery: deleting %s/%s (already merged "
                 "into gen=f%d by a fold whose source-delete crashed)",
@@ -676,14 +680,8 @@ def fold_pairs_gens(spark, path: str, current_batch: int) -> list[int]:
     batch ids merged ([] when none, e.g. a retry after the fold
     completed)."""
     _recover_pair_fold(spark, path)
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    live: list[int] = []
-    for status in fs.listStatus(jpath):
-        parsed = _gen_dir_id(status.getPath().getName())
-        if parsed is not None and parsed[1] == "b" and parsed[0] < current_batch:
-            live.append(parsed[0])
+    gens = filter(None, map(_gen_dir_id, fsutil.list_names(spark, path)))
+    live = [k for k, kind in gens if kind == "b" and k < current_batch]
     if not live:
         return []
     fold_id = current_batch - 1
@@ -727,32 +725,10 @@ def drop_stale_batch_dirs(spark, path: str, batch_id: int) -> list[int]:
     deletes every prior batch dir — correct when the same source
     replays in full (the replay rebuilds everything), but a replay over
     a different or partial source permanently loses the difference.
-    Non-empty drops are always exceptional and are logged with the ids
-    so an unintended wipe is visible, not silent."""
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    dropped: list[int] = []
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if not name.startswith("batch="):
-            continue
-        try:
-            bid = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if bid >= batch_id:
-            fs.delete(status.getPath(), True)
-            dropped.append(bid)
-    if dropped:
-        _LOG.warning(
-            "drop_stale_batch_dirs(%s, batch_id=%d): dropped batch dirs "
-            "%s — a retry/replay is rebuilding them (a fresh checkpoint "
-            "over an existing index/pairs path wipes prior state unless "
-            "the full original source replays)",
-            path, batch_id, sorted(dropped),
-        )
-    return sorted(dropped)
+    Non-empty drops are always exceptional and are logged (see
+    :func:`_drop_stale`)."""
+    batch_of = lambda name: _dir_id(name, "batch=")  # noqa: E731
+    return sorted(_drop_stale(spark, path, batch_id, batch_of).values())
 
 
 def fold_stream_index(

@@ -35,7 +35,7 @@ Scale shape:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import fsutil
@@ -44,6 +44,7 @@ from .similarity import (
     _INDEX_WRITER,
     _assign_clusters,
     _centroid_digest,
+    _unit_rows,
     ivf_train_centroids,
 )
 
@@ -52,23 +53,103 @@ from .similarity import (
 # at the default max_cluster_rows — sized to executor memory, not data)
 _BLOCK = 2048
 
-# threshold slack for the float32 GEMM scores: ONE definition, shared
-# by every prune/probe variant — the chunked-equals-single-pass parity
-# depends on all of them comparing identically (r13 review find: four
-# hand-synchronized copies of the epsilon)
+# threshold slack for the float32 GEMM scores, read by one kernel per
+# comparison (the one-shot loop, _resident_hits, _greedy_kept): the
+# chunked-equals-single-pass parity depends on them comparing
+# identically (r13 review find: four hand-synchronized copies)
 _EPS = 1e-6
 
 
-def _unit_rows(values):
-    """Vectors → (float64 unit rows, norms); zero vectors pass through
-    with norm 0 (cosine with anything is 0 — the caller's contract).
-    Shared by every prune/probe variant so normalization can't drift
-    between the plans the parity tests compare."""
+def _verdict_ddl(id_col: str, id_type: str) -> str:
+    """The schema of every verdict frame: (id, cluster, centroid_sim, kept)."""
+    return f"`{id_col}` {id_type}, cluster int, centroid_sim double, kept boolean"
+
+
+def _verdict_frame(id_col, ids, cluster, csim, order, kept_in_order):
+    """One group's verdict rows in input row order; ``kept_in_order``
+    holds the keep bits in the group's sort ``order``."""
+    import numpy as np
+    import pandas as pd
+
+    kept = np.empty(len(order), dtype=bool)
+    kept[order] = kept_in_order
+    return pd.DataFrame(
+        {id_col: ids, "cluster": np.int32(cluster), "centroid_sim": csim, "kept": kept}
+    )
+
+
+def _centroid_order(values, ids, centroid):
+    """One group's SemDeDup order: (float32 unit rows sorted by
+    centroid_sim ASC then id ASC, centroid_sims in input order, the
+    sort permutation). Zero vectors get centroid_sim 0.0."""
     import numpy as np
 
-    v = np.asarray([np.asarray(x, dtype=np.float64) for x in values])
-    norms = np.linalg.norm(v, axis=1)
-    return v / np.where(norms == 0.0, 1.0, norms)[:, None], norms
+    unit, norms = _unit_rows(values)
+    cn = np.linalg.norm(centroid)
+    csim = (unit @ centroid) / cn if cn > 0 else np.zeros(len(unit))
+    csim = np.where(norms == 0.0, 0.0, csim)
+    order = np.lexsort((np.asarray(ids), csim))
+    return unit[order].astype(np.float32), csim, order
+
+
+def _resident_hits(u, residents, thr: float, block: int):
+    """Per float32 unit row of ``u``: does some ``residents`` vector
+    score >= ``thr``? Slabbed BOTH ways: kept residents per cluster are
+    unbounded (salt subclusters of the one-shot write share one cluster
+    partition), so a single rows × residents matrix could be tens of GB
+    on exactly the skewed corpora the salt guard exists for — peak here
+    is ``block`` × ``block`` float32. ``block`` is an argument, not
+    ``_BLOCK``: this function ships to workers by reference, so it would
+    read each worker's own module value."""
+    import numpy as np
+
+    hit = np.zeros(len(u), dtype=bool)
+    if len(residents):
+        ur = _unit_rows(residents)[0].astype(np.float32)
+        for lo in range(0, len(u), block):
+            for rlo in range(0, len(ur), block):
+                s = u[lo : lo + block] @ ur[rlo : rlo + block].T
+                hit[lo : lo + block] |= (s >= thr - _EPS).any(axis=1)
+    return hit
+
+
+def _greedy_kept(u, hit, thr: float):
+    """The online retained-set pass over float32 unit rows ``u`` in
+    their (centroid_sim, id) order: a row is kept iff it has no
+    resident ``hit`` and scores below ``thr`` against every row kept
+    before it. Sims are taken only against the KEPT prefix,
+    accumulated into a preallocated matrix — no rows² similarity
+    matrix is ever materialized."""
+    import numpy as np
+
+    kept_mat = np.empty_like(u)
+    n_kept = 0
+    kept = np.zeros(len(u), dtype=bool)
+    for i in range(len(u)):
+        if hit[i] or (n_kept and (kept_mat[:n_kept] @ u[i] >= thr - _EPS).any()):
+            continue
+        kept_mat[n_kept] = u[i]
+        n_kept += 1
+        kept[i] = True
+    return kept
+
+
+def _cluster_counts(df: DataFrame) -> dict:
+    """Rows of ``df`` per cluster (k driver-sized rows)."""
+    return {
+        r["cluster"]: r["n"]
+        for r in df.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+
+
+def _per_cluster(counts: dict) -> Column:
+    """A per-cluster count as a Column: a when-chain over the entries
+    above 1 (k branches, driver-sized by construction), else 1."""
+    col = F.lit(1)
+    for c, s in counts.items():
+        if s > 1:
+            col = F.when(F.col("cluster") == c, F.lit(s)).otherwise(col)
+    return col
 
 
 def semantic_dedup(
@@ -101,7 +182,6 @@ def semantic_dedup(
     cluster boundaries, quality does not (k-means is fit on the same
     distribution); determinism for a given fraction is preserved."""
     import numpy as np
-    import pandas as pd
 
     if centroids is None:
         train_src = embeddings
@@ -121,11 +201,7 @@ def semantic_dedup(
         # return an empty verdict with the contract schema instead of
         # letting numpy raise an opaque AxisError on a 0×0 matrix
         id_type = embeddings.schema[id_col].dataType.simpleString()
-        return embeddings.sparkSession.createDataFrame(
-            [],
-            f"`{id_col}` {id_type}, cluster int, "
-            "centroid_sim double, kept boolean",
-        )
+        return embeddings.sparkSession.createDataFrame([], _verdict_ddl(id_col, id_type))
     # persist: the size census below and the prune pass both need the
     # full n·k·d assignment — uncached, the most expensive scan of the
     # operator would run twice. Handed back to Spark's LRU (same policy
@@ -135,21 +211,11 @@ def semantic_dedup(
     # deterministic split of runaway clusters: salt by the VECTOR hash
     # (not the id) so exact duplicates always share a subcluster; the
     # size census is k rows — driver-sized by construction
-    sizes = {
-        r["cluster"]: r["n"]
-        for r in assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
     splits = {
-        c: -(-n // max_cluster_rows) for c, n in sizes.items()
+        c: -(-n // max_cluster_rows) for c, n in _cluster_counts(assigned).items()
     }  # ceil division
     if any(s > 1 for s in splits.values()):
-        split_expr = F.lit(1)
-        for c, s in splits.items():
-            if s > 1:
-                split_expr = F.when(F.col("cluster") == c, F.lit(s)).otherwise(
-                    split_expr
-                )
-        salt_col = F.pmod(F.xxhash64(F.col(vec_col)), split_expr).cast("int")
+        salt_col = F.pmod(F.xxhash64(F.col(vec_col)), _per_cluster(splits)).cast("int")
     else:
         # no cluster exceeds max_cluster_rows: pmod(anything, 1) is 0
         # for every row, so skip hashing the full vector per row (the
@@ -164,14 +230,9 @@ def semantic_dedup(
 
     def prune(key, pdf):
         cluster = int(key[0])
-        unit, norms = _unit_rows(pdf[vec_col])
-        c = cmat_bc.value[cluster - 1]
-        cn = np.linalg.norm(c)
-        csim = (unit @ c) / cn if cn > 0 else np.zeros(len(pdf))
-        csim = np.where(norms == 0.0, 0.0, csim)
-
-        order = np.lexsort((pdf[id_col].to_numpy(), csim))  # csim ASC, id ASC
-        u = unit[order].astype(np.float32)
+        u, csim, order = _centroid_order(
+            pdf[vec_col], pdf[id_col], cmat_bc.value[cluster - 1]
+        )
         n = len(u)
         dropped = np.zeros(n, dtype=bool)
         for lo in range(0, n, _BLOCK):
@@ -188,24 +249,11 @@ def semantic_dedup(
                     continue
                 if (s[r, :i] >= threshold - _EPS).any():
                     dropped[i] = True
-        kept = np.ones(n, dtype=bool)
-        kept[order] = ~dropped
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col],
-                "cluster": np.int32(cluster),
-                "centroid_sim": csim,
-                "kept": kept,
-            }
-        )
+        return _verdict_frame(id_col, pdf[id_col], cluster, csim, order, ~dropped)
 
     id_type = assigned.schema[id_col].dataType.simpleString()
     return salted.groupBy("cluster", "salt").applyInPandas(
-        prune,
-        schema=(
-            f"`{id_col}` {id_type}, cluster int, "
-            "centroid_sim double, kept boolean"
-        ),
+        prune, schema=_verdict_ddl(id_col, id_type)
     )
 
 
@@ -270,12 +318,8 @@ def semdedup_index_write(
     # of the kept column (r13 — the census cost showed up at sf100).
     # One column-pruned scan here, at build time, k driver-sized rows.
     kept_counts = {
-        str(r["cluster"]): r["n"]
-        for r in spark.read.parquet(path)
-        .filter(F.col("kept"))
-        .groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
+        str(c): n
+        for c, n in _cluster_counts(spark.read.parquet(path).filter(F.col("kept"))).items()
     }
     fsutil.write_sidecar(
         spark, path, _INDEX_META,
@@ -355,7 +399,6 @@ def semdedup_probe(
     both paths — the hit bit is an OR over chunks — pinned by the
     chunked-equals-single-pass parity test."""
     import numpy as np
-    import pandas as pd
 
     spark = batch.sparkSession
     meta = fsutil.check_sidecar(
@@ -414,23 +457,13 @@ def semdedup_probe(
         # require a pile of crashed appends with no healthy append
         # after them.
         if any(v * 2 >= max_cluster_rows for v in res_counts.values()):
-            census = {
-                r["cluster"]: r["n"]
-                for r in residents.groupBy("cluster")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            census = _cluster_counts(residents)
             res_counts = {
                 c: max(res_counts.get(c, 0), census.get(c, 0))
                 for c in touched
             }
     else:
-        res_counts = {
-            r["cluster"]: r["n"]
-            for r in residents.groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        res_counts = _cluster_counts(residents)
     chunks = {
         c: max(1, -(-res_counts.get(c, 0) // max_cluster_rows))
         for c in touched
@@ -452,80 +485,24 @@ def semdedup_probe(
         F.lit(False).alias("_resident"),
     ).unionByName(residents)
 
-    sc = spark.sparkContext
-    cmat_bc = sc.broadcast(np.asarray(centroids, dtype=np.float64))
+    cmat_bc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
+    block = _BLOCK  # read at plan build, so the closure carries it
 
     def prune(key, pdf):
         cluster = int(key[0])
         new = pdf[~pdf["_resident"]]
         if len(new) == 0:
-            return pd.DataFrame(
-                {
-                    id_col: pdf[id_col][:0],
-                    "cluster": np.array([], dtype=np.int32),
-                    "centroid_sim": np.array([], dtype=np.float64),
-                    "kept": np.array([], dtype=bool),
-                }
-            )
-        res = pdf[pdf["_resident"]]
-
-        un, nn = _unit_rows(new[vec_col])
-        c = cmat_bc.value[cluster - 1]
-        cn = np.linalg.norm(c)
-        csim = (un @ c) / cn if cn > 0 else np.zeros(len(new))
-        csim = np.where(nn == 0.0, 0.0, csim)
-        order = np.lexsort((new[id_col].to_numpy(), csim))
-        u = un[order].astype(np.float32)
-        n_new = len(new)
-
-        # resident hits, slabbed BOTH ways: kept residents per cluster
-        # are unbounded (salt subclusters of the one-shot write share
-        # one cluster partition), so a single n_new × n_res matrix
-        # could be tens of GB on exactly the skewed corpora the salt
-        # guard exists for — peak here is _BLOCK × _BLOCK float32
-        hit_res = np.zeros(n_new, dtype=bool)
-        if len(res):
-            ur, _ = _unit_rows(res[vec_col])
-            ur32 = ur.astype(np.float32)
-            for lo in range(0, n_new, _BLOCK):
-                hi = min(lo + _BLOCK, n_new)
-                for rlo in range(0, len(ur32), _BLOCK):
-                    rhi = min(rlo + _BLOCK, len(ur32))
-                    s = u[lo:hi] @ ur32[rlo:rhi].T
-                    hit_res[lo:hi] |= (s >= thr - _EPS).any(axis=1)
-        # greedy among the new points: sims only against the KEPT
-        # prefix, accumulated into a preallocated matrix — no n_new²
-        # similarity matrix is ever materialized
-        kept_mat = np.empty((n_new, u.shape[1]), dtype=np.float32)
-        n_kept = 0
-        dropped = np.zeros(n_new, dtype=bool)
-        for i in range(n_new):
-            if hit_res[i] or (
-                n_kept and (kept_mat[:n_kept] @ u[i] >= thr - _EPS).any()
-            ):
-                dropped[i] = True
-            else:
-                kept_mat[n_kept] = u[i]
-                n_kept += 1
-        kept = np.ones(n_new, dtype=bool)
-        kept[order] = ~dropped
-        return pd.DataFrame(
-            {
-                id_col: new[id_col],
-                "cluster": np.int32(cluster),
-                "centroid_sim": csim,
-                "kept": kept,
-            }
+            return _verdict_frame(id_col, new[id_col], cluster, np.zeros(0), [], [])
+        u, csim, order = _centroid_order(
+            new[vec_col], new[id_col], cmat_bc.value[cluster - 1]
+        )
+        hit = _resident_hits(u, pdf[pdf["_resident"]][vec_col], thr, block)
+        return _verdict_frame(
+            id_col, new[id_col], cluster, csim, order, _greedy_kept(u, hit, thr)
         )
 
     id_type = batch.schema[id_col].dataType.simpleString()
-    out = both.groupBy("cluster").applyInPandas(
-        prune,
-        schema=(
-            f"`{id_col}` {id_type}, cluster int, "
-            "centroid_sim double, kept boolean"
-        ),
-    )
+    out = both.groupBy("cluster").applyInPandas(prune, schema=_verdict_ddl(id_col, id_type))
     return _finish_probe(out, assigned, eager)
 
 
@@ -558,14 +535,7 @@ def _probe_chunked(
     import numpy as np
     import pandas as pd
 
-    # per-cluster chunk count as a column (when-chain over the touched
-    # census — k branches, driver-sized by construction)
-    n_chunks = F.lit(1)
-    for c, s in chunks.items():
-        if s > 1:
-            n_chunks = F.when(F.col("cluster") == c, F.lit(s)).otherwise(
-                n_chunks
-            )
+    n_chunks = _per_cluster(chunks)
     # replicate each new point across its cluster's resident chunks;
     # chunk residents by the VECTOR hash (exact duplicates co-chunk,
     # matching the one-shot salt's guarantee)
@@ -582,26 +552,14 @@ def _probe_chunked(
         ),
     )
     id_type = assigned.schema[id_col].dataType.simpleString()
+    block = _BLOCK  # read at plan build, so the closure carries it
 
     def hit_pass(key, pdf):
         new = pdf[~pdf["_resident"]]
-        if len(new) == 0:
-            return pd.DataFrame(
-                {id_col: pdf[id_col][:0], "hit": np.array([], dtype=bool)}
-            )
-        res = pdf[pdf["_resident"]]
-        un, _ = _unit_rows(new[vec_col])
-        u = un.astype(np.float32)
-        hit = np.zeros(len(new), dtype=bool)
-        if len(res):
-            ur, _ = _unit_rows(res[vec_col])
-            ur32 = ur.astype(np.float32)
-            for lo in range(0, len(u), _BLOCK):
-                hi = min(lo + _BLOCK, len(u))
-                for rlo in range(0, len(ur32), _BLOCK):
-                    rhi = min(rlo + _BLOCK, len(ur32))
-                    s = u[lo:hi] @ ur32[rlo:rhi].T
-                    hit[lo:hi] |= (s >= thr - _EPS).any(axis=1)
+        hit = np.zeros(0, dtype=bool)
+        if len(new):
+            u = _unit_rows(new[vec_col])[0].astype(np.float32)
+            hit = _resident_hits(u, pdf[pdf["_resident"]][vec_col], thr, block)
         return pd.DataFrame({id_col: new[id_col], "hit": hit})
 
     hit_agg = (
@@ -632,7 +590,6 @@ def _greedy_pass(
     slice — micro-batch-sized by contract. Shared by the chunked probe
     plan and the bootstrap (empty-index) path."""
     import numpy as np
-    import pandas as pd
 
     sc = with_hit.sparkSession.sparkContext
     cmat_bc = sc.broadcast(np.asarray(centroids, dtype=np.float64))
@@ -640,43 +597,16 @@ def _greedy_pass(
 
     def greedy(key, pdf):
         cluster = int(key[0])
-        un, nn = _unit_rows(pdf[vec_col])
-        c = cmat_bc.value[cluster - 1]
-        cn = np.linalg.norm(c)
-        csim = (un @ c) / cn if cn > 0 else np.zeros(len(pdf))
-        csim = np.where(nn == 0.0, 0.0, csim)
-        order = np.lexsort((pdf[id_col].to_numpy(), csim))
-        u = un[order].astype(np.float32)
-        hit_res = pdf["_hit_res"].to_numpy(dtype=bool)[order]
-        n_new = len(pdf)
-        kept_mat = np.empty((n_new, u.shape[1]), dtype=np.float32)
-        n_kept = 0
-        dropped = np.zeros(n_new, dtype=bool)
-        for i in range(n_new):
-            if hit_res[i] or (
-                n_kept and (kept_mat[:n_kept] @ u[i] >= thr - _EPS).any()
-            ):
-                dropped[i] = True
-            else:
-                kept_mat[n_kept] = u[i]
-                n_kept += 1
-        kept = np.ones(n_new, dtype=bool)
-        kept[order] = ~dropped
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col],
-                "cluster": np.int32(cluster),
-                "centroid_sim": csim,
-                "kept": kept,
-            }
+        u, csim, order = _centroid_order(
+            pdf[vec_col], pdf[id_col], cmat_bc.value[cluster - 1]
+        )
+        hit = pdf["_hit_res"].to_numpy(dtype=bool)[order]
+        return _verdict_frame(
+            id_col, pdf[id_col], cluster, csim, order, _greedy_kept(u, hit, thr)
         )
 
     return with_hit.groupBy("cluster").applyInPandas(
-        greedy,
-        schema=(
-            f"`{id_col}` {id_type}, cluster int, "
-            "centroid_sim double, kept boolean"
-        ),
+        greedy, schema=_verdict_ddl(id_col, id_type)
     )
 
 
@@ -741,14 +671,9 @@ def semdedup_index_append(
         touched = [
             r["cluster"] for r in rows.select("cluster").distinct().collect()
         ]
-        recount = {
-            r["cluster"]: r["n"]
-            for r in spark.read.parquet(path)
-            .filter(F.col("cluster").isin(touched) & F.col("kept"))
-            .groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        recount = _cluster_counts(
+            spark.read.parquet(path).filter(F.col("cluster").isin(touched) & F.col("kept"))
+        )
         for c in touched:
             counts[str(c)] = int(recount.get(c, 0))
         meta["kept_per_cluster"] = counts

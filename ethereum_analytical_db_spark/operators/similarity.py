@@ -296,6 +296,19 @@ def _block_pairs(df: DataFrame, n_blocks: int) -> DataFrame:
     )
 
 
+def _unit_rows(values):
+    """Vectors → (float64 unit rows, norms); zero vectors pass through
+    as zero rows with norm 0 (cosine with anything is 0, so they never
+    reach a threshold). One kernel: the near-dup GEMM, SemDeDup and
+    decontamination all normalise through it. An input of zero rows
+    raises, so callers guard empty groups."""
+    import numpy as np
+
+    v = np.asarray([np.asarray(x, dtype=np.float64) for x in values])
+    norms = np.linalg.norm(v, axis=1)
+    return v / np.where(norms == 0.0, 1.0, norms)[:, None], norms
+
+
 def _gemm_pair_score(pdf, i: int, j: int, thr: float):
     """Score one unordered block-pair task: unit-normalize the task's
     vectors, gemm, keep pairs ≥ thr. Returns (id_a, id_b, cosine) numpy
@@ -306,8 +319,7 @@ def _gemm_pair_score(pdf, i: int, j: int, thr: float):
     LSH sub-block decomposition — one place to fix, both paths move."""
     import numpy as np
 
-    mat = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-    unit = mat / np.sqrt((mat * mat).sum(axis=1))[:, None]
+    unit = _unit_rows(pdf["v"])[0]
     ids = pdf["vid"].to_numpy()
     if i == j:
         sims = unit @ unit.T

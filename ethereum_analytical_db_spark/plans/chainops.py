@@ -47,7 +47,8 @@ from .registry import register, table
     FROM customer WHERE c_custkey <= 200
     """,
     note="F9/X2 ABI calldata decode (reference operations/inputs.py:15-53) "
-    "as an Arrow-batched pandas UDF over a broadcast selector table; "
+    "through decode_inputs_joined, the decoder sync-once ships: every row "
+    "calls one contract whose ABI rides as a one-row (id, abi) frame; "
     "calldata synthesized as transfer(address,uint256) words from the key",
 )
 def abi_decode_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,6 +56,7 @@ def abi_decode_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions import abi as abi_mod
 
+    token = "0x" + "ab" * 20
     cust = table(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 200)
     word = F.lpad(F.lower(F.hex(F.col("c_custkey"))), 64, "0")
     word3 = F.lpad(F.lower(F.hex(F.col("c_custkey") * 3)), 64, "0")
@@ -62,19 +64,18 @@ def abi_decode_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ≤200 rows reach the pandas UDF — shuffle them into one Arrow batch
     # (repartition, NOT coalesce: coalesce would collapse the parquet scan
     # itself to one task; at real scale default partitioning is right)
-    df = cust.select("c_custkey", calldata.alias("input")).repartition(1)
-    sels = abi_mod.selector_table(
-        _json.dumps(
-            [
-                {
-                    "type": "function",
-                    "name": "transfer",
-                    "inputs": [{"type": "address"}, {"type": "uint256"}],
-                }
-            ]
-        )
+    df = cust.select(
+        "c_custkey", calldata.alias("input"), F.lit(token).alias("to")
+    ).repartition(1)
+    transfer = {
+        "type": "function",
+        "name": "transfer",
+        "inputs": [{"type": "address"}, {"type": "uint256"}],
+    }
+    abi = spark.range(1).select(
+        F.lit(token).alias("id"), F.lit(_json.dumps([transfer])).alias("abi")
     )
-    out = abi_mod.decode_with_selector_table(df, sels)
+    out = abi_mod.decode_inputs_joined(df, abi)
     return out.select(
         "c_custkey",
         F.col("decoded.name").alias("fn_name"),

@@ -33,8 +33,10 @@ from .registry import register, table
 # the session OBJECT (r16 advice): temp views live in the SESSION
 # catalog, so a sibling spark.newSession() — same applicationId — must
 # not inherit the cache hit; and holding the session in the entry means
-# a recycled id() can never silently alias a fresh session. One entry
-# per application bounds the cache.
+# a recycled id() can never silently alias a fresh session. A miss
+# empties the cache before storing its entry (registry.table and
+# frozen.memo likewise drop other applications' entries), so a stopped
+# session is not pinned for the life of the process.
 _COMPAT_CACHE: dict[str, tuple[SparkSession, ClickHouseCompat, str | None]] = {}
 
 
@@ -43,6 +45,7 @@ def _compat(spark: SparkSession) -> ClickHouseCompat:
     hit = _COMPAT_CACHE.get(app_id)
     if hit is not None and hit[0] is spark:
         return hit[1]
+    _COMPAT_CACHE.clear()
     c = ClickHouseCompat(spark)
     _COMPAT_CACHE[app_id] = (spark, c, None)
     return c

@@ -72,3 +72,59 @@ def test_memoised_trees_survive_session_restart():
     assert proc.returncode == 0 and proc.stdout.strip().endswith("OK"), (
         proc.stdout[-2000:] + proc.stderr[-4000:]
     )
+
+
+
+COMPAT_RESTART = textwrap.dedent(
+    """
+    import sys
+
+    from pyspark import SparkContext
+    from ethereum_analytical_db_spark.plans import compat_queries
+    from ethereum_analytical_db_spark.plans.registry import all_queries
+    from ethereum_analytical_db_spark.session import get_spark
+
+    q = all_queries()["compat_balances_pyramid"]
+    for _ in range(2):
+        spark = get_spark(app_name="compat-cache-restart", cpus=1, shuffle_partitions=1)
+        q.build(spark, sys.argv[1])
+        assert list(compat_queries._COMPAT_CACHE) == [
+            spark.sparkContext.applicationId
+        ], list(compat_queries._COMPAT_CACHE)
+        spark.stop()
+        SparkContext._gateway.shutdown()
+        SparkContext._gateway = None
+        SparkContext._jvm = None
+    print("OK")
+    """
+)
+
+
+def test_compat_cache_drops_stopped_applications(tmp_path):
+    """The ClickHouse-dialect view cache holds only the live
+    application: a stopped session's SparkSession and ClickHouseCompat
+    are evicted by the next application's first build instead of
+    staying pinned for the life of the process."""
+    import pandas as pd
+
+    pd.DataFrame(
+        {
+            "event_id": range(12),
+            "ts": pd.date_range("2024-01-01", periods=12, freq="h"),
+            "user_id": [i % 5 for i in range(12)],
+            "event_type": ["purchase", "view", "error"] * 4,
+            "value": [float(i) for i in range(12)],
+        }
+    ).to_parquet(tmp_path / "events.parquet")
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g", PYTHONPATH=REPO)
+    proc = subprocess.run(
+        [sys.executable, "-c", COMPAT_RESTART, str(tmp_path)],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0 and proc.stdout.strip().endswith("OK"), (
+        proc.stdout[-2000:] + proc.stderr[-4000:]
+    )

@@ -663,3 +663,56 @@ def test_probe_blocked_gemm_matches_unblocked(spark, served, monkeypatch):
         for r in semdedup.semdedup_probe(df, path, centroids).collect()
     }
     assert base == small
+
+
+def test_kernels_independent_of_slab_size():
+    """The resident-hit and greedy kernels on seeded vectors (no Spark
+    session): slab 3 gives the same bits as slab 4096, with exact
+    duplicates on both sides and zero vectors, which never suppress
+    anything and are always kept unless a resident duplicates them."""
+    rng = np.random.RandomState(3)
+    new = rng.randn(40, 8)
+    new[5] = new[2]  # an exact new-vs-new duplicate
+    new[9] = 0.0
+    res = rng.randn(25, 8)
+    res[4] = new[7]  # an exact resident duplicate
+    res[11] = 0.0
+    u, csim, order = semdedup._centroid_order(list(new), np.arange(40), rng.randn(8))
+    assert csim[9] == 0.0 and (np.diff(csim[order]) >= 0).all()
+    pos = {int(o): i for i, o in enumerate(order)}  # input row -> sorted row
+    for thr in (0.5, 0.9):
+        hits = semdedup._resident_hits(u, list(res), thr, 3)
+        assert (hits == semdedup._resident_hits(u, list(res), thr, 4096)).all()
+        assert hits[pos[7]] and not hits[pos[9]]
+        kept = semdedup._greedy_kept(u, hits, thr)
+        assert kept[pos[9]] and not kept[pos[7]]
+        assert kept[pos[2]] != kept[pos[5]] or hits[pos[2]]
+        # reference: the retained-set rule written out row by row
+        want, retained = [], []
+        for i in range(len(u)):
+            ok = not hits[i] and all(u[i] @ r < thr - semdedup._EPS for r in retained)
+            want.append(ok)
+            if ok:
+                retained.append(u[i])
+        assert kept.tolist() == want
+    assert not semdedup._resident_hits(u, [], 0.5, 3).any()
+    with pytest.raises(ValueError):
+        semdedup._unit_rows([])
+
+
+def test_online_dedup_kernels_written_once():
+    """Structure pin: the greedy retained-set loop and the slabbed
+    resident GEMM each exist once under operators/, only fsutil touches
+    its private Hadoop handle, and the single-ABI decoder twin is gone
+    (the registry decodes through decode_inputs_joined)."""
+    from pathlib import Path
+
+    root = Path(semdedup.__file__).parent.parent
+    sources = {p.relative_to(root).as_posix(): p.read_text() for p in root.rglob("*.py")}
+    assert [m for m, src in sorted(sources.items()) if "_fs_and_path" in src] == [
+        "fsutil.py"
+    ]
+    ops = [src for m, src in sources.items() if m.startswith("operators/")]
+    assert sum(src.count("kept_mat[n_kept] = ") for src in ops) == 1
+    assert sum(src.count("for rlo in range") for src in ops) == 1
+    assert not [m for m, src in sources.items() if "decode_with_selector_table" in src]
