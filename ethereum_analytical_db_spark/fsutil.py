@@ -94,10 +94,11 @@ _WHY = "a probe or append would route rows by parameters the index was not built
 
 def write_sidecar(spark: SparkSession, path: str, name: str, meta: dict) -> None:
     """Write ``meta`` as the JSON sidecar ``name`` (leading underscore:
-    Parquet readers skip it) of the index directory ``path``, atomically."""
+    Parquet readers skip it) of the index directory ``path``, atomically,
+    keys sorted so that identical builds write identical bytes."""
     import json
 
-    write_text_atomic(spark, f"{path}/{name}", json.dumps(meta))
+    write_text_atomic(spark, f"{path}/{name}", json.dumps(meta, sort_keys=True))
 
 
 def read_sidecar(spark: SparkSession, path: str, name: str, writer: str) -> dict:

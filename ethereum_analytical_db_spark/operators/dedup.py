@@ -35,7 +35,7 @@ from .text import ngrams_from_words
 _LOG = logging.getLogger(__name__)
 
 
-@app_cache()
+@app_cache
 def _ngrams_ws_expr(n: int):
     """``ngrams_from_words`` over the fixed ``_ws`` projection name,
     built once per SparkContext. Column objects are immutable unresolved

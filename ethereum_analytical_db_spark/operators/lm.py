@@ -33,7 +33,7 @@ from ..session import app_cache
 from .text import words
 
 
-@app_cache(maxsize=64)
+@app_cache
 def _nulled_tokens_expr(text_col: str) -> Column:
     """The unigram scorer's token stream (words with empties NULLed, in
     the array) over a NAMED column, built once per (SparkContext, name):
@@ -44,7 +44,7 @@ def _nulled_tokens_expr(text_col: str) -> Column:
     )
 
 
-@app_cache(maxsize=1)
+@app_cache
 def _pair_structs_expr() -> Column:
     """The bigram scorer's (word, prev) struct stream over the scorer's
     fixed ``ws`` array projection — same memo rationale as

@@ -155,7 +155,7 @@ def predicted_lang_from_text(text: Column | str) -> Column:
     return _argmax_lang(lang_scores_from_text(text))
 
 
-@app_cache(maxsize=64)
+@app_cache
 def _predicted_lang_named(col_name: str) -> Column:
     """The lang-ID argmax tree over a NAMED column, built once per
     (SparkContext, name): the 5-language regexp_count + struct-argmax tree

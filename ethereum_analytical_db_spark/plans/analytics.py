@@ -164,7 +164,7 @@ def _bucketed_events_table(spark: SparkSession, sf_dir: str) -> str:
         )
         return name
 
-    return frozen.memo(spark, "bucketed", sf_dir, build)
+    return frozen.memo("bucketed", sf_dir, build)
 
 
 @register(

@@ -218,7 +218,7 @@ def _reorg_warehouse(spark: SparkSession, sf_dir: str) -> str:
         reconcile_chain(wh, canon, tables=("event",))
         return root
 
-    return frozen.memo(spark, "reorg_wh", sf_dir, build)
+    return frozen.memo("reorg_wh", sf_dir, build)
 
 
 @register(

@@ -20,46 +20,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..compat import ClickHouseCompat
+from ..session import app_memo
 from .registry import register, table
-
-# applicationId → (session, compat, sf_dir whose views are registered).
-# The eight view registrations are ~8 selectExpr constructions +
-# temp-view swaps of pure driver work per build; the views are a
-# deterministic function of (session, sf_dir), so re-running them for
-# every build of every compat query only re-creates identical objects
-# (r16 build-latency cut; re-registered whenever the requested sf_dir
-# differs from the one the session currently carries, so mixed-sf test
-# sessions stay correct). Keyed on applicationId AND validated against
-# the session OBJECT (r16 advice): temp views live in the SESSION
-# catalog, so a sibling spark.newSession() — same applicationId — must
-# not inherit the cache hit; and holding the session in the entry means
-# a recycled id() can never silently alias a fresh session. A miss
-# empties the cache before storing its entry (registry.table and
-# frozen.memo likewise drop other applications' entries), so a stopped
-# session is not pinned for the life of the process.
-_COMPAT_CACHE: dict[str, tuple[SparkSession, ClickHouseCompat, str | None]] = {}
-
-
-def _compat(spark: SparkSession) -> ClickHouseCompat:
-    app_id = spark.sparkContext.applicationId
-    hit = _COMPAT_CACHE.get(app_id)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    _COMPAT_CACHE.clear()
-    c = ClickHouseCompat(spark)
-    _COMPAT_CACHE[app_id] = (spark, c, None)
-    return c
-
 
 def _register_eth_views(spark: SparkSession, sf_dir: str) -> ClickHouseCompat:
     """Shape the driver's events table into eth_* views (pseudo-addresses
     from ids, token = event_type) for the dialect queries."""
-    c = _compat(spark)
-    app_id = spark.sparkContext.applicationId
-    hit = _COMPAT_CACHE.get(app_id)
-    if hit is not None and hit[0] is spark and hit[2] == sf_dir:
-        return c
+    # The eight view registrations are ~8 selectExpr constructions +
+    # temp-view swaps of pure driver work per build; the views are a
+    # deterministic function of (session, sf_dir), so re-running them for
+    # every build of every compat query only re-creates identical objects
+    # (r16 build-latency cut). Temp views live in the SESSION catalog, so
+    # the session object is part of the key: a sibling spark.newSession()
+    # — same SparkContext — registers its own. The views are re-registered
+    # whenever they were built from another events DataFrame than the
+    # session's one for sf_dir (registry.table), so switching back and
+    # forth between data directories stays correct.
+    c = app_memo(("compat", spark), lambda: ClickHouseCompat(spark))
     ev = table(spark, sf_dir, "events")
+    if getattr(c, "views_from", None) is ev:
+        return c
     c.register_table(
         "eth_token_transaction",
         ev.selectExpr(
@@ -122,7 +102,7 @@ def _register_eth_views(spark: SparkSession, sf_dir: str) -> ClickHouseCompat:
         ev.selectExpr("CAST(event_id AS BIGINT) AS number", "ts AS timestamp"),
     )
     c.register_table("eth_events", ev.select("event_id", "ts", "event_type"))
-    _COMPAT_CACHE[app_id] = (spark, c, sf_dir)
+    c.views_from = ev
     return c
 
 

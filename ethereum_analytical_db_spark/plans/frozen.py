@@ -7,10 +7,10 @@ Their artifacts land under a shared ``$TMPDIR`` base as
 ``<md5-of-sf-dir>_<pid>`` directories; this module owns the lifecycle
 rules all of them share:
 
-- :func:`memo` is the one fixture memo, keyed on the SparkContext's
-  ``applicationId`` as well as the fixture kind and the data directory:
-  a fixture holds catalog names and py4j-backed state of the session
-  that built it, so a restarted session builds its own;
+- :func:`memo` keeps each fixture in ``session.app_memo`` (per
+  SparkContext) on its kind and absolute data directory: a fixture
+  holds catalog names and py4j-backed state of the session that built
+  it, so a restarted session builds its own;
 - :func:`acquire` reserves the path, registers ONE shared atexit
   cleanup on first use, and sweeps dead-pid orphans once per base per
   process — so every frozen artifact gets the same lifecycle and a fix
@@ -28,10 +28,9 @@ import os
 import shutil
 import tempfile
 
+from ..session import app_memo, clear_app_memo
+
 _OWNED: list[str] = []
-# (applicationId, kind, abspath(sf_dir)) → the fixture build(path) returned
-_MEMO: dict[tuple[str, str, str], object] = {}
-_ATEXIT_REGISTERED = False
 _SWEPT_BASES: set[str] = set()
 
 
@@ -40,10 +39,8 @@ def acquire(base: str, key: str) -> str:
     its path (not created — the caller materializes into it). First use
     registers the shared atexit cleanup; first use PER BASE sweeps that
     base's dead-pid orphans."""
-    global _ATEXIT_REGISTERED
-    if not _ATEXIT_REGISTERED:
+    if not _SWEPT_BASES:
         atexit.register(release_all)
-        _ATEXIT_REGISTERED = True
     if base not in _SWEPT_BASES:
         _SWEPT_BASES.add(base)
         sweep_orphans(base)
@@ -54,34 +51,33 @@ def acquire(base: str, key: str) -> str:
     return path
 
 
-def memo(spark, kind: str, sf_dir: str, build):
+def memo(kind: str, sf_dir: str, build):
     """The frozen fixture ``kind`` of ``sf_dir`` for the active
     SparkContext: ``build(path)`` materializes it into a directory
     reserved by :func:`acquire` under ``$TMPDIR/spark_graft_<kind>``,
-    once, and every later call returns what it returned. The
-    application id is part of the key: a fixture registered in the
-    catalog of a stopped session is unknown to the next one, which
-    rebuilds into the same directory, emptied first."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, kind, os.path.abspath(sf_dir))
-    if key not in _MEMO:
-        for stale in [k for k in _MEMO if k[0] != app_id]:
-            del _MEMO[stale]
+    once, and every later call returns what it returned. A fixture
+    registered in the catalog of a stopped session is unknown to the
+    next one, which rebuilds into the same directory, emptied first."""
+    sf_dir = os.path.abspath(sf_dir)
+
+    def fresh():
         base = os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}")
-        path = acquire(base, key[2])
+        path = acquire(base, sf_dir)
         shutil.rmtree(path, ignore_errors=True)  # a stopped session's copy
-        _MEMO[key] = build(path)
-    return _MEMO[key]
+        return build(path)
+
+    return app_memo(("frozen", kind, sf_dir), fresh)
 
 
 def release_all() -> None:
-    """Remove every artifact THIS process froze and forget every memoised
-    fixture (atexit; tests and explicit invalidation call it too — the
-    artifacts are per-process, so nothing else can be reading them)."""
+    """Remove every artifact THIS process froze and empty the
+    per-SparkContext memo that hands fixtures out (atexit; tests and
+    explicit invalidation call it too — the artifacts are per-process,
+    so nothing else can be reading them)."""
     for p in _OWNED:
         shutil.rmtree(p, ignore_errors=True)
     _OWNED.clear()
-    _MEMO.clear()
+    clear_app_memo()
 
 
 def sweep_orphans(base: str) -> None:

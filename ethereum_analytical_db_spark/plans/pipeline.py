@@ -10,10 +10,13 @@ unit-tested against the exact Jaccard operator instead.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup, packing, sampling, similarity, text
+from ..session import app_memo
 from . import frozen
 from .registry import register, table
 
@@ -38,43 +41,31 @@ _PII_SCRUB_SQL = (
 )
 
 
-# (cache_key, target) → does this scan need the repartition? The
-# ``df.rdd.getNumPartitions()`` probe forces plan analysis + an RDD
-# conversion on the DRIVER — ~40-80 ms of pure build latency — and the
-# answer is a static property of the on-disk file layout, so paying it
-# once per (path, parallelism) instead of once per query build removes
-# it from ~25 registry builds (r16; the build_sec tracking made the
-# cost visible, guide §7.3 driver-side work).
-_SCAN_PARALLELISM_CACHE: dict[tuple[str, int], bool] = {}
-
-
-def _with_scan_parallelism(
-    spark: SparkSession, df: DataFrame, cache_key: str | None = None
-) -> DataFrame:
-    """Restore parallelism IF the scan lacks it: a single small parquet
-    file (the test corpus) is one input split, which would run per-row
-    pipelines single-threaded, so a round-robin repartition spreads rows
-    across all cores. At production scale the scan has natural file
-    parallelism (>= defaultParallelism splits) and the repartition is
-    skipped entirely — no Exchange before the first projection, the
-    scan's own partitioning flows through."""
+def _scan_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``table(spark, sf_dir, name)`` with parallelism restored IF the
+    scan lacks it: a single small parquet file (the test corpus) is one
+    input split, which would run per-row pipelines single-threaded, so a
+    round-robin repartition spreads rows across all cores. At production
+    scale the scan has natural file parallelism (>= defaultParallelism
+    splits) and the repartition is skipped entirely — no Exchange before
+    the first projection, the scan's own partitioning flows through."""
+    df = table(spark, sf_dir, name)
     target = spark.sparkContext.defaultParallelism
-    key = (cache_key, target) if cache_key is not None else None
-    if key is not None and key in _SCAN_PARALLELISM_CACHE:
-        needs = _SCAN_PARALLELISM_CACHE[key]
-    else:
-        needs = df.rdd.getNumPartitions() < target
-        if key is not None:
-            _SCAN_PARALLELISM_CACHE[key] = needs
-    if needs:
+    # The ``df.rdd.getNumPartitions()`` probe forces plan analysis + an
+    # RDD conversion on the DRIVER — ~40-80 ms of pure build latency —
+    # and the answer is a static property of the on-disk file layout
+    # and the context's parallelism, so paying it once per (SparkContext,
+    # path) instead of once per query build removes it from ~25 registry
+    # builds (r16; the build_sec tracking made the cost visible, guide
+    # §7.3 driver-side work).
+    path = os.path.abspath(f"{sf_dir}/{name}")
+    if app_memo(("scan", path), lambda: df.rdd.getNumPartitions() < target):
         df = df.repartition(target)
     return df
 
 
 def docs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _with_scan_parallelism(
-        spark, table(spark, sf_dir, "documents"), cache_key=f"{sf_dir}/documents"
-    )
+    return _scan_table(spark, sf_dir, "documents")
 
 
 @register(
@@ -649,9 +640,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition, i.e. single-threaded. Restore core-count parallelism
     # the same way the other per-row pipelines do (no-op when the scan
     # already has enough splits).
-    emb = _with_scan_parallelism(
-        spark, table(spark, sf_dir, "embeddings"), cache_key=f"{sf_dir}/embeddings"
-    )
+    emb = _scan_table(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == 0)
     return similarity.cosine_topk_exact_decimal(emb, query, k=10)
 
@@ -693,9 +682,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle O(n) + sum(bucket^2), the plan that survives 100x scale",
 )
 def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _with_scan_parallelism(
-        spark, table(spark, sf_dir, "embeddings"), cache_key=f"{sf_dir}/embeddings"
-    )
+    emb = _scan_table(spark, sf_dir, "embeddings")
     # planes must TRACK corpus size: at fixed planes the bucket count is
     # fixed, buckets grow ~n/2^planes, and the per-bucket gemm
     # (sum bucket^2 ~ n^2/2^planes flops) is super-linear — measured
@@ -971,7 +958,7 @@ def _ivf_frozen_index(spark: SparkSession, sf_dir: str):
         similarity.ivf_index_write(emb.filter(F.col("vec_id") != 0), path, centroids)
         return path, centroids, qvec
 
-    return frozen.memo(spark, "ivf_index", sf_dir, build)
+    return frozen.memo("ivf_index", sf_dir, build)
 
 
 @register(
@@ -1005,7 +992,7 @@ def _minhash_frozen_index(spark: SparkSession, sf_dir: str) -> str:
         dedup.minhash_index_write(corpus, path, n=3, num_hashes=32, bands=8)
         return path
 
-    return frozen.memo(spark, "minhash_index", sf_dir, build)
+    return frozen.memo("minhash_index", sf_dir, build)
 
 
 @register(
@@ -1038,7 +1025,7 @@ def _exact_frozen_index(spark: SparkSession, sf_dir: str) -> str:
         dedup.exact_index_write(corpus, path)
         return path
 
-    return frozen.memo(spark, "exact_index", sf_dir, build)
+    return frozen.memo("exact_index", sf_dir, build)
 
 
 @register(
@@ -1203,9 +1190,7 @@ def embedding_near_dup_lsh_md5_query(
     # r16: the plane-dot/bucket projection is per-row work computed
     # BEFORE the bucket shuffle — restore core-count parallelism on the
     # single-file test corpus (no-op when the scan has enough splits)
-    emb = _with_scan_parallelism(
-        spark, table(spark, sf_dir, "embeddings"), cache_key=f"{sf_dir}/embeddings"
-    )
+    emb = _scan_table(spark, sf_dir, "embeddings")
     return similarity.embedding_near_dup_lsh_md5(
         emb, dim=64, threshold=0.38, planes=_LSH_MD5_PLANES
     )

@@ -42,55 +42,49 @@ TABLE_NAMES = [
 ]
 
 
-# (session app id, absolute parquet path) → constructed DataFrame.
-# ``spark.read.parquet`` lists the directory and reads parquet footers
-# on the DRIVER every call, and the registry builds each query fresh per
-# bench sample — ~40-120 ms of repeated driver work per table reference
-# (the r15 `build_regressed` creep was exactly this class of cost).
-# DataFrames are immutable plans, so handing the same object back is
-# side-effect-free; keying on the application id drops entries when a
-# test spins up a fresh session. The driver test data is read-only for
-# the life of a process — a caller that rewrites a parquet dir in place
-# mid-session should not route it through this registry helper.
-_TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     import os
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, os.path.abspath(f"{sf_dir}/{name}.parquet"))
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # evict entries from other applications: their plans are bound to
-    # stopped sessions and would otherwise accumulate for the life of
-    # the process across test sessions (r16 advice)
-    stale = [k for k in _TABLE_CACHE if k[0] != app_id]
-    for k in stale:
-        del _TABLE_CACHE[k]
-    if name == "events":
-        # events.parquet carries TIMESTAMP(NANOS), which Spark 4 refuses to
-        # map to its microsecond TimestampType; read nanos as long and
-        # convert (truncation matches pandas/duckdb ns→us behavior).
-        from pyspark.sql import functions as F
+    from ..session import app_memo
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            # integer division: (ts / 1000) in double loses ULPs on big
-            # nanosecond values and rounds a microsecond off vs DuckDB
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif dict(df.dtypes).get("ts") == "timestamp_ntz":
-            # micros-with-no-timezone parquet arrives as TIMESTAMP_NTZ,
-            # which Spark 4 refuses to cast to long (breaking epoch
-            # arithmetic downstream); under the UTC session zone the
-            # wall-clock values are identical, so normalize to the
-            # session-zoned TimestampType every consumer was written for
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _TABLE_CACHE[key] = df
+    # Memoised per session on the absolute parquet path.
+    # ``spark.read.parquet`` lists the directory and reads parquet footers
+    # on the DRIVER every call, and the registry builds each query fresh per
+    # bench sample — ~40-120 ms of repeated driver work per table reference
+    # (the r15 `build_regressed` creep was exactly this class of cost).
+    # DataFrames are immutable plans, so handing the same object back is
+    # side-effect-free, but bound to the session that read them: a temp
+    # view made from one lands in that session's catalog. The registry's
+    # input data is read-only for the life of a process — a caller that rewrites
+    # a parquet dir in place mid-session should not route it through this
+    # registry helper.
+    path = f"{sf_dir}/{name}.parquet"
+    return app_memo(
+        ("table", spark, os.path.abspath(path)), lambda: _read_table(spark, path, name)
+    )
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
+    if name != "events":
+        return spark.read.parquet(path)
+    # events.parquet carries TIMESTAMP(NANOS), which Spark 4 refuses to
+    # map to its microsecond TimestampType; read nanos as long and
+    # convert (truncation matches pandas/duckdb ns→us behavior).
+    from pyspark.sql import functions as F
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    if dict(df.dtypes).get("ts") == "bigint":
+        # integer division: (ts / 1000) in double loses ULPs on big
+        # nanosecond values and rounds a microsecond off vs DuckDB
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif dict(df.dtypes).get("ts") == "timestamp_ntz":
+        # micros-with-no-timezone parquet arrives as TIMESTAMP_NTZ,
+        # which Spark 4 refuses to cast to long (breaking epoch
+        # arithmetic downstream); under the UTC session zone the
+        # wall-clock values are identical, so normalize to the
+        # session-zoned TimestampType every consumer was written for
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -11,7 +11,7 @@ against any oracle.
 from __future__ import annotations
 
 import os
-from functools import lru_cache, wraps
+from functools import wraps
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
@@ -84,23 +84,30 @@ def tune_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def app_cache(maxsize: int = 64):
-    """``lru_cache`` whose key also carries the active SparkContext's
-    ``applicationId``, for memoised Column trees. A Column holds a py4j
-    handle into the JVM that built it: served to a later SparkContext on
-    a fresh gateway it fails with an NPE far from the cause. A new
-    context has a new id, so it builds its own trees."""
+# {applicationId: {key: value}}, for the active SparkContext only
+_APP_MEMO: dict[str, dict] = {}
 
-    def wrap(fn):
-        @lru_cache(maxsize)
-        def cached(app_id, *args):
-            return fn(*args)
 
-        @wraps(fn)
-        def memo(*args):
-            sc = SparkContext._active_spark_context
-            return cached(sc.applicationId if sc is not None else None, *args)
+def app_memo(key, build):
+    """``build()`` once per (active SparkContext, ``key``). State built
+    under a context is rebuilt for a new one: a Column or DataFrame holds
+    a py4j handle into the JVM that built it (served to a later context
+    on a fresh gateway it fails with an NPE far from the cause), and a
+    catalog name is unknown to the next session. The first call under a
+    new ``applicationId`` empties the memo, so nothing pins a stopped
+    context. One ``applicationId`` read per call."""
+    app_id = SparkContext._active_spark_context.applicationId
+    if app_id not in _APP_MEMO:
+        _APP_MEMO.clear()
+    entries = _APP_MEMO.setdefault(app_id, {})
+    if key not in entries:
+        entries[key] = build()
+    return entries[key]
 
-        return memo
 
-    return wrap
+clear_app_memo = _APP_MEMO.clear
+
+
+def app_cache(fn):
+    """Decorator: :func:`app_memo` keyed on ``fn`` and its arguments."""
+    return wraps(fn)(lambda *args: app_memo((fn, *args), lambda: fn(*args)))

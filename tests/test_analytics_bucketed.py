@@ -55,6 +55,7 @@ def test_bucketed_events_frozen_lifecycle(spark):
     import subprocess
     import tempfile
 
+    from ethereum_analytical_db_spark import session
     from ethereum_analytical_db_spark.plans import analytics as an
     from ethereum_analytical_db_spark.plans import frozen
     from ethereum_analytical_db_spark.plans.frozen import sweep_orphans
@@ -74,7 +75,7 @@ def test_bucketed_events_frozen_lifecycle(spark):
     assert os.path.isdir(root)
     frozen.release_all()
     assert not os.path.exists(root)
-    assert frozen._MEMO == {}
+    assert session._APP_MEMO == {}
 
 
 def test_frozen_fixtures_live_in_one_memo():

@@ -466,3 +466,45 @@ def test_fuzz_generated_join_chains_roundtrip_duckdb(spark):
             break  # evidence bar met; don't pay Spark latency for more
     # the round-trip must not pass vacuously
     assert translated >= 100 and compared >= 60, (translated, compared)
+
+
+# ------------------------------------------------------------ view memo
+
+
+def test_registry_views_follow_data_dir_and_session(spark, tmp_path):
+    """The registry's compat queries memoise one ClickHouseCompat per
+    session: switching data directories A → B → A in one session
+    re-registers the eth_* views each time, so every result matches the
+    first build for that directory, and a sibling ``spark.newSession()``
+    registers views in its own catalog without replacing the first
+    session's."""
+    import pandas as pd
+
+    from ethereum_analytical_db_spark.plans.registry import all_queries
+
+    for name, n in (("a", 40), ("b", 90)):
+        (tmp_path / name).mkdir()
+        pd.DataFrame(
+            {
+                "event_id": range(n),
+                "ts": pd.date_range("2024-01-01", periods=n, freq="5h"),
+                "user_id": [i * 7 % (n // 4) for i in range(n)],
+                "event_type": ["purchase", "view", "error"] * (n // 3) + ["view"] * (n % 3),
+                "value": [float(i % 11) + 0.5 for i in range(n)],
+            }
+        ).to_parquet(tmp_path / name / "events.parquet")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    qs = {k: q for k, q in all_queries().items() if k.startswith("compat_")}
+    assert len(qs) == 6
+
+    def run(session, sf):
+        return {k: sorted(q.build(session, sf).collect(), key=repr) for k, q in qs.items()}
+
+    first_a = run(spark, a)
+    first_b = run(spark, b)
+    assert first_a != first_b
+    assert run(spark, a) == first_a
+    sibling = spark.newSession()
+    assert run(sibling, b) == first_b
+    assert qs["compat_token_balances"].build(sibling, b).sparkSession is sibling
+    assert run(spark, a) == first_a

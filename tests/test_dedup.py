@@ -655,6 +655,7 @@ def test_registered_minhash_probe_query_matches_batch_form(spark):
     the same lifecycle hooks as the IVF index."""
     import os
 
+    from ethereum_analytical_db_spark import session
     from ethereum_analytical_db_spark.plans import frozen
     from ethereum_analytical_db_spark.plans.registry import all_queries
 
@@ -671,14 +672,14 @@ def test_registered_minhash_probe_query_matches_batch_form(spark):
     assert got == {
         p: c for p, c in full.items() if p[0] % 10 == 0 or p[1] % 10 == 0
     }
-    key = (spark.sparkContext.applicationId, "minhash_index", os.path.abspath(sf))
-    path = frozen._MEMO[key]
+    key = ("frozen", "minhash_index", os.path.abspath(sf))
+    path = session.app_memo(key, lambda: pytest.fail("fixture not memoised"))
     assert os.path.isdir(path)
     qs["minhash_dedup_probe"].build(spark, sf)
-    assert frozen._MEMO[key] == path  # cached, not rebuilt
+    assert session.app_memo(key, lambda: pytest.fail("rebuilt")) == path  # cached
     frozen.release_all()
     assert not os.path.exists(path)
-    assert frozen._MEMO == {}
+    assert session._APP_MEMO == {}
 
 
 def test_minhash_probe_append_sequential_shards(spark, tmp_path):
@@ -1243,6 +1244,7 @@ def test_exact_dedup_probe_registry_query(spark):
     shard-touching ones."""
     import os
 
+    from ethereum_analytical_db_spark import session
     from ethereum_analytical_db_spark.plans import frozen
     from ethereum_analytical_db_spark.plans.registry import all_queries
 
@@ -1260,14 +1262,14 @@ def test_exact_dedup_probe_registry_query(spark):
         if p[0] % 10 == 0 or p[1] % 10 == 0
     }
     assert got == want
-    key = (spark.sparkContext.applicationId, "exact_index", os.path.abspath(sf))
-    path = frozen._MEMO[key]
+    key = ("frozen", "exact_index", os.path.abspath(sf))
+    path = session.app_memo(key, lambda: pytest.fail("fixture not memoised"))
     assert os.path.isdir(path)
     qs["exact_dedup_probe"].build(spark, sf)
-    assert frozen._MEMO[key] == path  # cached, not rebuilt
+    assert session.app_memo(key, lambda: pytest.fail("rebuilt")) == path  # cached
     frozen.release_all()
     assert not os.path.exists(path)
-    assert frozen._MEMO == {}
+    assert session._APP_MEMO == {}
 
 
 def test_self_join_branches_reuse_one_exchange(spark):

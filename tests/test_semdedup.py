@@ -716,3 +716,23 @@ def test_online_dedup_kernels_written_once():
     assert sum(src.count("kept_mat[n_kept] = ") for src in ops) == 1
     assert sum(src.count("for rlo in range") for src in ops) == 1
     assert not [m for m, src in sources.items() if "decode_with_selector_table" in src]
+
+
+def test_sidecar_bytes_do_not_depend_on_key_order(spark, tmp_path):
+    """``fsutil.write_sidecar`` writes keys sorted, so two metas that are
+    equal as dicts write identical bytes whatever their insertion order
+    — the SemDeDup census follows ``collect()`` order, which is not
+    fixed, and an unsorted write made identical builds differ byte-wise."""
+    from ethereum_analytical_db_spark import fsutil
+    from ethereum_analytical_db_spark.operators.similarity import _INDEX_META
+
+    metas = {
+        "one": {"kind": "semdedup", "threshold": 0.9, "kept_per_cluster": {"3": 1, "10": 2}},
+        "two": {"kept_per_cluster": {"10": 2, "3": 1}, "threshold": 0.9, "kind": "semdedup"},
+    }
+    written = []
+    for name, meta in metas.items():
+        (tmp_path / name).mkdir()
+        fsutil.write_sidecar(spark, str(tmp_path / name), _INDEX_META, meta)
+        written.append((tmp_path / name / _INDEX_META).read_bytes())
+    assert written[0] == written[1], written

@@ -668,6 +668,7 @@ def test_ivf_frozen_index_lifecycle(spark):
     import subprocess
     import tempfile
 
+    from ethereum_analytical_db_spark import session
     from ethereum_analytical_db_spark.plans import frozen
     from ethereum_analytical_db_spark.plans import pipeline as pl
 
@@ -689,7 +690,7 @@ def test_ivf_frozen_index_lifecycle(spark):
     # atexit hook removes our own index and empties the cache
     frozen.release_all()
     assert not os.path.exists(path)
-    assert frozen._MEMO == {}
+    assert session._APP_MEMO == {}
 
 
 def test_embedding_near_dup_lsh_md5_face(spark):
